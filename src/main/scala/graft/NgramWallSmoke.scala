@@ -23,8 +23,12 @@ import org.apache.spark.sql.functions._
   *                  exchanges, sort/merge and the join condition, NOT
   *                  the verify probes or the Jaccard kernel);
   *                  `cand:N` overrides the salt to N for sweeps
+  *   - `cand_census` — deterministic merge-scan combo count of the
+  *                  block join (host-independent)
   *   - `full`     — the whole operator, catalog parameters (the board
   *                  row, minus the orderBy the bench strips anyway)
+  *   - `bcast`    — `full`, then the verify's runtime broadcast builds,
+  *                  reuses and sizes read off the AQE final plan
   *   - `hist[:PCT]` — exact-Jaccard deciles over a PCT% hash-sample of
   *                  the candidate stream (default 1%): the candidate
   *                  similarity DISTRIBUTION picks the verify cut — an
@@ -33,11 +37,14 @@ import org.apache.spark.sql.functions._
   *
   * Same decomposition for the simhash family (r17, the ladder's #2
   * after the ngram cut) via `sim_base` (widened scan + word shingles +
-  * collapse + signature/hashed-shingle materialization), `sim_cand`
-  * (+ banded self-join, hamming filter, distinct — rides the
-  * materialized base within one JVM, so its wall minus sim_base's is
-  * the candidate stage), `sim_hist[:PCT]` (candidate jaccard deciles),
-  * and `sim_full` (the catalog row)
+  * collapse + signature/hashed-shingle materialization), `sim_sigs`
+  * (distinct signatures), `sim_census` (the banded self-join's bucket
+  * combo census), `sim_cand` (+ banded self-join, hamming filter,
+  * distinct — rides the materialized base within one JVM, so its wall
+  * minus sim_base's is the candidate stage), `sim_hist[:PCT]`
+  * (candidate jaccard deciles), and `sim_full` (the catalog row);
+  * `sim_census`/`sim_cand`/`sim_full` take `:B:H` to override the band
+  * geometry
   *
   * Stage wall differences attribute the row's cost: kernel+probes ≈
   * full − cand; emission ≈ cand − shingle. Single timed run per stage
@@ -45,7 +52,9 @@ import org.apache.spark.sql.functions._
   * stages run first, so the scan/shingle JIT is warm by the heavy ones).
   *
   * Usage: runMain graft.NgramWallSmoke <dir> <stage,stage,...>
-  *   (stages from {est, collapse, shingle, cand[:SALT], full[:SALT]})
+  *   (stages from {est, collapse, shingle, cand[:SALT], cand_census,
+  *   hist[:PCT], full[:SALT], bcast[:SALT], sim_base, sim_sigs,
+  *   sim_census[:B:H], sim_cand[:B:H], sim_hist[:PCT], sim_full[:B:H]})
   */
 object NgramWallSmoke {
   def main(args: Array[String]): Unit = {
@@ -54,15 +63,6 @@ object NgramWallSmoke {
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors())
     val spark = graft.core.GraftSession.local(cpus, "graft-ngram-wall")
-    // drill-side conf hook (r18, measurement tooling only): apply
-    // runtime-settable session confs from SPARK_GRAFT_DRILL_CONF
-    // ("k=v;k=v") so cause-isolation A/Bs (e.g. AQE coalesce on/off)
-    // run the shipped frames under one varied knob per JVM
-    sys.env.get("SPARK_GRAFT_DRILL_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k, v)
-      System.err.println(s"[ngramwall] conf $k=$v")
-    })
     val docs = graft.core.Tables.documents(spark, dir)
     import graft.operators.TextDedup
     // catalog parameters (DedupQueries d_ngram_jaccard)
@@ -76,10 +76,10 @@ object NgramWallSmoke {
     lazy val est = graft.queries.DedupQueries.ngramEstStats(spark, dir)
     lazy val plan = graft.queries.DedupQueries.ngramPlan(spark, dir)
     lazy val saltDefault = plan._3
-    def frames(salt: Int, hint: String = "merge") = {
+    def frames(salt: Int) = {
       val (base, _, sh, blocked) = TextDedup.ngramBlockedInternals(
         docs, "doc_id", "text", col("n_chars"), n, bw)
-      (base, sh, TextDedup.blockedCandJoin(blocked, "doc_id", bw, salt, hint))
+      (base, sh, TextDedup.blockedCandJoin(blocked, "doc_id", bw, salt))
     }
     // executor CPU seconds per stage body (r18): wall legs on this host
     // swing ~2x under co-runner load the gate can't see; task CPU time
@@ -100,11 +100,11 @@ object NgramWallSmoke {
       println(f"[ngramwall] $label%-14s $wall%9.2f s  cpu=${(cpuNs.get() - c0) / 1e9}%.1f s  $out")
     }
     stages.foreach { st =>
-      val (stage, salt, hint) = st.split(":") match {
-        case Array(s)       => (s, saltDefault, "merge")
-        case Array(s, k)    => (s, k.toInt, "merge")
-        case Array(s, k, h) => (s, k.toInt, h)
-      }
+      val parts = st.split(":")
+      val stage = parts(0)
+      // first stage argument: the salt (a sample percent for the hist
+      // stages); lazy, so stages that ignore it skip the estimate
+      lazy val salt = if (parts.length > 1) parts(1).toInt else saltDefault
       stage match {
         case "est" =>
           timed("est")(s"pairs=${est.candidatePairs} candBytes=${est.candidateBytes} " +
@@ -118,14 +118,14 @@ object NgramWallSmoke {
             s"sumShingles=${if (r.isNullAt(0)) 0L else r.getLong(0)}"
           }
         case "cand" =>
-          timed(s"cand:$salt:$hint")(
-            s"candidates=${frames(salt, hint)._3.count()}")
+          timed(s"cand:$salt")(
+            s"candidates=${frames(salt)._3.count()}")
         case "cand_census" =>
           // deterministic combo arithmetic of the blocked join (r18):
-          // the SMJ merge scan walks Σ nx·ny over the block buckets —
-          // symmetric form: nx = ny = |2img(b)|; asymmetric form:
-          // ny = |own(b)| (salt splits x rows but Σ over salts restores
-          // |2img|·|own| per block, so the census is salt-free)
+          // the SMJ merge scan walks Σ nx·ny over the block buckets,
+          // nx = |2img(b)| and ny = |own(b)| (salt splits x rows but Σ
+          // over salts restores |2img|·|own| per block, so the census
+          // is salt-free)
           timed("cand_census") {
             val (_, _, _, blocked) = TextDedup.ngramBlockedInternals(
               docs, "doc_id", "text", col("n_chars"), n, bw)
@@ -134,39 +134,12 @@ object NgramWallSmoke {
               .filter(col("__blk") === (col("__len") / bw).cast("long"))
               .groupBy(col("__blk")).agg(count(lit(1)).as("ny"))
             val r = img.join(own, Seq("__blk"), "left_outer")
-              .agg(sum((col("nx") * col("nx")).cast("long")).as("sym"),
-                sum((col("nx") * coalesce(col("ny"), lit(0L))).cast("long")).as("asym"),
-                max(col("nx")).as("maxx")).head()
-            s"symScan=${r.getLong(0)} asymScan=${r.getLong(1)} " +
-              s"maxBlock=${r.getLong(2)}"
-          }
-        case "cand_sides" | "cand_sorted" =>
-          // stage split of the salted SMJ emission (r18, verdict item 3):
-          // `cand_sides` noop-writes both post-exchange sides (scan +
-          // shingle-free projection + the two salted exchanges);
-          // `cand_sorted` adds sortWithinPartitions on the SMJ's equi
-          // keys (the sort leg); `cand` minus `cand_sorted` is then the
-          // merge-scan + condition + emission leg. Sides come from the
-          // shipped blockedCandJoinParts — no drill-side rebuild.
-          timed(s"$stage:$salt") {
-            val (_, _, _, blocked) = TextDedup.ngramBlockedInternals(
-              docs, "doc_id", "text", col("n_chars"), n, bw)
-            val (xs, ys, _) = TextDedup.blockedCandJoinParts(
-              blocked, "doc_id", bw, salt, "merge")
-            def sink(df: org.apache.spark.sql.DataFrame): Unit = {
-              val s2 = if (stage == "cand_sorted" && salt > 1)
-                df.sortWithinPartitions(col("__blk"), col("__salt"))
-              else if (stage == "cand_sorted")
-                df.sortWithinPartitions(col("__blk"))
-              else df
-              s2.write.format("noop").mode("overwrite").save()
-            }
-            sink(xs); sink(ys)
-            "both sides noop-written"
+              .agg(sum((col("nx") * coalesce(col("ny"), lit(0L))).cast("long")),
+                max(col("nx"))).head()
+            s"scanCombos=${r.getLong(0)} maxBlock=${r.getLong(1)}"
           }
         case "hist" =>
-          // salt slot doubles as the sample percent for this stage
-          val pct = if (st.contains(":")) salt else 1
+          val pct = if (parts.length > 1) salt else 1
           timed(s"hist:$pct%") {
             val (_, sh, cand) = frames(saltDefault)
             val sample = cand.filter(
@@ -190,7 +163,7 @@ object NgramWallSmoke {
           // `sim_full:B:H` — B bands of 64/B bits, Hamming ≤ H (the
           // DEPLOYMENT capacity knob documented on simhashPairs; the
           // catalog row keeps 16:15). Same shipped frames either way.
-          val (bands, hamm) = st.split(":") match {
+          val (bands, hamm) = parts match {
             case Array(_, b, h) => (b.toInt, h.toInt)
             case _              => (16, 15)
           }
@@ -208,12 +181,11 @@ object NgramWallSmoke {
             case "sim_census" =>
               // bucket-size census of the banded self-join (r18): the
               // merge scan's combo volume is Σ n_x·n_y over the
-              // (band, bval, lblk) buckets of the two sides (equal
-              // frames under SPARK_GRAFT_ASYM_CAND=0, where it reads
-              // Σ n²; the r17 pair-combo metric Σ n(n−1)/2 is also
-              // printed), and its SKEW decides whether the wall is a
-              // few straggler tasks (hot buckets are byte-tiny, so
-              // AQE's skew split never fires) or genuine spread volume
+              // (band, bval, lblk) buckets of the two sides (the r17
+              // pair-combo metric Σ n(n−1)/2 is also printed), and its
+              // SKEW decides whether the wall is a few straggler tasks
+              // (hot buckets are byte-tiny, so AQE's skew split never
+              // fires) or genuine spread volume
               timed(s"sim_census:$bands:$hamm") {
                 def by(df: org.apache.spark.sql.DataFrame, n: String) = df
                   .groupBy(col("__band"), col("__bval"), col("__lblk"))
@@ -231,7 +203,7 @@ object NgramWallSmoke {
             case "sim_cand" =>
               timed(s"sim_cand:$bands:$hamm")(s"candidates=${sim._6.count()}")
             case "sim_hist" =>
-              val pct = if (st.contains(":")) salt else 1
+              val pct = if (parts.length > 1) salt else 1
               timed(s"sim_hist:$pct%") {
                 val sh = sim._3
                 val sample = sim._6.filter(
@@ -281,8 +253,6 @@ object NgramWallSmoke {
           // explain never shows AQE's stage-level reuse) counting
           // broadcast BUILDS vs reuses and summing each build's dataSize
           // — the peak resident broadcast footprint of the verify stage.
-          // Run once per variant JVM (SPARK_GRAFT_TIERED_VERIFY=0 for the
-          // one-tier leg) and compare.
           timed(s"bcast:$salt") {
             import org.apache.spark.sql.execution.SparkPlan
             import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}

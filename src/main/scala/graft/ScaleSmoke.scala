@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
   * multi-minute ×100 rows the warm-up doubles a long measurement to
   * shave noise that is already <1% of it. `shape` (implies `mutate`)
   * regenerates documents as the natural-shape Zipf corpus — see
-  * [[shapeText]] and NgramRouteSmoke.
+  * [[shapeText]] and SCALING.md "The natural-shape twin board".
   */
 object ScaleSmoke {
 

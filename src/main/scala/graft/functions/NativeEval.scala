@@ -251,35 +251,6 @@ object NativeEval {
     h
   }
 
-  /** [[arrayJaccardSortedLongBounded]] with the bound check amortized
-    * over a 4-step stride — a KernelMicro candidate that MEASURED
-    * WORSE and is kept only as the recorded experiment (r17, m100-like
-    * corpus, single thread: plain 3.5 µs/pair, per-step bound 1.78,
-    * stride-4 1.99 — the per-step min+compare exits at the earliest
-    * possible step and its cost hides in superscalar slack, so
-    * delaying the check buys nothing). NOT wired into any expression;
-    * soundness is inherited — the bound only gates entry to FURTHER
-    * merge steps, so checking less often merely delays an exit. */
-  def arrayJaccardSortedLongBounded4(a: ArrayData, b: ArrayData,
-                                     threshold: Double): Double = {
-    val na = a.numElements(); val nb = b.numElements()
-    val need = threshold / (1.0 + threshold) * (na + nb) * (1 - 1e-12)
-    var i = 0; var j = 0; var inter = 0; var tick = 0
-    while (i < na && j < nb) {
-      if (tick == 0) {
-        if (inter + math.min(na - i, nb - j) < need) return -1.0
-        tick = 4
-      }
-      tick -= 1
-      val x = a.getLong(i); val y = b.getLong(j)
-      if (x == y) { inter += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    val union = na + nb - inter
-    if (union == 0) 1.0 else inter.toDouble / union.toDouble
-  }
-
   def minhashBands(arr: ArrayData, k: Int, bands: Int): ArrayData = {
     // null elements are skipped: the catalog's shingle arrays are
     // containsNull=false, but the SQL-registered graft_minhash_bands

@@ -21,13 +21,18 @@ object Intervals {
     * island starts where this begin is more than `gapDays` after the running
     * max of all prior ends (running max — not lag(end) — handles contained
     * intervals).
+    *
+    * A row with a null begin or end covers no known day and is dropped
+    * (in both forms): kept, it would sort first and stretch or fabricate
+    * an island from the other bound — IntervalsSpec's day-expansion
+    * oracle pins this.
     */
   def collapse(df: DataFrame, keys: Seq[String], begin: String, end: String,
                gapDays: Int = 1): DataFrame = {
     val part = keys.map(col)
     val w    = Window.partitionBy(part: _*).orderBy(col(begin), col(end))
     val runningMaxEnd = max(col(end)).over(w.rowsBetween(Window.unboundedPreceding, -1))
-    val flagged = df
+    val flagged = df.filter(col(begin).isNotNull && col(end).isNotNull)
       .withColumn("__new_island",
         when(runningMaxEnd.isNull || col(begin) > date_add(runningMaxEnd, gapDays), 1)
           .otherwise(0))
@@ -40,8 +45,9 @@ object Intervals {
   /** Iterative fixed-point variant (ref: `slow_temp_table_write_in_palce_of_
     * recursive_cte.py:104-183`): repeatedly merge pairwise-overlapping
     * neighbours and re-write a temp parquet until the row count stops
-    * shrinking. Kept for capability parity — prefer [[collapse]]; the
-    * reference itself warns this takes 45-90 s on 200 rows (BASELINE.md). */
+    * shrinking (null-bound rows dropped, as in [[collapse]]). Kept for
+    * capability parity — prefer [[collapse]]; the reference itself warns
+    * this takes 45-90 s on 200 rows (BASELINE.md). */
   def collapseFixedPoint(df0: DataFrame, keys: Seq[String], begin: String,
                          end: String, gapDays: Int = 1, maxIter: Int = 50,
                          tmpDir: Option[String] = None): DataFrame = {
@@ -66,7 +72,8 @@ object Intervals {
         .select((keys.map(col) :+ col(begin) :+ col(end)): _*)
     }
     FixedPoint.iterate(
-      df0.select((keys.map(col) :+ col(begin) :+ col(end)): _*),
+      df0.filter(col(begin).isNotNull && col(end).isNotNull)
+        .select((keys.map(col) :+ col(begin) :+ col(end)): _*),
       step, maxIter, tmpDir)
   }
 }

@@ -599,13 +599,12 @@ object TextDedup {
   }
 
   /** The simhash path's internal stage frames — (materialized rep base,
-    * expand, hashed-shingle projection, exploded band rows [x side],
-    * own-block band rows [y side — equals the x frame with
-    * SPARK_GRAFT_ASYM_CAND=0], distinct candidate pairs) — shared by
-    * [[simhashPairs]] and the stage-decomposition drill (NgramWallSmoke
-    * `sim_*` stages): one definition, so the drill times the EXACT
-    * frames the shipped plan builds. Not a dedup API — callers want
-    * [[simhashPairs]]. */
+    * expand, hashed-shingle projection, x-side band rows [both log2-size
+    * images], y-side band rows [own log2-size block only], distinct
+    * candidate pairs) — shared by [[simhashPairs]] and the
+    * stage-decomposition drill (NgramWallSmoke `sim_*` stages): one
+    * definition, so the drill times the EXACT frames the shipped plan
+    * builds. Not a dedup API — callers want [[simhashPairs]]. */
   private[graft] def simhashInternals(docs: DataFrame, idCol: String,
       textCol: String, shingleN: Int, maxHamming: Int, numBands: Int,
       minShingles: Int)
@@ -637,62 +636,42 @@ object TextDedup {
         simhash64(col("__sh")).as("__sim"),
         hashedShingles(col("__sh")).as("__shh"))
       .materialized()
+    // null-id rows dropped explicitly (see blockedCandJoin — same
+    // reasoning; here id inequality would still null-reject, but the
+    // filter keeps the optimizer from inferring isnotnull(least/greatest)
+    // conjuncts into the per-combo join condition)
     val sims = base.select(col(idCol), col("__n"), col("__sim"))
+      .filter(col(idCol).isNotNull)
     // Narrow bands have few distinct values (a 4-bit band: 16), so a band
     // key alone buckets O(N) docs. Compose a log2(shingle-count) block
     // into the key: Jaccard ≥ t ≥ 0.5 forces a size ratio ≥ t, i.e. the
-    // two docs' log2 sizes differ by < 1 — emitting each doc under
-    // floor(log2 n) and floor(log2 n)+1 guarantees every output pair
-    // still shares a bucket while bucket sizes drop by the number of
-    // distinct size classes.
+    // two docs' log2 sizes differ by < 1 — so the bigger doc's own block
+    // floor(log2 n) is always one of the smaller doc's two images
+    // {floor(log2 n), floor(log2 n)+1}. ASYMMETRIC IMAGES (r18): the x
+    // side carries both images, the buffered y side its own block only,
+    // so every qualifying pair still shares a bucket while the y rows
+    // and the within-bucket combo volume of the self-join are half those
+    // of two-image sides. An equal-size pair meets once per matching band
+    // in BOTH orientations; id inequality + least/greatest normalization
+    // and the downstream distinct() absorb that multiplicity.
     def withBands(df: DataFrame): DataFrame = df
       .select(col(idCol), col("__sim"), col("__lblk"),
         posexplode(transform(sequence(lit(0), lit(numBands - 1)),
           j => call_function("shiftright", col("__sim"), j * width).bitwiseAND(lit(mask)))))
       .withColumnRenamed("pos", "__band").withColumnRenamed("col", "__bval")
-    val banded = withBands(sims
+    val bandedX = withBands(sims
       .select(col(idCol), col("__sim"),
         explode(array(floor(log(2.0, col("__n"))),
                       floor(log(2.0, col("__n"))) + 1)).as("__lblk")))
-    // ASYMMETRIC IMAGES (r18; one knob with blockedCandJoin — see its
-    // scaladoc): the buffered y side carries each rep under its OWN
-    // log2-size block only, so its rows and the within-bucket combo
-    // volume of the banded self-join HALVE. Recall is unchanged — a
-    // qualifying pair's log2 sizes differ by < 1, so the bigger rep's
-    // own block is always one of the smaller rep's two images — and the
-    // downstream distinct() already absorbs emission multiplicity (an
-    // equal-size pair now meets once per matching band in BOTH
-    // orientations instead of twice in one, same pre-distinct volume),
-    // so id inequality + least/greatest normalization replaces the id<
-    // orientation. Candidate SET identical; SPARK_GRAFT_ASYM_CAND=0
-    // restores the symmetric shape.
-    // null-id rows dropped explicitly in the asymmetric form (see
-    // blockedCandJoinParts — same reasoning; here id inequality would
-    // still null-reject, but the filter keeps the optimizer from
-    // inferring isnotnull(least/greatest) conjuncts into the per-combo
-    // join condition)
-    val simsNN =
-      if (asymCandJoin) sims.filter(col(idCol).isNotNull) else sims
-    val bandedX =
-      if (asymCandJoin) withBands(simsNN
-        .select(col(idCol), col("__sim"),
-          explode(array(floor(log(2.0, col("__n"))),
-                        floor(log(2.0, col("__n"))) + 1)).as("__lblk")))
-      else banded
-    val bandedOwn =
-      if (asymCandJoin) withBands(simsNN
-        .select(col(idCol), col("__sim"),
-          floor(log(2.0, col("__n"))).as("__lblk")))
-      else banded
+    val bandedOwn = withBands(sims
+      .select(col(idCol), col("__sim"),
+        floor(log(2.0, col("__n"))).as("__lblk")))
     val x = bandedX.alias("__sim_x"); val y = bandedOwn.alias("__sim_y")
-    val idCond =
-      if (asymCandJoin) col(s"__sim_x.$idCol") =!= col(s"__sim_y.$idCol")
-      else col(s"__sim_x.$idCol") < col(s"__sim_y.$idCol")
     val cand = x.join(y,
         col("__sim_x.__band") === col("__sim_y.__band") &&
         col("__sim_x.__bval") === col("__sim_y.__bval") &&
         col("__sim_x.__lblk") === col("__sim_y.__lblk") &&
-        idCond)
+        col(s"__sim_x.$idCol") =!= col(s"__sim_y.$idCol"))
       .filter(bit_count(col("__sim_x.__sim").bitwiseXOR(col("__sim_y.__sim"))) <= maxHamming)
       .select(least(col(s"__sim_x.$idCol"), col(s"__sim_y.$idCol")).as("a"),
               greatest(col(s"__sim_x.$idCol"), col(s"__sim_y.$idCol")).as("b"))
@@ -853,10 +832,21 @@ object TextDedup {
   /** The length-blocked candidate join shared by [[ngramJaccardPairs]]
     * and the measurement surface [[ngramBlockedCandidates]]: `blk` holds
     * (idCol, __len, __blk) with each doc exploded under blocks
-    * {own, own+1}. Each doc pair sharing a block within the
-    * ±blockWidth/2 band is emitted EXACTLY once — under the larger
-    * doc's own block — so uniqueness is by construction (equal-length
-    * ties collapse to the same block).
+    * {own, own+1}. Each doc pair within the ±blockWidth/2 band is
+    * emitted EXACTLY once, as (least id, greatest id), so uniqueness is
+    * by construction — no distinct().
+    *
+    * ASYMMETRIC IMAGES (r18): the x side keeps both images {own, own+1};
+    * the buffered y side carries each doc under its OWN block only and
+    * is designated the pair's (len, id)-max. |lenDiff| ≤ blockWidth/2 <
+    * blockWidth forces ownMax − ownMin ∈ {0, 1}, so the max side's own
+    * block is always one of the min side's two images: every qualifying
+    * pair passes the join exactly once, in the max side's own block with
+    * the max side as y. Next
+    * to two-image sides this halves the y rows (and, at streamSalt > 1,
+    * its salt-replicated shuffle bytes) and the within-bucket combo
+    * volume the merge scan walks, and the per-combo exactly-once test is
+    * two long compares instead of a division-based own-block rule.
     *
     * STREAM PARALLELISM (`streamSalt` > 1, r15): the join's only equi
     * key is `__blk` — a few dozen distinct values — and its shuffle
@@ -865,68 +855,27 @@ object TextDedup {
     * on input bytes (measured: the mutated ×100 broadcast-verify run
     * streamed 5.1e9 pairs through a single core for 40 min — correct,
     * flat-disk, and 30× slower than the machine). A work-partitioning
-    * salt fixes both: the x (smaller-id) side carries
-    * `hash(id) % streamSalt` as an extra equi key and is EXPLICITLY
-    * repartitioned on (block, salt) — a user-specified shuffle AQE will
-    * not coalesce — while the y side replicates under every salt value,
-    * so each pair still matches exactly once and the pair space spreads
-    * over streamSalt×blocks keys. Cost: the y side shuffles
-    * streamSalt× its (skinny, corpus-linear) rows — the classic
-    * replicate-the-small-side salted join, same family as
-    * RuleJoins.saltedJoin. */
+    * salt fixes both: the x side carries `hash(id) % streamSalt` as an
+    * extra equi key and is EXPLICITLY repartitioned on (block, salt) — a
+    * user-specified shuffle AQE will not coalesce — while the y side
+    * replicates under every salt value, so each pair still matches
+    * exactly once and the pair space spreads over streamSalt×blocks
+    * keys. Cost: the y side shuffles streamSalt× its (skinny,
+    * corpus-linear) rows — the classic replicate-the-small-side salted
+    * join, same family as RuleJoins.saltedJoin. */
   private[graft] def blockedCandJoin(blk: DataFrame, idCol: String,
                                      blockWidth: Int,
-                                     streamSalt: Int = 1,
-                                     streamHint: String = "merge"): DataFrame = {
-    val (x, y, cond) =
-      blockedCandJoinParts(blk, idCol, blockWidth, streamSalt, streamHint)
-    if (asymCandJoin)
-      x.join(y, cond)
-        .select(least(col(s"__blk_x.$idCol"), col(s"__blk_y.$idCol")).as("a"),
-                greatest(col(s"__blk_x.$idCol"), col(s"__blk_y.$idCol")).as("b"))
-    else
-      x.join(y, cond)
-        .select(col(s"__blk_x.$idCol").as("a"), col(s"__blk_y.$idCol").as("b"))
-  }
-
-  /** The two join sides and the condition of [[blockedCandJoin]], exposed
-    * so the stage-split drill (NgramWallSmoke `cand_sides`/`cand_sorted`)
-    * times the exchange and sort legs of the EXACT frames the shipped
-    * join builds — one definition, no drill-side reimplementation. */
-  private[graft] def blockedCandJoinParts(blk: DataFrame, idCol: String,
-                                          blockWidth: Int,
-                                          streamSalt: Int = 1,
-                                          streamHint: String = "merge")
-      : (DataFrame, DataFrame, Column) = {
+                                     streamSalt: Int = 1): DataFrame = {
     val maxDiff = blockWidth / 2
-    // ASYMMETRIC IMAGES (r18, default; SPARK_GRAFT_ASYM_CAND=0 restores
-    // the r15-r17 symmetric shape — the per-JVM A/B hook and escape
-    // hatch): the REPLICATED/buffered y side carries each doc under its
-    // OWN block only and is designated the pair's (len, id)-max; the x
-    // side keeps both images {own, own+1}. Every qualifying pair still
-    // meets exactly once — |lenDiff| ≤ blockWidth/2 < blockWidth forces
-    // ownMax − ownMin ∈ {0, 1}, so the max side's own block is always
-    // one of the min side's two images — but the y side's rows (and at
-    // streamSalt > 1 its salt-replicated shuffle bytes) HALVE, the
-    // within-bucket combo volume the merge scan walks halves with them,
-    // and the per-combo own-block-rule arithmetic (two int→double
-    // divisions + casts + greatest per combo in the symmetric form)
-    // collapses to two already-materialized long compares. Output-
-    // identical: DedupPropertySpec's brute-force/shard/salt equalities
-    // run through this shape, and the m100 A/B pairs match exactly.
-    val asym = asymCandJoin
-    // Null ids are dropped EXPLICITLY in the asymmetric form: the
-    // symmetric condition's id< was null-rejecting on its own, but the
-    // (len, id)-max designation's first branch never touches the ids —
-    // without this filter a null-id row could emit a corrupt pair
-    // through least/greatest. Per-row, pushed to the scan; also lets
-    // the optimizer skip inferring isnotnull(least/greatest) conjuncts
-    // into the per-combo join condition.
-    val xBase = if (asym) blk.filter(col(idCol).isNotNull) else blk
-    val yBase =
-      if (asym) xBase.filter(col("__blk") ===
-        (col("__len") / blockWidth).cast("long"))
-      else blk
+    // Null ids are dropped EXPLICITLY: the (len, id)-max designation's
+    // first branch never touches the ids, so without this filter a
+    // null-id row could emit a corrupt pair through least/greatest.
+    // Per-row, pushed to the scan; also lets the optimizer skip
+    // inferring isnotnull(least/greatest) conjuncts into the per-combo
+    // join condition.
+    val xBase = blk.filter(col(idCol).isNotNull)
+    val yBase = xBase.filter(col("__blk") ===
+      (col("__len") / blockWidth).cast("long"))
     val (x, y) =
       if (streamSalt <= 1) (xBase.alias("__blk_x"), yBase.alias("__blk_y"))
       else (
@@ -936,57 +885,39 @@ object TextDedup {
         // measured ~2x the SMJ group scan — ×30: 112 s vs ~60 s), and
         // user-origin exchanges are what AQE's byte-based coalesce
         // leaves alone (the whole point of the salt — see scaladoc).
-        // `streamHint` exists for the NgramWallSmoke strategy A/B
-        // (merge vs shuffle_hash on the same salted shape — r17 m100
+        // Merge over shuffle_hash on the same salted shape (r17 m100
         // A/B/A: shuffle_hash 62.9 s vs merge 48.2/53.5 s, identical
-        // 3.02e9 candidates; the per-partition hash build + probe costs
-        // more than sorting the skinny salted rows, so merge stays).
+        // 3.02e9 candidates): the per-partition hash build + probe costs
+        // more than sorting the skinny salted rows.
         xBase.withColumn("__salt",
             pmod(xxhash64(col(idCol)), lit(streamSalt.toLong)))
           .repartition(streamSalt, col("__blk"), col("__salt"))
-          .hint(streamHint)
+          .hint("merge")
           .alias("__blk_x"),
         yBase.withColumn("__salt",
             explode(sequence(lit(0L), lit(streamSalt.toLong - 1L))))
           .repartition(streamSalt, col("__blk"), col("__salt"))
           .alias("__blk_y"))
-    val baseCond =
-      if (asym)
-        col("__blk_x.__blk") === col("__blk_y.__blk") &&
-        abs(col("__blk_x.__len") - col("__blk_y.__len")) <= maxDiff &&
-        // y is the (len, id)-max: exactly-once emission without the
-        // per-combo division-based own-block rule of the symmetric form
-        (col("__blk_y.__len") > col("__blk_x.__len") ||
-          (col("__blk_y.__len") === col("__blk_x.__len") &&
-           col(s"__blk_y.$idCol") > col(s"__blk_x.$idCol")))
-      else
-        col("__blk_x.__blk") === col("__blk_y.__blk") &&
-        col(s"__blk_x.$idCol") < col(s"__blk_y.$idCol") &&
-        abs(col("__blk_x.__len") - col("__blk_y.__len")) <= maxDiff &&
-        col("__blk_x.__blk") ===
-          greatest((col("__blk_x.__len") / blockWidth).cast("long"),
-                   (col("__blk_y.__len") / blockWidth).cast("long"))
     val cond =
-      if (streamSalt <= 1) baseCond
-      else baseCond && col("__blk_x.__salt") === col("__blk_y.__salt")
-    (x, y, cond)
+      col("__blk_x.__blk") === col("__blk_y.__blk") &&
+      abs(col("__blk_x.__len") - col("__blk_y.__len")) <= maxDiff &&
+      // y is the (len, id)-max: exactly-once emission
+      (col("__blk_y.__len") > col("__blk_x.__len") ||
+        (col("__blk_y.__len") === col("__blk_x.__len") &&
+         col(s"__blk_y.$idCol") > col(s"__blk_x.$idCol")))
+    val saltedCond =
+      if (streamSalt <= 1) cond
+      else cond && col("__blk_x.__salt") === col("__blk_y.__salt")
+    x.join(y, saltedCond)
+      .select(least(col(s"__blk_x.$idCol"), col(s"__blk_y.$idCol")).as("a"),
+              greatest(col(s"__blk_x.$idCol"), col(s"__blk_y.$idCol")).as("b"))
   }
-
-  /** Asymmetric candidate-join images (r18) — one knob for both the
-    * length-blocked and the simhash banded self-joins; `=0` restores the
-    * symmetric two-image shape (per-JVM A/B hook, operational escape
-    * hatch — the SPARK_GRAFT_PARITY_FILTER / SPARK_GRAFT_TIERED_VERIFY
-    * convention). */
-  private[graft] def asymCandJoin: Boolean =
-    sys.env.get("SPARK_GRAFT_ASYM_CAND").forall(_ != "0")
 
   /** Candidate (a, b) pairs of the length-blocked path, PRE-verify and
     * WITHOUT the exact-dup collapse — the raw-corpus candidate volume
-    * the blocked join pays, as a measurable frame. This is the routing
-    * measurement surface (NgramRouteSmoke; SCALING.md "blocked vs
-    * prefix"): compare its count against [[ngramPrefixCandidates]] on a
-    * corpus sample to pick the exact-Jaccard plan. Dedup callers use
-    * [[ngramJaccardPairs]] / [[ngramJaccardPairsPrefix]]. */
+    * the blocked join pays, as a measurable frame (SCALING.md "blocked
+    * vs prefix" records it against the prefix path's candidates). Dedup
+    * callers use [[ngramJaccardPairs]] / [[ngramJaccardPairsPrefix]]. */
   def ngramBlockedCandidates(docs: DataFrame, idCol: String, textCol: String,
                              lenCol: Column, n: Int = 4,
                              blockWidth: Int = 100): DataFrame = {
@@ -1236,22 +1167,9 @@ object TextDedup {
         .select(col("a"), col("b"), col("jaccard"))
     }
 
-  /** Candidate (a, b) pairs of the prefix-filtered path, PRE-verify and
-    * possibly with duplicates (a pair can share several prefix
-    * shingles) — the raw candidate volume the PPJoin-family plan pays,
-    * as a measurable frame (the [[ngramBlockedCandidates]] twin; see
-    * SCALING.md "blocked vs prefix" for the routing rule). */
-  def ngramPrefixCandidates(docs: DataFrame, idCol: String, textCol: String,
-                            n: Int = 4, threshold: Double = 0.6): DataFrame =
-    prefixCandidatesFrom(
-      docs.select(col(idCol), charShingleHashes(col(textCol), n).as("__sh"))
-        .filter(size(col("__sh")) > 0),
-      idCol, threshold)
-
-  /** The PPJoin candidate stage shared by [[ngramJaccardPairsPrefix]]
-    * (post-collapse reps) and [[ngramPrefixCandidates]] (raw corpus —
-    * the routing measurement surface). `sh` is (idCol, __sh) with __sh
-    * a non-empty hashed-shingle array.
+  /** The PPJoin candidate stage of [[ngramJaccardPairsPrefix]] (over
+    * post-collapse reps). `sh` is (idCol, __sh) with __sh a non-empty
+    * hashed-shingle array.
     *
     * Two candidate-side prunes beyond the prefix itself, both from the
     * PPJoin literature (Xiao/Wang/Lin/Yu, WWW'08 — public algorithm):
@@ -1336,16 +1254,13 @@ object TextDedup {
     // parity sketch (r17): the bound check below skips the merge kernel
     // on provably-under-threshold pairs. String-shingle callers skip it
     // (the sketch is defined over the hashed form; all catalog verify
-    // paths are hashed). SPARK_GRAFT_PARITY_FILTER=0 disables it — the
-    // per-JVM A/B hook (the LshBudgetSmoke protocol: one variant per
-    // JVM, alternated) and the operational escape hatch.
-    val hashed = sys.env.get("SPARK_GRAFT_PARITY_FILTER").forall(_ != "0") &&
-      shingled.schema.fields.exists(f =>
-        f.name == "__sh" && (f.dataType match {
-          case org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.LongType, _) => true
-          case _ => false
-        }))
+    // paths are hashed).
+    val hashed = shingled.schema.fields.exists(f =>
+      f.name == "__sh" && (f.dataType match {
+        case org.apache.spark.sql.types.ArrayType(
+          org.apache.spark.sql.types.LongType, _) => true
+        case _ => false
+      }))
     // TWO-TIER probe (r17, after the parity filter landed): on a
     // candidate-heavy low-precision stream (m100 blocked ngram: 3.02e9
     // candidates, 99.15% fail t=0.6) the per-candidate cost is random
@@ -1362,15 +1277,13 @@ object TextDedup {
     // DedupPropertySpec's brute-force pipeline equalities run through
     // this shape, and PlanAuditSpec asserts the 4-probe plan. Everything
     // still fuses into ONE codegen stage (BHJ chains + filters), so
-    // candidates stage nothing, exactly as before.
-    // SPARK_GRAFT_TIERED_VERIFY=0 restores the one-tier shape — the
-    // per-JVM A/B hook and operational escape hatch.
-    val tiered = hashed && broadcastShingles &&
-      sys.env.get("SPARK_GRAFT_TIERED_VERIFY").forall(_ != "0")
+    // candidates stage nothing, exactly as before. Without the broadcast
+    // (the shard path) or without hashed shingles (string-shingle
+    // callers) the verify keeps the one-tier shape below.
+    val tiered = hashed && broadcastShingles
     // The pre-kernel predicates and the kernel tail, ONCE for both
-    // branches (r18, ADVICE): a threshold or slack change applied to one
-    // branch only would silently desynchronize the A/B escape hatch
-    // (SPARK_GRAFT_TIERED_VERIFY=0) from the default path.
+    // shapes (r18, ADVICE): a threshold or slack change applied to one
+    // shape only would silently desynchronize them.
     //   - size filter: Jaccard ≥ t implies min(|a|,|b|)/max(|a|,|b|) ≥ t —
     //     a scalar compare before any array access;
     //   - parity bound next, still before the kernel (see

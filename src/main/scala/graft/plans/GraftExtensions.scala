@@ -55,11 +55,11 @@ object JaccardFusionRule extends Rule[LogicalPlan] {
   * value-identical there too (scan-backed adversarial battery incl.
   * partial dates, zone suffixes, and overflow years — PlanAuditSpec
   * "try_cast temporal"), but Spark 4.1's temporal TRY cast does NOT
-  * pay the integral family's per-failing-row exception —
-  * TryCastTaxSmoke on 1M failing + 1M parsing rows: date/timestamp
-  * 1.1× (13 ms, noise-level) vs int 16.1× (1.7 µs per failing row)
-  * under the identical A/B — so a rewrite would add rule surface for
-  * no measured benefit. The battery stays as the licensing proof if
+  * pay the integral family's per-failing-row exception — the rule
+  * on/off A/B on 1M failing + 1M parsing rows (OPTIMIZATION_r17.md §4,
+  * SCALING.md "Round 17: the temporal try_cast rewrite"): date/timestamp
+  * 1.1× (13 ms, noise-level) vs int 16.1× (1.7 µs per failing row) —
+  * so a rewrite would add rule surface for no measured benefit. The battery stays as the licensing proof if
   * a future Spark version regresses the temporal path.
   *
   * Everything else (non-string sources, other targets, ANSI/LEGACY

@@ -172,9 +172,8 @@ object DataPrepQueries {
           // two fewer write+read jobs than the r12 pairing at identical
           // arithmetic (materialization never changes values) — BenchOne
           // A/B alternated pairs, min-of-3: 2.330/2.213 s at 2 vs
-          // 1.995/1.888 s at 4. The env hook is the per-JVM A/B lever.
-          materializeEvery = sys.env.get("SPARK_GRAFT_PAGERANK_MATEVERY")
-            .flatMap(_.toIntOption).getOrElse(4))
+          // 1.995/1.888 s at 4 (OPTIMIZATION_r18.md §5).
+          materializeEvery = 4)
         .orderBy("node")
     },
 

@@ -59,16 +59,17 @@ object DedupQueries {
     * count itself on exactly the corpus the collapse exists for (a
     * high-duplication re-crawl), where it refuses broadcasts that fit
     * and falls back to the SMJ cliff the override was built to avoid
-    * (measured: LshBudgetSmoke on a ×10-exact-copy m100 corpus flips
-    * the decision and the wall — SCALING.md r17); and it under-counted
+    * (measured on ×11 exact copies of m100: the post-collapse form flips
+    * the decision and the wall — OPTIMIZATION_r17.md §3, SCALING.md
+    * "Round 17: lshBcast made post-collapse"); and it under-counted
     * the real footprint on many-tiny-doc corpora, the same class as the
     * r16 dedupAgainstIndex fix. One md5-keyed aggregate per testdata
     * generation (memoized), shuffling one skinny row per distinct text. */
   private val wordBytesCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
-  /** The estimate itself, exposed for LshBudgetSmoke so the A/B drill
-    * measures the SAME formula the catalog decides with (review r17:
-    * an inline drill copy would silently drift — the
+  /** The estimate itself, exposed so the NgramWallSmoke `sim_full`
+    * geometry override decides its broadcast with the SAME formula the
+    * catalog uses (an inline drill copy would silently drift — the
     * ngramBlockedInternals lesson). */
   private[graft] def lshBcastBytes(s: org.apache.spark.sql.SparkSession,
                                    dir: String): Long =
@@ -86,9 +87,8 @@ object DedupQueries {
       // fat array relation (32 B id+header + 8 B/shingle, no sketch) and
       // the skinny sketch relation (~112 B: id + size + 64-byte parity
       // sketch + headers) — so per doc the pair costs 32+112 = 144 B on
-      // top of the array bytes. (The r17 one-tier constant was 112; the
-      // one-tier escape hatch carries sketch-on-fat at the same 112, so
-      // 144 upper-bounds both shapes.)
+      // top of the array bytes. (The one-tier shape's constant is at most
+      // 112, so 144 upper-bounds both shapes.)
       java.lang.Long.valueOf(2L * (words * 8L + reps * 144L))
     }
   private def lshBcast(s: org.apache.spark.sql.SparkSession,

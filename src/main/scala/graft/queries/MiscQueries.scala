@@ -40,8 +40,9 @@ object MiscQueries {
     // (ref: servicenow_api_extract.py:190-211). Exercises both the
     // always-parsing and always-failing paths. Unlike p11's integrals,
     // these deliberately run UNREWRITTEN: Spark 4.1's temporal TRY cast
-    // pays no per-failing-row exception (TryCastTaxSmoke: 1.1× A/B vs
-    // int's 16.1×), so TryCastNoThrowRule leaves temporal targets alone.
+    // pays no per-failing-row exception (rule on/off A/B: 1.1× vs int's
+    // 16.1×, OPTIMIZATION_r17.md §4), so TryCastNoThrowRule leaves
+    // temporal targets alone.
     "p12_try_cast_date" -> { (s, dir) =>
       Tables.orders(s, dir)
         .select(

@@ -421,13 +421,7 @@ object PipelineQueries {
       }
       // failFast run: any stage failure (sensor timeout, reconcile
       // mismatch) throws StageFailed before runCtx returns
-      val (report, ctx) = d.runCtx()
-      // perf-audit hook (SPARK_GRAFT_DAG_TIMING=1): per-stage wall — the
-      // evidence for where this row's bench seconds go (stage bodies vs
-      // runner/sensor overhead)
-      if (sys.env.contains("SPARK_GRAFT_DAG_TIMING"))
-        report.results.foreach(r =>
-          println(f"[dag-timing] ${r.name}%-22s ${r.status}%-8s ${r.durationMs}%6d ms"))
+      val (_, ctx) = d.runCtx()
       ctx[DataFrame]("snapshot").orderBy("id")
     },
 

@@ -739,10 +739,20 @@ class DedupPropertySpec extends SparkSpec {
       sa = shing(ta); sb = shing(tb)
       if (sa & sb).size.toDouble / (sa | sb).size >= 0.6
     } yield (a, b)).toSet
-    val rows = TextDedup.ngramJaccardPairs(docs, "doc_id", "text",
+    def triples(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    // exactly-once emission: the candidate join has no distinct(), so
+    // the (len, id)-max rule alone must keep every pair to one row — a
+    // set comparison would hide a duplicate
+    def assertOnce(name: String, r: Seq[(Long, Long, Double)]): Unit = {
+      val keys = r.map(t => (t._1, t._2))
+      assert(keys.size == keys.distinct.size, s"$name emits a pair twice: " +
+        s"${keys.diff(keys.distinct).take(3)}")
+    }
+    val rows = triples(TextDedup.ngramJaccardPairs(docs, "doc_id", "text",
         lenCol = length(col("text")), n = 4, threshold = 0.6,
-        blockWidth = 20)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        blockWidth = 20))
+    assertOnce("base", rows)
     val got = rows.map(t => (t._1, t._2)).toSet
     assert(got == want, s"pair mismatch: missing=${(want -- got).take(3)} " +
       s"extra=${(got -- want).take(3)}")
@@ -754,22 +764,49 @@ class DedupPropertySpec extends SparkSpec {
     // space must be invisible — every shard count yields the same rows
     // (values included), because each pair is emitted by exactly one
     // block and each block lives in exactly one residue class
-    val sharded = TextDedup.ngramJaccardPairs(docs, "doc_id", "text",
-        lenCol = length(col("text")), n = 4, threshold = 0.6,
-        blockWidth = 20, shards = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val shardedRows = triples(TextDedup.ngramJaccardPairs(docs, "doc_id",
+        "text", lenCol = length(col("text")), n = 4, threshold = 0.6,
+        blockWidth = 20, shards = 3))
+    assertOnce("shards=3", shardedRows)
+    val sharded = shardedRows.toSet
     assert(sharded == rows.toSet, s"shards=3 diverges: " +
       s"missing=${(rows.toSet -- sharded).take(3)} " +
       s"extra=${(sharded -- rows.toSet).take(3)}")
     // r15 stream-parallelism salt: the (block, hash(a) % R) key space is
     // a true partition of the pair space — every R yields the same rows
-    val salted = TextDedup.ngramJaccardPairs(docs, "doc_id", "text",
-        lenCol = length(col("text")), n = 4, threshold = 0.6,
-        blockWidth = 20, streamParallelism = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val saltedRows = triples(TextDedup.ngramJaccardPairs(docs, "doc_id",
+        "text", lenCol = length(col("text")), n = 4, threshold = 0.6,
+        blockWidth = 20, streamParallelism = 5))
+    assertOnce("streamParallelism=5", saltedRows)
+    val salted = saltedRows.toSet
     assert(salted == rows.toSet, s"streamParallelism=5 diverges: " +
       s"missing=${(rows.toSet -- salted).take(3)} " +
       s"extra=${(salted -- rows.toSet).take(3)}")
+    // the raw candidate join, as a MULTISET: every length-band pair
+    // (a < b, |Δlen| ≤ blockWidth/2) exactly once, nothing else. Lengths
+    // sit just below, on, and just above each block boundary, with
+    // equal-length ties (the id tie-break) and pairs at exactly
+    // blockWidth/2 and one past it; ids run against length order, and
+    // a text shorter than n is excluded by the length gate.
+    val lens = (1 to 5).flatMap(k =>
+      Seq(-10, -1, 0, 1, 9, 10).map(d => k * 20 + d)) ++ Seq(3, 30, 61)
+    val lenDocs = (lens ++ lens.take(12)).zipWithIndex
+      .map { case (len, i) => ((997L * i) % 1000L, "x" * len) }
+    Seq(20, 7).foreach { bw =>
+      val candWant = (for {
+        (a, ta) <- lenDocs; (b, tb) <- lenDocs
+        if a < b && ta.length >= 4 && tb.length >= 4 &&
+          math.abs(ta.length - tb.length) <= bw / 2
+      } yield (a, b)).sorted
+      val candGot = TextDedup.ngramBlockedCandidates(
+          lenDocs.toDF("doc_id", "text"), "doc_id", "text",
+          lenCol = length(col("text")), n = 4, blockWidth = bw)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+      assert(candWant.nonEmpty && candGot == candWant,
+        s"blockWidth=$bw candidates: got ${candGot.size} want " +
+          s"${candWant.size}; extra=${candGot.diff(candWant).take(3)} " +
+          s"missing=${candWant.diff(candGot).take(3)}")
+    }
     // derivation ladder for the catalog's shard count (r15: derived from
     // estimated candidate staging bytes vs a per-shard budget, not a
     // doc-count proxy): ceil-divide, floor 1, cap 32

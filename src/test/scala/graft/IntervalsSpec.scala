@@ -93,4 +93,74 @@ class IntervalsSpec extends SparkSpec {
     assert(again.count() == out.count())
     assert(again.except(out).count() == 0)
   }
+
+  test("collapse and collapseFixedPoint == brute day-expansion oracle") {
+    // Generated per key: random overlapping runs, single-day intervals,
+    // intervals contained in a neighbour, successors starting exactly 1
+    // and exactly 2 days after a predecessor's end, and rows with a
+    // null begin, a null end or both. The oracle expands every interval
+    // into its days (a row with a null bound covers no known day), then
+    // cuts each key's sorted days wherever two consecutive covered days
+    // lie more than gapDays apart.
+    import spark.implicits._
+    val rnd = new scala.util.Random(23)
+    val rows: Seq[(String, Option[Int], Option[Int])] = (0 until 12).flatMap { k =>
+      val key = s"k$k"
+      var at = rnd.nextInt(20)
+      val chain = (0 until 8).flatMap { _ =>
+        val b = at
+        val e = b + (if (rnd.nextInt(4) == 0) 0 else rnd.nextInt(9))
+        at = e + 1 + rnd.nextInt(3) // next begin: 1, 2 or 3 days on
+        val contained =
+          if (e - b >= 2 && rnd.nextBoolean()) Seq((key, Some(b + 1), Some(e - 1)))
+          else Nil
+        val overlap =
+          if (rnd.nextInt(3) == 0) Seq((key, Some(b + rnd.nextInt(e - b + 1)),
+            Some(e + rnd.nextInt(5))))
+          else Nil
+        (key, Some(b), Some(e)) +: (contained ++ overlap)
+      }
+      val nulls = Seq[(String, Option[Int], Option[Int])](
+        (key, None, Some(at + 40)), (key, Some(0), None),
+        (key, None, None)).filter(_ => rnd.nextBoolean())
+      rnd.shuffle(chain ++ nulls)
+    } ++ Seq(("only_nulls", None, Some(5)), ("only_nulls", Some(3), None))
+    val gaps = rows.collect { case (k, Some(b), Some(e)) => (k, b, e) }
+      .groupBy(_._1).values.flatMap { ivs =>
+        val sorted = ivs.sortBy(_._2)
+        sorted.zip(sorted.tail).map { case (x, y) => y._2 - x._3 }
+      }.toSet
+    assert(gaps.contains(1) && gaps.contains(2), s"generator lost a gap case: $gaps")
+    def oracle(gapDays: Int): Set[(String, Int, Int)] =
+      rows.collect { case (k, Some(b), Some(e)) => (k, b, e) }
+        .groupBy(_._1).toSeq.flatMap { case (k, ivs) =>
+          val days = ivs.flatMap { case (_, b, e) => b to e }.distinct.sorted
+          days.tail.foldLeft(List((days.head, days.head))) {
+            case ((s0, e0) :: done, d) =>
+              if (d - e0 <= gapDays) (s0, d) :: done else (d, d) :: (s0, e0) :: done
+            case (Nil, _) => Nil
+          }.map { case (b, e) => (k, b, e) }
+        }.toSet
+    val df = rows.toDF("k", "bi", "ei")
+      .select(col("k"),
+        expr("date_add(DATE '2020-01-01', bi)").as("b"),
+        expr("date_add(DATE '2020-01-01', ei)").as("e"))
+    val day0 = java.time.LocalDate.of(2020, 1, 1)
+    def offsets(out: org.apache.spark.sql.DataFrame): Seq[(String, Int, Int)] =
+      out.collect().toSeq.map { r =>
+        def off(i: Int) = Option(r.getDate(i)).map(d =>
+          java.time.temporal.ChronoUnit.DAYS.between(day0, d.toLocalDate).toInt)
+        (r.getString(0), off(1).getOrElse(Int.MinValue), off(2).getOrElse(Int.MinValue))
+      }
+    def check(name: String, got: Seq[(String, Int, Int)], want: Set[(String, Int, Int)]) =
+      assert(got.size == got.distinct.size && got.toSet == want,
+        s"$name: missing=${(want -- got).take(4)} extra=${(got.toSet -- want).take(4)}")
+    Seq(1, 2).foreach { g =>
+      check(s"collapse gapDays=$g",
+        offsets(Intervals.collapse(df, Seq("k"), "b", "e", gapDays = g)), oracle(g))
+    }
+    check("collapseFixedPoint gapDays=1",
+      offsets(Intervals.collapseFixedPoint(df, Seq("k"), "b", "e", gapDays = 1)),
+      oracle(1))
+  }
 }

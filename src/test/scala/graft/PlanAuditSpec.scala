@@ -466,9 +466,9 @@ class PlanAuditSpec extends SparkSpec {
     // this battery proves TRY and LEGACY string→temporal casts are
     // value-identical — the fact that would LICENSE rewriting them like
     // the numeric family above — but the rewrite is deliberately NOT
-    // adopted: TryCastTaxSmoke showed Spark 4.1's temporal TRY cast
-    // pays no per-failing-row exception (date/timestamp 1.1× A/B vs
-    // int 16.1× under the identical drill), so the rule would add
+    // adopted: the rule on/off tax A/B (OPTIMIZATION_r17.md §4) showed
+    // Spark 4.1's temporal TRY cast pays no per-failing-row exception
+    // (date/timestamp 1.1× vs int 16.1× on the same scan), so the rule would add
     // surface for no measured benefit. The battery stays as the
     // licensing proof should a future Spark regress the temporal path.
     // Same scan-backed protocol as the numeric battery (LocalRelation
@@ -511,8 +511,8 @@ class PlanAuditSpec extends SparkSpec {
     val batteryPlan = df.selectExpr("try_cast(s AS date) AS v")
       .queryExecution.executedPlan.toString
     assert(batteryPlan.toLowerCase.contains("try_cast"),
-      s"temporal try_cast was rewritten — re-run TryCastTaxSmoke before " +
-        s"adopting:\n$batteryPlan")
+      s"temporal try_cast was rewritten — repeat the rule on/off tax A/B " +
+        s"of OPTIMIZATION_r17.md §4 before adopting:\n$batteryPlan")
     types.foreach { case (sqlType, dt) =>
       val conv = CatalystTypeConverters.createToScalaConverter(dt)
       // the engine path: TRY casts through scan + codegen

@@ -6,7 +6,8 @@ set -e
 # via the Spark launcher, which needs these two to find the distro
 export SPARK_HOME="${SPARK_HOME:-/opt/spark}"
 export SPARK_SCALA_VERSION="${SPARK_SCALA_VERSION:-2.13}"
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | paste -sd:)"
+REPO="$(cd "$(dirname "$0")/.." && pwd)"
+CP="$REPO/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | paste -sd:)"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic \

@@ -10,10 +10,11 @@ package graft
   * timed runs measure steady-state throughput. A single warm run is not
   * enough: with ~100 queries churning through one JVM, C2 deopt/reopt can
   * land a multi-second outlier on a steady sub-second query (round 5:
-  * io_text_regex reported 10.99 s warm vs 0.98 s steady in a BenchOne
-  * A/B), so a query whose first timed run still looks cold-like is
-  * re-run (bounded) and the MINIMUM timed run is reported — min is the
-  * right estimator for steady-state plan cost under one-sided JIT noise.
+  * io_text_regex reported 10.99 s warm vs 0.98 s steady, NOTES_r6.md
+  * "Bench: the r5 regression is closed"), so a query whose first timed
+  * run still looks cold-like is re-run (bounded) and the MINIMUM timed
+  * run is reported — min is the right estimator for steady-state plan
+  * cost under one-sided JIT noise.
   * The stdout line reports warm times for the slowest queries (bounded so
   * the whole line fits the driver's 2000-char stdout tail window); the
   * complete warm+cold per-query detail lands in bench_detail.json.
@@ -110,12 +111,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
     val (loadWaitSec, loadGateExceeded) = loadGate()
     val loadPre = loadAvg()
     val calibPre = calibrate()
-    val spark = graft.core.GraftSession.local(cpus, "graft-bench")
+    val spark = graft.core.GraftSession.local(appName = "graft-bench")
     // In-session per-run floor probe: the same fixed trivial job (plan +
     // schedule + one-stage aggregate + noop sink) every query pays as
     // overhead, min-of-5 after warmup. A 215-row board's total carries

@@ -17,9 +17,7 @@ object PlanDump {
       if (args.length <= 2 || args(2) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(",").toSeq.filter(_.nonEmpty)
     java.nio.file.Files.createDirectories(outDir)
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
-    val spark = graft.core.GraftSession.local(cpus, "graft-plan-dump")
+    val spark = graft.core.GraftSession.local(appName = "graft-plan-dump")
     val mode = org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

@@ -249,9 +249,7 @@ object ScaleSmoke {
         "d_exact_dedup", "d_minhash_lsh", "s_cosine_ann_ivf", "t_token_stats")
     val out = s"${System.getProperty("java.io.tmpdir")}/graft_scale_" +
       (if (shape) "z" else if (mutate) "m" else "x") + k
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
-    val spark = graft.core.GraftSession.local(cpus, "graft-scale-smoke")
+    val spark = graft.core.GraftSession.local(appName = "graft-scale-smoke")
     build(spark, src, out, k, mutate, shape)
     val warmup = !flags.contains("nowarm")
     def run(name: String, dir: String): Double = {

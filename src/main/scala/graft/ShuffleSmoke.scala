@@ -1,20 +1,22 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.Observation
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.graft.GraftSql
 
-/** Per-query shuffle/input/spill accounting — makes "where every shuffle
+import graft.core.QueryMetrics
+
+/** Per-query wall, rows and data movement — makes "where every shuffle
   * comes from" (SCALING.md) a MEASURED table instead of a narrative one.
   *
-  * A [[SparkListener]] accumulates task-level metrics (input bytes,
-  * shuffle write/read bytes+records, mem/disk spill); the harness
-  * snapshots the counters around each catalog query (listener bus drained
-  * via [[GraftSql.drainListenerBus]] so the after-snapshot is exact, not
-  * racy) and prints one row per query plus the shuffle-to-input byte
-  * ratio — the number that decides whether an operator's network cost at
-  * 100 TB is a scan-shaped constant or a blow-up.
+  * Each catalog query (sort-stripped, noop sink, like Bench) runs once
+  * untimed — warming scan caches and codegen, and counting its rows
+  * through an [[Observation]], so the count costs no extra job — then
+  * once under [[QueryMetrics.measure]]. One row per query: wall, rows,
+  * tasks, executor CPU and GC, slowest task, input, shuffle write/read,
+  * spill, broadcast builds and bytes, and the shuffle-to-input byte
+  * ratio — the number that decides whether an operator's network cost
+  * at 100 TB is a scan-shaped constant or a blow-up.
   *
   * Usage: runMain graft.ShuffleSmoke [sfDir] [name ...]
   * (no names → a default panel of the shuffle-heaviest board rows)
@@ -26,34 +28,20 @@ import org.apache.spark.sql.graft.GraftSql
   * Metrics-harness-only — production sessions keep vectored IO.
   */
 object ShuffleSmoke {
-  /** Task-metrics accumulator; public so ShuffleMetricsSpec can pin the
-    * measured byte/record flow of audited queries, not just plan shape.
-    * `snap` layout: input bytes, input records, shuffle-write bytes,
-    * shuffle-write records, shuffle-read bytes, shuffle-read records,
-    * memory-spill bytes, disk-spill bytes, task count. */
-  final class Tally extends SparkListener {
-    val input = new AtomicLong; val inputRec = new AtomicLong
-    val shWrite = new AtomicLong; val shWriteRec = new AtomicLong
-    val shRead = new AtomicLong; val shReadRec = new AtomicLong
-    val memSpill = new AtomicLong; val diskSpill = new AtomicLong
-    val tasks = new AtomicLong
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        input.addAndGet(m.inputMetrics.bytesRead)
-        inputRec.addAndGet(m.inputMetrics.recordsRead)
-        shWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        shWriteRec.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-        shRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shReadRec.addAndGet(m.shuffleReadMetrics.recordsRead)
-        memSpill.addAndGet(m.memoryBytesSpilled)
-        diskSpill.addAndGet(m.diskBytesSpilled)
-        tasks.incrementAndGet()
-      }
-    }
-    def snap: Array[Long] = Array(input.get, inputRec.get, shWrite.get,
-      shWriteRec.get, shRead.get, shReadRec.get, memSpill.get,
-      diskSpill.get, tasks.get)
+
+  /** Warm-up rows and timed-run metrics of one catalog query. The
+    * warm-up's noop sink reports no written records, hence the
+    * Observation; the timed run's plan carries no observer. */
+  def measureQuery(spark: org.apache.spark.sql.SparkSession, sfDir: String,
+                   name: String): (Long, QueryMetrics) = {
+    def noop(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+    def frame = GraftSql.stripTrailingSort(SparkEntry.queries(name)(spark, sfDir))
+    val rows = new Observation("rows")
+    noop(frame.observe(rows, count(lit(1)).as("rows")))
+    val (_, m) = QueryMetrics.measure(spark)(noop(frame))
+    graft.core.Materialize.releaseScratch(spark)
+    (rows.get("rows").asInstanceOf[Long], m)
   }
 
   def main(args: Array[String]): Unit = {
@@ -66,35 +54,29 @@ object ShuffleSmoke {
         "d_triangles", "t_edit_distance", "s_semdedup", "s_srp_lsh",
         "s_cosine_topk", "t_bm25_search", "e_pagerank", "e_sessionize",
         "j13_salted_join", "u2_union_distinct")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
     // see scaladoc: vectored IO hides parquet bytes from inputMetrics
     System.setProperty("spark.hadoop.parquet.hadoop.vectored.io.enabled", "false")
-    val spark = graft.core.GraftSession.local(cpus, "graft-shuffle-smoke")
-    val tally = new Tally
-    spark.sparkContext.addSparkListener(tally)
+    val spark = graft.core.GraftSession.local(appName = "graft-shuffle-smoke")
     val mb = 1024.0 * 1024.0
-    println(f"${"query"}%-26s ${"wall_s"}%7s ${"input_mb"}%9s ${"sh_w_mb"}%8s " +
-      f"${"sh_r_mb"}%8s ${"sh_w_rec"}%10s ${"spill_mb"}%9s ${"tasks"}%6s ${"sh/in"}%6s")
+    println(f"${"query"}%-26s ${"wall_s"}%7s ${"rows"}%10s ${"tasks"}%6s " +
+      f"${"cpu_s"}%7s ${"gc_s"}%6s ${"task_max_s"}%10s ${"input_mb"}%9s " +
+      f"${"in_rec"}%10s ${"sh_w_mb"}%8s ${"sh_w_rec"}%10s ${"sh_r_mb"}%8s " +
+      f"${"sh_r_rec"}%10s ${"mem_spill_mb"}%12s ${"disk_spill_mb"}%13s " +
+      f"${"bc_builds"}%9s ${"bc_mb"}%7s ${"sh/in"}%6s")
     names.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case None => println(s"$name: no such query")
-        case Some(fn) =>
-          // warm-up run outside the measured window (scan caches, codegen)
-          GraftSql.stripTrailingSort(fn(spark, sfDir))
-            .write.format("noop").mode("overwrite").save()
-          GraftSql.drainListenerBus(spark)
-          val before = tally.snap
-          val t0 = System.nanoTime()
-          GraftSql.stripTrailingSort(fn(spark, sfDir))
-            .write.format("noop").mode("overwrite").save()
-          val wall = (System.nanoTime() - t0) / 1e9
-          GraftSql.drainListenerBus(spark)
-          graft.core.Materialize.releaseScratch(spark)
-          val d = tally.snap.zip(before).map { case (a, b) => a - b }
-          val ratio = if (d(0) > 0) d(2).toDouble / d(0) else 0.0
-          println(f"$name%-26s $wall%7.2f ${d(0) / mb}%9.1f ${d(2) / mb}%8.1f " +
-            f"${d(4) / mb}%8.1f ${d(3)}%10d ${(d(6) + d(7)) / mb}%9.1f ${d(8)}%6d $ratio%6.2f")
+      if (!SparkEntry.queries.contains(name)) println(s"$name: no such query")
+      else {
+        val (rows, m) = measureQuery(spark, sfDir, name)
+        val ratio =
+          if (m.inputBytes > 0) m.shuffleWriteBytes.toDouble / m.inputBytes else 0.0
+        val taskMax = m.taskMs.lastOption.getOrElse(0L) / 1e3
+        println(f"$name%-26s ${m.wallNs / 1e9}%7.2f $rows%10d ${m.tasks}%6d " +
+          f"${m.executorCpuNs / 1e9}%7.2f ${m.gcMs / 1e3}%6.2f $taskMax%10.2f " +
+          f"${m.inputBytes / mb}%9.1f ${m.inputRecords}%10d " +
+          f"${m.shuffleWriteBytes / mb}%8.1f ${m.shuffleWriteRecords}%10d " +
+          f"${m.shuffleReadBytes / mb}%8.1f ${m.shuffleReadRecords}%10d " +
+          f"${m.memorySpillBytes / mb}%12.1f ${m.diskSpillBytes / mb}%13.1f " +
+          f"${m.broadcastBuilds}%9d ${m.broadcastBytes.sum / mb}%7.1f $ratio%6.2f")
       }
     }
     spark.stop()

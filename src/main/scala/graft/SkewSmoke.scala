@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.core.QueryMetrics
 
 /** Skew-stress harness for the salted-join capability (J13) — the
   * reference's headline workload is a 10.4 B-row fact with a manually
@@ -37,9 +38,7 @@ object SkewSmoke {
     val nFact = if (args.length > 0) args(0).toLong else 6000000L
     val nKeys = if (args.length > 1) args(1).toLong else 100000L
     val saltN = if (args.length > 2) args(2).toInt else 16
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
-    val spark = graft.core.GraftSession.local(cpus, "graft-skew-smoke")
+    val spark = graft.core.GraftSession.local(appName = "graft-skew-smoke")
     import spark.implicits._
 
     val out = s"${System.getProperty("java.io.tmpdir")}/graft_skew_$nFact"
@@ -61,13 +60,6 @@ object SkewSmoke {
         .write.mode("overwrite").parquet(s"$out/dim")
       done.createNewFile()
     }
-
-    val taskMs = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val listener = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        taskMs.synchronized { taskMs += e.taskInfo.duration }
-    }
-    spark.sparkContext.addSparkListener(listener)
 
     val baseConfs = Map("spark.sql.autoBroadcastJoinThreshold" -> "-1")
     val aqeOff = baseConfs ++ Map("spark.sql.adaptive.enabled" -> "false")
@@ -97,12 +89,9 @@ object SkewSmoke {
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
       try {
         finish(q) // warm: codegen/JIT/page cache
-        taskMs.synchronized(taskMs.clear())
-        val t0 = System.nanoTime()
-        val cs = finish(q)
-        val wall = (System.nanoTime() - t0) / 1e9
-        val ts = taskMs.synchronized(taskMs.toArray.sorted)
-        Stat(label, wall, ts.sum / 1e3, ts.length,
+        val (cs, m) = QueryMetrics.measure(spark)(finish(q))
+        val ts = m.taskMs
+        Stat(label, m.wallNs / 1e9, ts.sum / 1e3, ts.length,
           if (ts.isEmpty) 0 else ts.last / 1e3,
           if (ts.isEmpty) 0 else ts(ts.length / 2) / 1e3, cs)
       } finally prev.foreach {

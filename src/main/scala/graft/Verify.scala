@@ -8,12 +8,10 @@ object Verify {
     // Optional third arg: only run queries whose name starts with this
     // prefix (iteration speedup; the driver always runs the full set).
     val prefix = if (args.length > 2) args(2) else ""
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
     // Must use the engine session factory: it sets nanosAsLong (events.ts
     // is TIMESTAMP(NANOS) parquet — unreadable without it) and ANSI off
     // (Spark 4 defaults ANSI on; reference semantics are null-on-error).
-    val spark = graft.core.GraftSession.local(cpus, "graft-verify")
+    val spark = graft.core.GraftSession.local(appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(_._1.startsWith(prefix)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

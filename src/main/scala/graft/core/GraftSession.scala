@@ -76,7 +76,8 @@ object GraftSession {
     s
   }
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors(),
+  def local(cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+              .getOrElse(Runtime.getRuntime.availableProcessors()),
             appName: String = "graft"): SparkSession = {
     // Operability drill hook: SPARK_GRAFT_MASTER=local-cluster[4,8,4096]
     // runs the SAME session against a multi-JVM master — real executor

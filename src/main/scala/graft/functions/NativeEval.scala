@@ -163,10 +163,11 @@ object NativeEval {
   }
 
   /** Threshold-aware [[arrayJaccardSortedLong]] (r17 — the ×100 ngram
-    * wall is the VERIFY kernel, NgramWallSmoke/SCALING.md): exact
-    * Jaccard when the pair can still reach `threshold`, or -1.0 the
-    * moment it provably cannot. Soundness: with `inter` matches after
-    * consuming i/j elements, the final intersection I is at most
+    * wall is the VERIFY kernel, SCALING.md "Round 17: the ×100 ngram
+    * wall decomposed"): exact Jaccard when the pair can still reach
+    * `threshold`, or -1.0 the moment it provably cannot. Soundness: with
+    * `inter` matches after consuming i/j elements, the final
+    * intersection I is at most
     * inter + min(na−i, nb−j), and J = I/(na+nb−I) is monotone in I, so
     * J < t is certain once (inter + minRem)·(1+t) < t·(na+nb). The
     * compare carries the same relative (1 − 1e-12) slack as the PPJoin

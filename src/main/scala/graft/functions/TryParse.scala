@@ -13,8 +13,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * which calls the non-throwing wrapper parser and THROWS a formatted
   * SparkNumberFormatException (error-class machinery + stack trace) on
   * failure, only for TRY's wrapper to swallow it — measured ~7 µs per
-  * FAILING row, 10× the cost of the parse itself (BenchOne: a 150k-row
-  * always-failing try_cast column cost 1.0 s of a 1.5 s query). On dirty
+  * FAILING row, 10× the cost of the parse itself (NOTES_r16.md "the
+  * try_cast exception tax": a 150k-row always-failing try_cast column
+  * cost 1.0 s of a 1.5 s query). On dirty
   * data at scale — exactly where try_cast is the right tool — the
   * exception tax dominates.
   *

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core.Materialize.MaterializeOps
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftSql
 
@@ -29,10 +29,11 @@ object TextDedup {
     * 100 TB this is a no-op (the check costs one RDD translation, no
     * job).
     *
-    * APPLY SPARINGLY — measured per-operator A/B at sf0.1 (BenchOne
-    * mins): after the r16 linear-kernel rewrite the char-shingle paths
-    * are cheap enough that the repartition's exchange + the .rdd plan
-    * translation COST more than the spread saves (blocked ngram 1.20 →
+    * APPLY SPARINGLY — measured per-operator A/B at sf0.1 (r16, min of
+    * three timed runs): after the r16 linear-kernel rewrite the
+    * char-shingle paths are cheap enough that the repartition's
+    * exchange + the .rdd plan translation COST more than the spread
+    * saves (blocked ngram 1.20 →
     * 1.51 s widened; minhash 1.22 → 2.39; prefix hi neutral at ~3.3),
     * so only [[simhashPairs]] uses it — its materialized base
     * (word-shingle set + 64-bit signature + hashed shingles per doc,
@@ -95,7 +96,8 @@ object TextDedup {
     * ([[graft.functions.ArrayJaccardSortedBounded]]) — kept rows carry
     * the identical exact value, so swapping kernels under the
     * immediately-following `>= t` filter is plan-only. The ×100 ngram
-    * wall is this merge (NgramWallSmoke: verify ≈ 345 of 394 s), and
+    * wall is this merge (SCALING.md "Round 17: the ×100 ngram wall
+    * decomposed": the verify is 88% of the wall), and
     * most candidates sit well under t. */
   def jaccardSortedAtLeast(t: Double)(a: Column, b: Column): Column =
     GraftSql.column(graft.functions.ArrayJaccardSortedBounded(
@@ -591,25 +593,24 @@ object TextDedup {
     // Jaccard 0.53 lands at Hamming 16). Docs under minShingles are OUT
     // OF DOMAIN for simhash — route them through minhashLshPairs, whose
     // recall does not depend on signature concentration.
-    val (_, expand, shHashed, _, _, cand) = simhashInternals(docs, idCol,
+    val (expand, shHashed, _, _, cand) = simhashInternals(docs, idCol,
       textCol, shingleN, maxHamming, numBands, minShingles)
     expand(verifyJaccard(cand, shHashed, idCol, threshold,
       jaccardSortedAtLeast(threshold),
       broadcastShingles = broadcastVerify.getOrElse(false)))
   }
 
-  /** The simhash path's internal stage frames — (materialized rep base,
-    * expand, hashed-shingle projection, x-side band rows [both log2-size
-    * images], y-side band rows [own log2-size block only], distinct
-    * candidate pairs) — shared by [[simhashPairs]] and the
-    * stage-decomposition drill (NgramWallSmoke `sim_*` stages): one
-    * definition, so the drill times the EXACT frames the shipped plan
-    * builds. Not a dedup API — callers want [[simhashPairs]]. */
+  /** The simhash path's internal stage frames — (expand, hashed-shingle
+    * projection, x-side band rows [both log2-size images], y-side band
+    * rows [own log2-size block only], distinct candidate pairs) — shared
+    * by [[simhashPairs]] and [[simhashCensus]]: one definition, so the
+    * census counts the EXACT frames the shipped plan joins. Not a dedup
+    * API — callers want [[simhashPairs]]. */
   private[graft] def simhashInternals(docs: DataFrame, idCol: String,
       textCol: String, shingleN: Int, maxHamming: Int, numBands: Int,
       minShingles: Int)
-      : (DataFrame, DataFrame => DataFrame, DataFrame, DataFrame,
-         DataFrame, DataFrame) = {
+      : (DataFrame => DataFrame, DataFrame, DataFrame, DataFrame,
+         DataFrame) = {
     val width = 64 / numBands
     val mask = (1L << width) - 1
     // widened — the one measured win (see [[widened]]): the rep-level
@@ -679,7 +680,31 @@ object TextDedup {
       .repartition(col("a"), col("b"))
       .distinct()
     val shHashed = base.select(col(idCol), col("__shh").as("__sh"))
-    (base, expand, shHashed, bandedX, bandedOwn, cand)
+    (expand, shHashed, bandedX, bandedOwn, cand)
+  }
+
+  /** Bucket census of the simhash banded self-join (r18), a deterministic
+    * count on any host: the merge scan walks Σ nx·ny combos over the
+    * (band, bval, lblk) buckets of the x and y sides (`scanCombos`); the
+    * r17 pair-combo metric Σ nx(nx−1)/2 is `pairCombosX`. The bucket
+    * maxima show the skew — whether the wall is a few straggler tasks
+    * (hot buckets are byte-tiny, so AQE's skew split never fires) or
+    * spread volume. One row: buckets, scanCombos, pairCombosX,
+    * maxBucketX, maxBucketY. */
+  private[graft] def simhashCensus(docs: DataFrame, idCol: String,
+      textCol: String, shingleN: Int, maxHamming: Int, numBands: Int,
+      minShingles: Int): Row = {
+    val (_, _, bandedX, bandedOwn, _) = simhashInternals(docs, idCol,
+      textCol, shingleN, maxHamming, numBands, minShingles)
+    def by(df: DataFrame, n: String) = df
+      .groupBy(col("__band"), col("__bval"), col("__lblk"))
+      .agg(count(lit(1)).as(n))
+    by(bandedX, "nx").join(by(bandedOwn, "ny"), Seq("__band", "__bval", "__lblk"))
+      .agg(count(lit(1)).as("buckets"),
+        sum((col("nx") * col("ny")).cast("long")).as("scanCombos"),
+        sum((col("nx") * (col("nx") - 1) / 2).cast("long")).as("pairCombosX"),
+        max(col("nx")).as("maxBucketX"), max(col("ny")).as("maxBucketY"))
+      .head()
   }
 
   /** Blocked exact n-gram Jaccard dedup: docs are bucketed by
@@ -734,16 +759,13 @@ object TextDedup {
     // dominates staging): callers who already hold a corpus estimate
     // pass it (the catalog memoizes estimateNgramStats — zero extra
     // jobs per call); otherwise decide here from the POST-collapse
-    // corpus (what the verify actually probes): ~8 bytes per shingle
-    // hash, ≤ one hash per char, plus 144 bytes per rep (r18, ADVICE —
-    // both tiers of the two-tier verify counted: ~112 B skinny sketch
-    // relation + 32 B fat-array id/header) — one tiny aggregate on the
+    // corpus (what the verify actually probes), ≤ one shingle hash per
+    // char ([[verifyBroadcastBytes]]) — one tiny aggregate on the
     // (materialized) rep frame.
     val bcastVerify = broadcastVerify.getOrElse {
       val row = base.agg(sum(col("__len")), count(lit(1))).head()
-      val estShBytes = (if (row.isNullAt(0)) 0L else row.getLong(0)) * 8L +
-        row.getLong(1) * 144L
-      estShBytes <= ngramBroadcastBudgetBytes
+      verifyBroadcastBytes(if (row.isNullAt(0)) 0L else row.getLong(0),
+        row.getLong(1)) <= ngramBroadcastBudgetBytes
     }
     // NO distinct() on the candidates: the larger-own-block rule emits
     // every qualifying pair exactly once (equal own-blocks share one
@@ -802,11 +824,10 @@ object TextDedup {
 
   /** The blocked path's internal stage frames — (post-collapse reps,
     * expand, hashed shingles, exploded block rows) — shared by
-    * [[ngramJaccardPairs]] and the stage-decomposition drill
-    * (NgramWallSmoke; SCALING.md r17 "the ×100 ngram wall decomposed"):
-    * one definition, so the drill times the EXACT frames the shipped
-    * plan builds, not a reimplementation that can drift. Not a dedup
-    * API — callers want [[ngramJaccardPairs]]. */
+    * [[ngramJaccardPairs]] and [[ngramCandCensus]]: one definition, so
+    * the census counts the EXACT frames the shipped plan joins, not a
+    * reimplementation that can drift. Not a dedup API — callers want
+    * [[ngramJaccardPairs]]. */
   private[graft] def ngramBlockedInternals(docs: DataFrame, idCol: String,
       textCol: String, lenCol: Column, n: Int, blockWidth: Int)
       : (DataFrame, DataFrame => DataFrame, DataFrame, DataFrame) = {
@@ -822,11 +843,25 @@ object TextDedup {
       md5(concat(col(textCol), lit("|"), col("__len").cast("string"))))
     val sh = base.select(col(idCol),
       charShingleHashes(col(textCol), n).as("__sh"))
-    val blocked = base.select(col(idCol), col("__len"))
-      .select(col(idCol), col("__len"),
-        explode(array((col("__len") / blockWidth).cast("long"),
-                      (col("__len") / blockWidth).cast("long") + 1)).as("__blk"))
+    val blocked = blockImages(base.select(col(idCol), col("__len")), idCol,
+      blockWidth)
     (base, expand, sh, blocked)
+  }
+
+  /** (idCol, __len) rows exploded under their two block images
+    * {own, own+1} as `__blk` — the `blk` input of [[blockedCandJoin]]. */
+  private def blockImages(rows: DataFrame, idCol: String,
+                          blockWidth: Int): DataFrame = {
+    val own = (col("__len") / blockWidth).cast("long")
+    rows.select(col(idCol), col("__len"), explode(array(own, own + 1)).as("__blk"))
+  }
+
+  /** The (x, y) sides of [[blockedCandJoin]] before any salt: x keeps
+    * both images of every non-null-id row, y only each row's own block. */
+  private[graft] def blockedSides(blk: DataFrame, idCol: String,
+                                  blockWidth: Int): (DataFrame, DataFrame) = {
+    val x = blk.filter(col(idCol).isNotNull)
+    (x, x.filter(col("__blk") === (col("__len") / blockWidth).cast("long")))
   }
 
   /** The length-blocked candidate join shared by [[ngramJaccardPairs]]
@@ -873,9 +908,7 @@ object TextDedup {
     // Per-row, pushed to the scan; also lets the optimizer skip
     // inferring isnotnull(least/greatest) conjuncts into the per-combo
     // join condition.
-    val xBase = blk.filter(col(idCol).isNotNull)
-    val yBase = xBase.filter(col("__blk") ===
-      (col("__len") / blockWidth).cast("long"))
+    val (xBase, yBase) = blockedSides(blk, idCol, blockWidth)
     val (x, y) =
       if (streamSalt <= 1) (xBase.alias("__blk_x"), yBase.alias("__blk_y"))
       else (
@@ -913,6 +946,25 @@ object TextDedup {
               greatest(col(s"__blk_x.$idCol"), col(s"__blk_y.$idCol")).as("b"))
   }
 
+  /** Combo census of the blocked candidate join (r18), a deterministic
+    * count on any host: the merge scan walks Σ nx·ny combos over the
+    * block buckets, nx = |x rows of block b| and ny = |y rows of b|
+    * ([[blockedSides]]). A salt splits x rows but its Σ over salts
+    * restores nx·ny per block, so the census is salt-free. One row:
+    * scanCombos, maxBlock (the largest x bucket). */
+  private[graft] def ngramCandCensus(docs: DataFrame, idCol: String,
+      textCol: String, lenCol: Column, n: Int, blockWidth: Int): Row = {
+    val (_, _, _, blocked) =
+      ngramBlockedInternals(docs, idCol, textCol, lenCol, n, blockWidth)
+    val (x, y) = blockedSides(blocked, idCol, blockWidth)
+    val img = x.groupBy(col("__blk")).agg(count(lit(1)).as("nx"))
+    val own = y.groupBy(col("__blk")).agg(count(lit(1)).as("ny"))
+    img.join(own, Seq("__blk"), "left_outer")
+      .agg(sum((col("nx") * coalesce(col("ny"), lit(0L))).cast("long")).as("scanCombos"),
+        max(col("nx")).as("maxBlock"))
+      .head()
+  }
+
   /** Candidate (a, b) pairs of the length-blocked path, PRE-verify and
     * WITHOUT the exact-dup collapse — the raw-corpus candidate volume
     * the blocked join pays, as a measurable frame (SCALING.md "blocked
@@ -921,12 +973,9 @@ object TextDedup {
   def ngramBlockedCandidates(docs: DataFrame, idCol: String, textCol: String,
                              lenCol: Column, n: Int = 4,
                              blockWidth: Int = 100): DataFrame = {
-    val blocked = docs.filter(length(col(textCol)) >= n)
+    val rows = docs.filter(length(col(textCol)) >= n)
       .select(col(idCol), lenCol.as("__len"))
-      .select(col(idCol), col("__len"),
-        explode(array((col("__len") / blockWidth).cast("long"),
-                      (col("__len") / blockWidth).cast("long") + 1)).as("__blk"))
-    blockedCandJoin(blocked, idCol, blockWidth)
+    blockedCandJoin(blockImages(rows, idCol, blockWidth), idCol, blockWidth)
   }
 
   /** Estimated RAW (uncompressed logical) bytes the [[ngramJaccardPairs]]
@@ -957,10 +1006,8 @@ object TextDedup {
   /** Plan-sizing estimates for the blocked ngram join, from one bounded
     * aggregate (one output row per length block):
     *   - `candidateBytes` drives the fallback shard count;
-    *   - `shingleBytes` (8 bytes × total chars + 144 bytes × docs — the
-    *     r18 per-doc constant counts BOTH tiers of the r17 two-tier
-    *     verify: ~112 B/doc skinny sketch relation + 32 B/doc fat-array
-    *     id+header; an upper bound on the hashed-shingle verify rows,
+    *   - `shingleBytes` ([[verifyBroadcastBytes]] of total chars and
+    *     docs — an upper bound on the hashed-shingle verify rows,
     *     PRE-collapse so it only overestimates)
     *     predicts whether the verify will run as broadcast probes, in
     *     which case candidates never stage and sharding is pure
@@ -985,8 +1032,9 @@ object TextDedup {
       val pairs = p.toDouble * (p - 1) / 2 * 0.75 + p.toDouble * prev / 4
       (pairs * 16.0 * ml, pairs)
     }.foldLeft((0.0, 0.0)) { case ((cb, pp), (c, p)) => (cb + c, pp + p) }
-    val shingle = pop.valuesIterator.map { case (p, ml) => p * (ml * 8.0 + 144.0) }
-      .sum.toLong
+    val shingle = verifyBroadcastBytes(
+      math.round(pop.valuesIterator.map { case (p, ml) => p * ml }.sum),
+      pop.valuesIterator.map(_._1).sum)
     NgramEstimate(cand.toLong, shingle, pairsTot.toLong)
   }
 
@@ -1094,9 +1142,9 @@ object TextDedup {
     // identical (measured: the natural-shape ×30 board's prefix verify
     // ENOSPC'd through the fat SMJ exchange before this fix)
     val bcast = broadcastVerify.getOrElse {
-      val row = base.agg(sum(length(col(textCol)))).head()
-      val estBytes = (if (row.isNullAt(0)) 0L else row.getLong(0)) * 8L
-      estBytes <= ngramBroadcastBudgetBytes
+      val row = base.agg(sum(length(col(textCol))), count(lit(1))).head()
+      verifyBroadcastBytes(if (row.isNullAt(0)) 0L else row.getLong(0),
+        row.getLong(1)) <= ngramBroadcastBudgetBytes
     }
     // distinct IS load-bearing here, unlike the blocked path: a pair can
     // share several prefix shingles. It runs on skinny (a, b) rows only
@@ -1327,6 +1375,17 @@ object TextDedup {
       kernelTail(bounded)
     }
   }
+
+  /** Estimated resident bytes of the verify's broadcast relations for
+    * `shingles` hashed shingles over `reps` docs: 8 bytes per shingle
+    * hash plus 144 bytes per doc (r18, ADVICE). The 144 counts BOTH tiers
+    * of the two-tier verify — the fat array relation's 32 B id+header and
+    * the skinny sketch relation's ~112 B (id + size + 64-byte parity
+    * sketch + headers); the one-tier shape's constant is at most 112, so
+    * 144 upper-bounds both shapes. Compared against
+    * [[ngramBroadcastBudgetBytes]]. */
+  private[graft] def verifyBroadcastBytes(shingles: Long, reps: Long): Long =
+    shingles * 8L + reps * 144L
 
   /** Broadcast budget for the verify's shingle side: an explicit
     * broadcast must fit comfortably in EVERY executor's heap alongside

@@ -170,8 +170,8 @@ object DataPrepQueries {
           tmpDir = Some(gen),
           // 4 generations per parquet round-trip (r18, verdict item 4):
           // two fewer write+read jobs than the r12 pairing at identical
-          // arithmetic (materialization never changes values) — BenchOne
-          // A/B alternated pairs, min-of-3: 2.330/2.213 s at 2 vs
+          // arithmetic (materialization never changes values) — A/B
+          // alternated pairs, min-of-3: 2.330/2.213 s at 2 vs
           // 1.995/1.888 s at 4 (OPTIMIZATION_r18.md §5).
           materializeEvery = 4)
         .orderBy("node")

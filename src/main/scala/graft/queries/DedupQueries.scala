@@ -36,8 +36,8 @@ object DedupQueries {
     * d_ngram_jaccard call below. */
   private val ngramEstCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), TextDedup.NgramEstimate]()
-  private[graft] def ngramEstStats(s: org.apache.spark.sql.SparkSession,
-                                   dir: String): TextDedup.NgramEstimate =
+  private def ngramEstStats(s: org.apache.spark.sql.SparkSession,
+                             dir: String): TextDedup.NgramEstimate =
     memoEstimate(ngramEstCache, dir) {
       TextDedup.estimateNgramStats(Tables.documents(s, dir),
         "text", col("n_chars"), n = 4, blockWidth = 20)
@@ -48,13 +48,12 @@ object DedupQueries {
     * (r16: the ngram verify-budget discipline applied family-wide).
     *
     * r17 (verdict item 4 + ADVICE): the estimate is now
-    *   2 × (8 bytes per word 3-gram + 144 bytes per doc), POST-collapse —
-    * (per-doc r18 = 32 fat id+header + ~112 skinny sketch relation —
-    * both tiers of the r17 two-tier verify counted) —
-    * computed over DISTINCT texts (md5-grouped, the exact-dup collapse
-    * key those operators apply before their verifies), with a per-row
-    * constant for id + array header and doubled because verifyJaccard
-    * broadcasts TWO projections of the shingle frame. The r16 form was
+    *   2 × [[TextDedup.verifyBroadcastBytes]](word 3-grams, docs),
+    * POST-collapse — computed over DISTINCT texts (md5-grouped, the
+    * exact-dup collapse key those operators apply before their
+    * verifies), with a per-row constant for id + array header and
+    * doubled because verifyJaccard broadcasts TWO projections of the
+    * shingle frame. The r16 form was
     * pre-collapse and arrays-only: "only overestimates" — by the copy
     * count itself on exactly the corpus the collapse exists for (a
     * high-duplication re-crawl), where it refuses broadcasts that fit
@@ -67,12 +66,8 @@ object DedupQueries {
     * generation (memoized), shuffling one skinny row per distinct text. */
   private val wordBytesCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
-  /** The estimate itself, exposed so the NgramWallSmoke `sim_full`
-    * geometry override decides its broadcast with the SAME formula the
-    * catalog uses (an inline drill copy would silently drift — the
-    * ngramBlockedInternals lesson). */
-  private[graft] def lshBcastBytes(s: org.apache.spark.sql.SparkSession,
-                                   dir: String): Long =
+  private def lshBcastBytes(s: org.apache.spark.sql.SparkSession,
+                            dir: String): Long =
     memoEstimate(wordBytesCache, dir) {
       val row = Tables.documents(s, dir)
         // members of one md5 group share the text, hence the word count
@@ -82,14 +77,7 @@ object DedupQueries {
         .agg(sum(col("__w")), count(lit(1))).head()
       val words = if (row.isNullAt(0)) 0L else row.getLong(0)
       val reps = row.getLong(1)
-      // Per-doc constant 144 B (r18, ADVICE — skinny tier counted): the
-      // tiered verify keeps TWO relation kinds resident per side — the
-      // fat array relation (32 B id+header + 8 B/shingle, no sketch) and
-      // the skinny sketch relation (~112 B: id + size + 64-byte parity
-      // sketch + headers) — so per doc the pair costs 32+112 = 144 B on
-      // top of the array bytes. (The one-tier shape's constant is at most
-      // 112, so 144 upper-bounds both shapes.)
-      java.lang.Long.valueOf(2L * (words * 8L + reps * 144L))
+      java.lang.Long.valueOf(2L * TextDedup.verifyBroadcastBytes(words, reps))
     }
   private def lshBcast(s: org.apache.spark.sql.SparkSession,
                        dir: String): Option[Boolean] =
@@ -113,8 +101,8 @@ object DedupQueries {
     * Under 1e5 estimated pairs (sf0.01-class fixtures) stay unsalted —
     * a single stream stage is right there and the plan stays
     * byte-identical to r14's shape. */
-  private[graft] def ngramPlan(s: org.apache.spark.sql.SparkSession,
-                               dir: String): (Boolean, Int, Int) = {
+  private def ngramPlan(s: org.apache.spark.sql.SparkSession,
+                        dir: String): (Boolean, Int, Int) = {
     val est = ngramEstStats(s, dir)
     val bcast = est.shingleBytes <= TextDedup.ngramBroadcastBudgetBytes
     val shards =

@@ -33,11 +33,17 @@ object GraftSql {
   }
 
   /** Block until every queued listener event has been delivered —
-    * `private[spark]`, re-exported so metric harnesses (ShuffleSmoke) can
-    * snapshot listener-accumulated counters deterministically after a job
+    * `private[spark]`, re-exported so `graft.core.QueryMetrics` can
+    * read listener-accumulated counters deterministically after a job
     * instead of sleeping and hoping the bus drained. */
   def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** The QueryExecution an ended SQL execution ran — `private[sql]` on
+    * the event, re-exported so `graft.core.QueryMetrics` can read each
+    * execution's final plan. None on events without one. */
+  def executionOf(e: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd)
+      : Option[org.apache.spark.sql.execution.QueryExecution] = Option(e.qe)
 
   /** The DataFrame without its trailing global Sort, if any. Catalog
     * queries end in `orderBy` purely so the driver's oracle hash is

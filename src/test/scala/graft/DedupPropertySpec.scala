@@ -831,6 +831,30 @@ class DedupPropertySpec extends SparkSpec {
     assert(est == estWant, s"estimator arithmetic: got $est want $estWant")
   }
 
+  /** NgramWallSmoke's combo censuses are arithmetic over the joins'
+    * buckets; each must equal the row count of the shipped x/y sides
+    * equi-joined on the bucket key alone, so a census cannot drift from
+    * the join it counts. */
+  test("candidate-join censuses == equi-join row counts of the shipped sides") {
+    import spark.implicits._
+    val docs = corpus.toDF("doc_id", "text")
+    val (_, _, _, blocked) = TextDedup.ngramBlockedInternals(docs, "doc_id",
+      "text", length(col("text")), 4, 20)
+    val (x, y) = TextDedup.blockedSides(blocked, "doc_id", 20)
+    val ngramJoin = x.join(y, "__blk").count()
+    val ngram = TextDedup.ngramCandCensus(docs, "doc_id", "text",
+      length(col("text")), 4, 20).getAs[Long]("scanCombos")
+    assert(ngramJoin > 0 && ngram == ngramJoin,
+      s"ngram census $ngram != blocked join $ngramJoin")
+    val (_, _, bandedX, bandedOwn, _) = TextDedup.simhashInternals(docs,
+      "doc_id", "text", 3, 15, 16, 32)
+    val simJoin = bandedX.join(bandedOwn, Seq("__band", "__bval", "__lblk")).count()
+    val sim = TextDedup.simhashCensus(docs, "doc_id", "text", 3, 15, 16, 32)
+      .getAs[Long]("scanCombos")
+    assert(simJoin > 0 && sim == simJoin,
+      s"simhash census $sim != banded join $simJoin")
+  }
+
   /** The SRP pair lister's collapse+expand must equal the uncollapsed
     * band-join pipeline bit-for-bit on a corpus with byte-identical
     * twin vectors — including the micro-floored cosine values (intra

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.graft.GraftSql
 
+import graft.core.QueryMetrics
+
 /** Measured-data-movement audits. PlanAuditSpec pins plan SHAPE (broadcast
   * nodes present, no cartesians); these pin the actual task-metric flow —
   * catching regressions the plan string can't show, e.g. a broadcast that
@@ -12,53 +14,53 @@ import org.apache.spark.sql.graft.GraftSql
   * counts — partition-count and AQE changes shouldn't flake them. */
 class ShuffleMetricsSpec extends SparkSpec {
 
-  /** Tally deltas for one query run (warm plan, noop sink). The bus is
-    * drained before registering so a prior job's backlog can't leak into
-    * the tally, and after the job so the snapshot is complete. */
-  private def measure(name: String): Array[Long] = {
-    GraftSql.drainListenerBus(spark)
-    val tally = new ShuffleSmoke.Tally
-    spark.sparkContext.addSparkListener(tally)
-    try {
+  /** Metrics of one query run (noop sink, sort-stripped plan). */
+  private def measure(name: String): QueryMetrics =
+    QueryMetrics.measure(spark)(
       GraftSql.stripTrailingSort(SparkEntry.queries(name)(spark, sf001))
-        .write.format("noop").mode("overwrite").save()
-      GraftSql.drainListenerBus(spark)
-      tally.snap
-    } finally spark.sparkContext.removeSparkListener(tally)
-  }
-
-  private def shuffleRecords(m: Array[Long]) = m(3)
-  private def spillBytes(m: Array[Long]) = m(6) + m(7)
+        .write.format("noop").mode("overwrite").save())._2
 
   test("j1: broadcast star — the fact side never rides an exchange") {
     val m = measure("j1_star_revenue")
     // only the agg partial->final hop shuffles: group rows, not lineitem
-    assert(shuffleRecords(m) < 1000,
-      s"j1 shuffled ${shuffleRecords(m)} records — a dim stopped broadcasting")
+    assert(m.shuffleWriteRecords < 1000,
+      s"j1 shuffled ${m.shuffleWriteRecords} records — a dim stopped broadcasting")
+    // the dims are built as broadcasts in the AQE final plan, not only
+    // planned as ones
+    assert(m.broadcastBytes.exists(_ > 0),
+      s"j1 broadcast builds (dataSize bytes): ${m.broadcastBytes}")
   }
 
   test("a1: map-side combine holds — shuffle carries group rows only") {
     val m = measure("a1_pricing_summary")
-    assert(shuffleRecords(m) < 200,
-      s"a1 shuffled ${shuffleRecords(m)} records — partial aggregation lost")
+    assert(m.shuffleWriteRecords < 200,
+      s"a1 shuffled ${m.shuffleWriteRecords} records — partial aggregation lost")
   }
 
   test("j13: salted join replicates the dim, never shuffles the fact") {
     val m = measure("j13_salted_join")
-    assert(shuffleRecords(m) < 1000,
-      s"j13 shuffled ${shuffleRecords(m)} records — salt fell back to exchange")
+    assert(m.shuffleWriteRecords < 1000,
+      s"j13 shuffled ${m.shuffleWriteRecords} records — salt fell back to exchange")
   }
 
   test("s_cosine_topk: corpus is scanned, not shuffled, for the join") {
     val m = measure("s_cosine_topk")
-    assert(shuffleRecords(m) < 1000,
-      s"topk shuffled ${shuffleRecords(m)} records — queries stopped broadcasting")
+    assert(m.shuffleWriteRecords < 1000,
+      s"topk shuffled ${m.shuffleWriteRecords} records — queries stopped broadcasting")
   }
 
   test("pair-dedup family: no spill at test scale") {
     for (q <- Seq("d_minhash_lsh", "d_simhash", "t_edit_distance")) {
       val m = measure(q)
-      assert(spillBytes(m) == 0, s"$q spilled ${spillBytes(m)} bytes")
+      assert(m.spillBytes == 0, s"$q spilled ${m.spillBytes} bytes")
+    }
+  }
+
+  test("ShuffleSmoke: rows observed on the warm-up == count()") {
+    for (q <- Seq("a1_pricing_summary", "d_simhash")) {
+      val (rows, _) = ShuffleSmoke.measureQuery(spark, sf001, q)
+      val want = SparkEntry.queries(q)(spark, sf001).count()
+      assert(rows == want, s"$q: observed $rows rows, count() $want")
     }
   }
 }

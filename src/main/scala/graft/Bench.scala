@@ -14,7 +14,9 @@ package graft
   * "Bench: the r5 regression is closed"), so a query whose first timed
   * run still looks cold-like is re-run (bounded) and the MINIMUM timed
   * run is reported — min is the right estimator for steady-state plan
-  * cost under one-sided JIT noise.
+  * cost under one-sided JIT noise ([[timeRow]] is the rule).
+  * Every number comes from the run itself: Bench reads no earlier
+  * record, and its only input knob is SPARK_GRAFT_SF_DIR.
   * The stdout line reports warm times for the slowest queries (bounded so
   * the whole line fits the driver's 2000-char stdout tail window); the
   * complete warm+cold per-query detail lands in bench_detail.json.
@@ -74,44 +76,81 @@ object Bench {
     math.max(l1, 0.7 * l5)
   }
 
-  /** LOAD GATE (r15; 5-min hole closed r16 — see [[gateLoad]]): a
-    * contaminated board must be impossible to produce silently. The r14
-    * official record ran at loadavg 27.99 on a 32-core host and read
-    * +33% vs two same-HEAD controlled boards — external load, not the
-    * engine. Before any timing starts, wait (bounded) for the effective
-    * loadavg to fall under the gate; the wait and the gate verdict are
-    * recorded in the env block so a board that STILL started loaded
-    * carries the evidence on its face. Thresholds overridable:
-    * SPARK_GRAFT_BENCH_MAX_LOAD (default 4.0 — ~12% of a 32-core host)
-    * and SPARK_GRAFT_BENCH_MAX_WAIT_SEC (default 900).
-    * @return (waited seconds, still-over-gate after the bounded wait) */
-  private def loadGate(): (Int, Boolean) = {
-    val gate = sys.env.get("SPARK_GRAFT_BENCH_MAX_LOAD")
-      .flatMap(_.toDoubleOption).getOrElse(4.0)
-    val maxWait = sys.env.get("SPARK_GRAFT_BENCH_MAX_WAIT_SEC")
-      .flatMap(_.toIntOption).getOrElse(900)
+  /** Gate constants, sized on the 32-core r13-r18 host. LOAD GATE
+    * (r15): the r14 official record ran at loadavg 27.99 on that host and
+    * read +33% vs two same-HEAD controlled boards — external load, not
+    * the engine — so before any timing starts Bench waits (bounded) for
+    * [[gateLoad]] to fall under 4.0 (~12% of 32 cores). FLOOR GATE
+    * (r18): neither the load gate nor the calib probe sees per-job
+    * ceremony degradation (the r17 board-host saga: floor 0.147-0.196 vs
+    * the record's 0.102 on hosts with normal calib and loadavg under the
+    * gate), so Bench also waits for the floor probe itself to fall under
+    * 0.135 s — clean windows on that host class measured 0.095-0.120,
+    * degraded ones 0.147-0.196. Both waits and verdicts land in the env
+    * block, so a board that STILL started loaded or degraded carries the
+    * evidence on its face. */
+  private val MaxLoad = 4.0
+  private val MaxLoadWaitSec = 900
+  private val MaxFloorSec = 0.135
+  private val MaxFloorWaitSec = 600
+
+  /** A warm run above this many seconds looks JIT-contaminated and is
+    * retried (see [[timeRow]]). Right for the sf0.1 board, where steady
+    * rows are sub-second; an sf1 row over it pays at most one extra run
+    * when that run does not improve. */
+  private val SlowSec = 2.0
+
+  /** One bounded gate: sample; while the sample is over `limit` and the
+    * wait is under `maxWaitSec`, log, sleep `stepSec` and resample. ONE
+    * sample per iteration feeds the loop condition, the log line and the
+    * verdict (r17, ADVICE: separate samples could disagree).
+    * @return (waited seconds, still over `limit`, last sample) */
+  private def boundedWait(what: String, limit: Double, maxWaitSec: Int,
+                          stepSec: Int)(sample: () => Double): (Int, Boolean, Double) = {
     var waited = 0
-    // ONE gateLoad() sample per iteration, reused by the loop condition,
-    // the log line, and the returned verdict (r17, ADVICE): separate
-    // samples could disagree — e.g. report a clean verdict after a
-    // timeout iteration whose gating sample was still over, or over-gate
-    // after a clean exit.
-    var load = gateLoad()
-    while (load > gate && waited < maxWait) {
+    var v = sample()
+    while (v > limit && waited < maxWaitSec) {
       System.err.println(
-        f"bench load gate: effective loadavg $load%.2f " +
-          s"(max of 1-min, 0.7*5-min; raw ${loadAvg()}) > $gate — " +
-          s"waiting ($waited/$maxWait s)")
-      Thread.sleep(10000)
-      waited += 10
-      load = gateLoad()
+        f"bench $what gate: $v%.3f > $limit%.3f — waiting ($waited/$maxWaitSec s)")
+      Thread.sleep(stepSec * 1000L)
+      waited += stepSec
+      v = sample()
     }
-    (waited, load > gate)
+    (waited, v > limit, v)
+  }
+
+  /** The per-row timing rule. The cold run carries one-time codegen/JIT
+    * cost; stateful io_/st_ rows rebuild their scratch state each call,
+    * so a second run is the same work minus the JIT. Retry while the
+    * best warm run still looks contaminated: either JIT-slow in absolute
+    * terms (> [[SlowSec]]) or slower than its own cold run by >20% (the
+    * cold run proves the plan can go faster — a warm exceeding it is
+    * collector/compiler noise, not plan cost). At most twice more, and a
+    * non-improving retry (not under 0.75× the best) stops retrying; a
+    * failed run (`failed()` true) stops the row at once. A row with state
+    * priming pays it only in the cold run, so cold is an upper bound on
+    * the steady plan and the min over ALL runs is the least-contaminated
+    * steady-state estimate (round 8: t_doc_terms reported 11.0 s warm
+    * while its own cold run proved 2.6 s).
+    * @return (cold seconds, min over cold and every warm run) */
+  private[graft] def timeRow(run: () => Double,
+                             failed: () => Boolean): (Double, Double) = {
+    val cold = run()
+    var warm = if (failed()) cold else run()
+    var retries = 0
+    while (!failed() && retries < 2 && (warm > SlowSec || warm > cold * 1.2)) {
+      val t = run()
+      val improved = t < warm * 0.75
+      warm = math.min(warm, t)
+      retries = if (improved) retries + 1 else 2
+    }
+    (cold, math.min(cold, warm))
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val (loadWaitSec, loadGateExceeded) = loadGate()
+    val (loadWaitSec, loadGateExceeded, _) =
+      boundedWait("load", MaxLoad, MaxLoadWaitSec, 10)(() => gateLoad())
     val loadPre = loadAvg()
     val calibPre = calibrate()
     val spark = graft.core.GraftSession.local(appName = "graft-bench")
@@ -133,38 +172,8 @@ object Bench {
       (1 to 2).foreach(_ => once())
       (1 to 5).map(_ => once()).min
     }
-    // FLOOR GATE (r18, verdict item 2): the load gate reads host run-queue
-    // averages and the calib probe reads single-thread CPU speed — NEITHER
-    // sees the per-job ceremony degradation the r17 board-host saga
-    // documented (floor 0.147-0.196 vs the record's 0.102 on hosts whose
-    // calib was NORMAL-to-fast and loadavg under the gate; every one of
-    // the four degraded final-HEAD boards self-rejected on its floor
-    // probe while both existing gates passed). Gate on the floor probe
-    // itself: re-probe (bounded wait) until it falls under the threshold,
-    // and record the wait plus the verdict in the env block so a board
-    // that STILL started degraded carries the evidence on its face —
-    // same additions-only discipline as the load gate. The threshold is
-    // absolute (not relative to floor_ref: the prior board's own floor
-    // may be a degraded one — r17's was 0.155 — and a relative gate
-    // would ratchet silently): clean windows on this host class measure
-    // 0.095-0.120, degraded ones 0.147-0.196, so 0.135 splits them.
-    // Overridable: SPARK_GRAFT_BENCH_MAX_FLOOR (default 0.135) and
-    // SPARK_GRAFT_BENCH_MAX_FLOOR_WAIT_SEC (default 600).
-    val floorGate = sys.env.get("SPARK_GRAFT_BENCH_MAX_FLOOR")
-      .flatMap(_.toDoubleOption).getOrElse(0.135)
-    val floorMaxWait = sys.env.get("SPARK_GRAFT_BENCH_MAX_FLOOR_WAIT_SEC")
-      .flatMap(_.toIntOption).getOrElse(600)
-    var floorSec = floorProbe()
-    var floorWaitSec = 0
-    while (floorSec > floorGate && floorWaitSec < floorMaxWait) {
-      System.err.println(
-        f"bench floor gate: floor probe $floorSec%.3f s > $floorGate%.3f — " +
-          s"waiting ($floorWaitSec/$floorMaxWait s)")
-      Thread.sleep(20000)
-      floorWaitSec += 20
-      floorSec = floorProbe()
-    }
-    val floorGateExceeded = floorSec > floorGate
+    val (floorWaitSec, floorGateExceeded, floorSec) =
+      boundedWait("floor", MaxFloorSec, MaxFloorWaitSec, 20)(() => floorProbe())
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // per-query sequence of (wallSec, gcSec-during-run) — diagnosis trail
     // for warm>cold anomalies (is a slow run compute or collector time?)
@@ -191,98 +200,9 @@ object Bench {
         (sec, (gcMillis() - g0) / 1e3)
       sec
     }
-    val prelim = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val cold = runOnce(name, fn)
-      // stateful io_/st_ queries rebuild their scratch state each call, so
-      // a second run is the same work minus the one-time JIT
-      var warm = if (errors.contains(name)) cold else runOnce(name, fn)
-      // retry while the best timed run still looks contaminated: either
-      // JIT-slow in absolute terms (> slowSec) or slower than its own
-      // cold run by >20% (the cold run proves the plan can go faster — a
-      // warm exceeding it is collector/compiler noise, not plan cost).
-      // At most twice more; genuinely-slow queries stop after one
-      // non-improving retry. slowSec defaults to 2 s — right for the
-      // driver's sf0.1 board where steady rows are sub-second; a larger
-      // scale factor (the sf1 board) sets SPARK_GRAFT_BENCH_SLOW_SEC
-      // higher so "slow because 10x the data" doesn't masquerade as
-      // "slow because JIT" and triple the run.
-      val slowSec = sys.env.get("SPARK_GRAFT_BENCH_SLOW_SEC")
-        .map(_.toDouble).getOrElse(2.0)
-      var retries = 0
-      while (!errors.contains(name) && retries < 2 &&
-             (warm > slowSec || warm > cold * 1.2)) {
-        val t = runOnce(name, fn)
-        val improved = t < warm * 0.75
-        warm = math.min(warm, t)
-        retries = if (improved) retries + 1 else 2
-      }
-      // a query with state priming (io_/st_ ensureOnce/drainOnce) pays
-      // priming only in the cold run, so cold is an upper bound on the
-      // steady plan and the min over ALL runs is the least-contaminated
-      // steady-state estimate (round 8: t_doc_terms reported 11.0 s warm
-      // while its own cold run proved 2.6 s — min-of-warm-only let the
-      // contaminated retries stand)
-      (name, cold, math.min(cold, warm))
-    }
-    // Isolation pass against the prior round: a row whose best run is
-    // >2x its committed prior-round best is re-measured after the whole
-    // catalog has churned through (full JIT, GC quiesced) before the
-    // number is accepted — real regressions reproduce, host noise does
-    // not. Prior bests come from the newest BENCH_r*.json in cwd (its
-    // stdout-parsed map holds exactly the slow rows worth re-checking).
-    val (prior: Map[String, Double], calibRef: Option[Double],
-         floorRef: Option[Double]) = {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      def asDouble(v: JValue): Option[Double] = v match {
-        case JDouble(d) => Some(d)
-        case JInt(i) => Some(i.toDouble)
-        case _ => None
-      }
-      // numeric round sort: lexicographic getName order breaks the first
-      // time zero-padding is outgrown (r100 < r99) or absent (r9 > r10)
-      val files = Option(new java.io.File(".").listFiles()).toSeq.flatten
-        .filter(f => f.getName.matches("BENCH_r\\d+\\.json"))
-        .sortBy(f => f.getName.filter(_.isDigit).toInt)
-      files.lastOption.flatMap { f =>
-        try {
-          val root = JsonMethods.parse(java.nio.file.Files.readString(f.toPath))
-          val qs = (root \ "parsed" \ "queries") match {
-            case JObject(fields) => fields.flatMap { case (k, v) =>
-              asDouble(v).map(k -> _) }
-            case _ => Nil
-          }
-          // the committed record's own host-speed probe — the reference
-          // point the calib-normalized total is expressed against
-          val calib = asDouble(root \ "parsed" \ "env" \ "calib_pre_sec")
-          // ... and its floor probe — the reference for the
-          // floor-normalized total (see totalFloorNorm below)
-          val floor = asDouble(root \ "parsed" \ "env" \ "floor_probe_sec")
-          Some((qs.toMap, calib, floor))
-        } catch { case _: Throwable => None }
-      }.getOrElse((Map.empty[String, Double], None, None))
-    }
-    val rerunErrors = scala.collection.mutable.Map[String, String]()
-    val results = prelim.map { case (name, cold, best) =>
-      val suspect = !errors.contains(name) &&
-        prior.get(name).exists(p => best > p * 2.0 && best - p > 0.5)
-      if (!suspect) (name, cold, best)
-      else {
-        System.gc(); Thread.sleep(200)
-        val rerun = (1 to 2).map(_ => runOnce(name, fn = SparkEntry.queries(name))).min
-        // the rerun exists only to LOWER an already-valid measurement; a
-        // transient rerun failure (heap churn after 200 queries, flaky
-        // scratch FS) must neither invalidate the main pass's accepted
-        // number nor let a fail-fast wall time masquerade as a timing —
-        // but an intermittently-failing query must stay VISIBLE, so the
-        // discarded failure is recorded in bench_detail's rerun_errors
-        val rerunOk = !errors.contains(name)
-        if (!rerunOk) {
-          rerunErrors(name) = errors(name)
-          errors.remove(name)
-        }
-        (name, cold, if (rerunOk) math.min(best, rerun) else best)
-      }
+    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val (cold, best) = timeRow(() => runOnce(name, fn), () => errors.contains(name))
+      (name, cold, best)
     }
     val ok = results.filterNot { case (k, _, _) => errors.contains(k) }
     val es = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
@@ -315,32 +235,8 @@ object Bench {
     // bare host, not leftover executor threads.
     val loadPost = loadAvg()
     val calibPost = calibrate()
-    // Calib-normalized total (r16 verdict item 3): total · (calib_ref /
-    // calib_pre), where calib_ref is the committed prior record's own
-    // pre-board probe — the board's total expressed at the PRIOR
-    // record's host speed, so cross-host adjudication ("my 80.79 vs the
-    // 74.18 record is calib-explained") is one subtraction the artifact
-    // does itself. Normalization by the fixed-work probe ratio assumes
-    // CPU-speed-proportional rows, which the sf0.1 board is (floor +
-    // kernel dominated); the raw total stays the primary number.
-    val totalNorm = calibRef.map(c => total * c / calibPre)
-    val normJson = totalNorm.map(num("%.2f", _)).getOrElse("null")
-    // Floor-normalized total (r17): the calib probe is pure
-    // single-threaded register ALU work and CANNOT see host-side IO or
-    // scheduler degradation — measured twice this round: boards on
-    // "quiet" hosts with normal calib but floor 0.147-0.196 (vs the
-    // record's 0.102) read +10 to +34 s with every untouched row
-    // uniformly inflated. The floor probe (a full plan + schedule +
-    // one-stage aggregate + noop-sink job) DOES see it, and each
-    // reported row pays the floor once, so the board expressed at the
-    // prior record's floor is total − n·(floor − floor_ref).
-    // First-order only: multi-stage rows pay MORE degradation than one
-    // floor each, so this under-corrects on a degraded host — the raw
-    // total stays primary and calib/floor normalizations stay separate
-    // fields (orthogonal causes: CPU speed vs per-job ceremony).
-    val totalFloorNorm = floorRef.map(fr => total - ok.size * (floorSec - fr))
-    val floorNormJson = totalFloorNorm.map(num("%.2f", _)).getOrElse("null")
     val env = s""""env":{"cores":${Runtime.getRuntime.availableProcessors()},""" +
+      s""""heap_mb":${Runtime.getRuntime.maxMemory() >> 20},""" +
       s""""load_pre":"$loadPre","load_post":"$loadPost",""" +
       s""""load_wait_sec":$loadWaitSec,""" +
       s""""load_gate_exceeded":$loadGateExceeded,""" +
@@ -348,21 +244,17 @@ object Bench {
       s""""floor_gate_exceeded":$floorGateExceeded,""" +
       s""""calib_pre_sec":${num("%.2f", calibPre)},""" +
       s""""calib_post_sec":${num("%.2f", calibPost)},""" +
-      s""""calib_ref_sec":${calibRef.map(num("%.2f", _)).getOrElse("null")},""" +
-      s""""floor_probe_sec":${num("%.3f", floorSec)},""" +
-      s""""floor_ref_sec":${floorRef.map(num("%.3f", _)).getOrElse("null")}}"""
+      s""""floor_probe_sec":${num("%.3f", floorSec)}}"""
     val detail =
-      s"""{"metric":"total","value":$total,"value_calib_norm":$normJson,"value_floor_norm":$floorNormJson,"unit":"sec","n_queries":${ok.size},
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${ok.size},
          |"queries":${fmt(bySlowest)},
          |"cold_queries":${fmt(results.map { case (k, c, _) => (k, c) })},
          |"runs":$runsJson,
          |"errors":$es,
-         |"rerun_errors":${rerunErrors.map { case (k, v) =>
-             "\"" + k + "\":\"" + v + "\"" }.mkString("{", ",", "}")},
          |$env,
          |"sf":"$sfDir"}""".stripMargin.replace("\n", "")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_detail.json"), detail)
-    println(s"""{"metric":"total","value":${num("%.2f", total)},"value_calib_norm":$normJson,"value_floor_norm":$floorNormJson,"unit":"sec","n_queries":${ok.size},"queries":${fmt(keep)},"errors":$es,$env,"detail":"bench_detail.json","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${num("%.2f", total)},"unit":"sec","n_queries":${ok.size},"queries":${fmt(keep)},"errors":$es,$env,"detail":"bench_detail.json","sf":"$sfDir"}""")
   }
 }

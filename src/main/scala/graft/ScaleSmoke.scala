@@ -256,8 +256,12 @@ object ScaleSmoke {
       def once() = org.apache.spark.sql.graft.GraftSql
         .stripTrailingSort(SparkEntry.queries(name)(spark, dir))
         .write.format("noop").mode("overwrite").save()
-      if (warmup) once() // warm (codegen/JIT)
-      time(once())
+      // reliable-mode scratch stays bounded by ONE run's
+      // materializations (the sink write fully consumed them)
+      if (warmup) { // warm (codegen/JIT)
+        once(); graft.core.Materialize.releaseScratch(spark)
+      }
+      try time(once()) finally graft.core.Materialize.releaseScratch(spark)
     }
     println(f"${"query"}%-26s ${"1x_sec"}%8s ${s"${k}x_sec"}%8s ${"ratio"}%6s")
     names.foreach { n =>

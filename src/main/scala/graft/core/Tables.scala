@@ -22,9 +22,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * which the 215-row oracle board re-proves on the repacked reads),
   * rebuilt when the source mtime moves (the version dir name carries the
   * source mtime, superseding the old `<=` marker-mtime contract), and
-  * bypassed for already-multi-file sources (twin boards), small tables,
-  * and under `SPARK_GRAFT_RAW_SCANS=1` (the escape hatch that reads the
-  * originals directly; any other value leaves the repack on).
+  * bypassed for already-multi-file sources (twin boards) and small
+  * tables.
   *
   * CROSS-PROCESS SAFETY (round 14): the served repack path appears only
   * via an atomic rename of a fully-written staging dir, so a concurrent
@@ -51,17 +50,12 @@ object Tables {
     sys.env.getOrElse("SPARK_GRAFT_REPACK_DIR",
       s"${System.getProperty("java.io.tmpdir")}/graft_repack")
 
-  /** The documented escape-hatch contract: ONLY the literal "1"
-    * disables the repack (SPARK_GRAFT_RAW_SCANS=0 leaves it on). */
-  private[graft] def rawScansRequested(v: Option[String]): Boolean =
-    v.contains("1")
-
   /** Analyzed-frame cache (r14, rekeyed r15): `spark.read.parquet` pays
     * directory listing + footer schema read + analysis on EVERY call —
     * ~60 ms per base-table reference on this host (FloorProbe
     * decomposition), and a bench board references tables ~800 times. A
     * catalog caches table metadata; this is that cache: one immutable
-    * DataFrame per (session, dir, table, raw-flag) at the CURRENT source
+    * DataFrame per (session, dir, table) at the CURRENT source
     * mtime. Hash-neutral by construction (same files, same schema — the
     * Dataset is immutable and every caller builds fresh plans on top).
     *
@@ -80,7 +74,7 @@ object Tables {
     *   - the inner key carries NO mtime — the mtime lives in the value,
     *     so a regenerated testdata dir REPLACES the stale frame instead
     *     of accumulating one frame per generation;
-    *   - the value records the served repack version dir (None for raw /
+    *   - the value records the served repack version dir (None for
     *     unpacked reads); a hit whose version dir has vanished (another
     *     process swept it after regeneration + grace) re-resolves
     *     instead of serving a frame over deleted files. */
@@ -88,7 +82,7 @@ object Tables {
   private final class SessionFrames {
     @volatile var lastUse: Long = System.nanoTime()
     val frames = new java.util.concurrent.ConcurrentHashMap[
-      (String, String, Boolean), (Long, DataFrame, Option[java.io.File])]()
+      (String, String), (Long, DataFrame, Option[java.io.File])]()
   }
   private val frameCache =
     new java.util.concurrent.ConcurrentHashMap[SparkSession, SessionFrames]()
@@ -111,27 +105,25 @@ object Tables {
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val src = new java.io.File(s"$sfDir/$name.parquet")
-    val raw = rawScansRequested(sys.env.get("SPARK_GRAFT_RAW_SCANS"))
     if (!src.exists()) return spark.read.parquet(src.getPath)
     frameCacheSweep()
     val sf = frameCache.computeIfAbsent(spark, _ => new SessionFrames)
     sf.lastUse = System.nanoTime()
-    val key = (new java.io.File(sfDir).getCanonicalPath, name, raw)
+    val key = (new java.io.File(sfDir).getCanonicalPath, name)
     val mtime = src.lastModified()
     val cur = sf.frames.get(key)
     val valid = cur != null && cur._1 == mtime &&
       cur._3.forall(_.exists())
     if (valid) cur._2
     else {
-      val (df, served) = resolve(spark, sfDir, name, src, raw)
+      val (df, served) = resolve(spark, sfDir, name, src)
       sf.frames.put(key, (mtime, df, served))
       df
     }
   }
 
   private def resolve(spark: SparkSession, sfDir: String, name: String,
-                      src: java.io.File, raw: Boolean): (DataFrame, Option[java.io.File]) = {
-    if (raw) return (spark.read.parquet(src.getPath), None)
+                      src: java.io.File): (DataFrame, Option[java.io.File]) = {
     val (bytes, parts) =
       if (src.isFile) (src.length(), 1)
       else {

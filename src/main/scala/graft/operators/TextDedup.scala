@@ -382,7 +382,6 @@ object TextDedup {
     val shHashed = base.select(col(idCol), col("__shh").as("__sh"))
     CollapsedPairs(
       verifyJaccard(cand, shHashed, idCol, threshold,
-        jaccardSortedAtLeast(threshold),
         broadcastShingles = broadcastVerify.getOrElse(false)),
       c.dupMembers, c.expand)
   }
@@ -596,7 +595,6 @@ object TextDedup {
     val (expand, shHashed, _, _, cand) = simhashInternals(docs, idCol,
       textCol, shingleN, maxHamming, numBands, minShingles)
     expand(verifyJaccard(cand, shHashed, idCol, threshold,
-      jaccardSortedAtLeast(threshold),
       broadcastShingles = broadcastVerify.getOrElse(false)))
   }
 
@@ -777,8 +775,7 @@ object TextDedup {
     // codegen stage, staging NOTHING.
     def pairsOf(blk: DataFrame): DataFrame =
       verifyJaccard(blockedCandJoin(blk, idCol, blockWidth, streamParallelism),
-        sh, idCol, threshold, jaccardSortedAtLeast(threshold),
-        broadcastShingles = bcastVerify)
+        sh, idCol, threshold, broadcastShingles = bcastVerify)
     val pairs =
       if (shards <= 1) pairsOf(blocked)
       else {
@@ -1159,9 +1156,7 @@ object TextDedup {
     // partitioning — still exactly ONE exchange, now at full width.
     val cand = prefixCandidatesFrom(sh, idCol, threshold)
       .repartition(col("a"), col("b")).distinct()
-    expand(verifyJaccard(cand, sh, idCol, threshold,
-      jaccardSortedAtLeast(threshold),
-      broadcastShingles = bcast))
+    expand(verifyJaccard(cand, sh, idCol, threshold, broadcastShingles = bcast))
   }
 
   /** The measured blocked-vs-prefix routing threshold (SCALING.md
@@ -1276,9 +1271,11 @@ object TextDedup {
       .select(col(s"__pf_x.$idCol").as("a"), col(s"__pf_y.$idCol").as("b"))
   }
 
-  /** Join candidate (a, b) pairs back to shingle arrays and keep pairs at
-    * or above the exact-Jaccard threshold. `jac` is the pairwise kernel —
-    * [[jaccard]] for string arrays, [[jaccardSorted]] for hashed ones.
+  /** Join candidate (a, b) pairs back to hashed (`array<long>`, sorted)
+    * shingle arrays and keep pairs at or above the exact-Jaccard
+    * threshold; the kernel is [[jaccardSortedAtLeast]]. Every verify side
+    * also carries the 64-byte parity sketch (r17): the bound check below
+    * skips the merge kernel on provably-under-threshold pairs.
     *
     * `broadcastShingles` is the scale lever (r15): with it, both array
     * lookups become explicit broadcast hash probes and the candidate
@@ -1294,21 +1291,7 @@ object TextDedup {
     * array side fits [[ngramBroadcastBudgetBytes]]. */
   private def verifyJaccard(cand: DataFrame, shingled: DataFrame,
                             idCol: String, threshold: Double,
-                            jac: (Column, Column) => Column = jaccard,
-                            broadcastShingles: Boolean = false): DataFrame = {
-    val hint: DataFrame => DataFrame =
-      if (broadcastShingles) broadcast(_) else identity
-    // hashed (array<long>) shingles additionally carry the 64-byte
-    // parity sketch (r17): the bound check below skips the merge kernel
-    // on provably-under-threshold pairs. String-shingle callers skip it
-    // (the sketch is defined over the hashed form; all catalog verify
-    // paths are hashed).
-    val hashed = shingled.schema.fields.exists(f =>
-      f.name == "__sh" && (f.dataType match {
-        case org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType, _) => true
-        case _ => false
-      }))
+                            broadcastShingles: Boolean): DataFrame = {
     // TWO-TIER probe (r17, after the parity filter landed): on a
     // candidate-heavy low-precision stream (m100 blocked ngram: 3.02e9
     // candidates, 99.15% fail t=0.6) the per-candidate cost is random
@@ -1326,9 +1309,8 @@ object TextDedup {
     // this shape, and PlanAuditSpec asserts the 4-probe plan. Everything
     // still fuses into ONE codegen stage (BHJ chains + filters), so
     // candidates stage nothing, exactly as before. Without the broadcast
-    // (the shard path) or without hashed shingles (string-shingle
-    // callers) the verify keeps the one-tier shape below.
-    val tiered = hashed && broadcastShingles
+    // (the shard path) the verify keeps the one-tier shape below.
+    //
     // The pre-kernel predicates and the kernel tail, ONCE for both
     // shapes (r18, ADVICE): a threshold or slack change applied to one
     // shape only would silently desynchronize them.
@@ -1341,10 +1323,11 @@ object TextDedup {
       least(nA, nB) >= lit(threshold) * greatest(nA, nB)
     def kernelTail(survivors: DataFrame): DataFrame =
       survivors
-        .withColumn("jaccard", jac(col("__sha"), col("__shb")))
+        .withColumn("jaccard",
+          jaccardSortedAtLeast(threshold)(col("__sha"), col("__shb")))
         .filter(col("jaccard") >= threshold)
         .select(col("a"), col("b"), col("jaccard"))
-    if (tiered) {
+    if (broadcastShingles) {
       val skinny = shingled.select(col(idCol), size(col("__sh")).as("__n"),
         paritySketchOf(col("__sh")).as("__pk"))
       def sk(as: String, n: String, sg: String) = broadcast(skinny.select(
@@ -1359,20 +1342,14 @@ object TextDedup {
         shingled.select(col(idCol).as(as), col("__sh").as(sh)))
       kernelTail(pruned.join(ft("a", "__sha"), "a").join(ft("b", "__shb"), "b"))
     } else {
-      def side(as: String, sh: String, sg: String) = {
-        val base = shingled.select(col(idCol).as(as), col("__sh").as(sh))
-        hint(if (hashed) base.withColumn(sg, paritySketchOf(col(sh))) else base)
-      }
-      val sa = side("a", "__sha", "__pka")
-      val sb = side("b", "__shb", "__pkb")
-      val joined = cand.join(sa, "a").join(sb, "b")
+      def side(as: String, sh: String, sg: String) =
+        shingled.select(col(idCol).as(as), col("__sh").as(sh))
+          .withColumn(sg, paritySketchOf(col(sh)))
+      val joined = cand.join(side("a", "__sha", "__pka"), "a")
+        .join(side("b", "__shb", "__pkb"), "b")
         .filter(sizeRatioOk(size(col("__sha")), size(col("__shb"))))
-      val bounded =
-        if (hashed)
-          joined.filter(paritySketchPasses(threshold)(
-            col("__pka"), col("__pkb"), size(col("__sha")), size(col("__shb"))))
-        else joined
-      kernelTail(bounded)
+      kernelTail(joined.filter(paritySketchPasses(threshold)(
+        col("__pka"), col("__pkb"), size(col("__sha")), size(col("__shb")))))
     }
   }
 

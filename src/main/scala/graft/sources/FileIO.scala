@@ -198,14 +198,9 @@ object FileIO {
     * can leave millions). Sizing comes from the actual on-disk bytes,
     * not a row-count guess, so output files land near targetBytes
     * regardless of schema width. The rewrite goes to a temp directory
-    * and swaps in via two renames (never an in-place overwrite of the
-    * directory being read); every failure path deletes its debris and
-    * restores the original table. The two renames are not jointly
-    * atomic: a JVM crash exactly between them leaves the table at
-    * `path + "__compact_old"` — the next run detects that leftover at
-    * entry and restores it automatically (table absent → rename back;
-    * table present → retry the backup delete), so the window self-heals
-    * and is never silent data loss. Returns
+    * and swaps in via [[swapIn]] (never an in-place overwrite of the
+    * directory being read), with `path + "__compact_old"` as the backup
+    * that [[recoverSwap]] restores on the next run's entry. Returns
     * (filesBefore, filesAfter); (0,0) when there is nothing to compact
     * (missing, empty, or non-flat directory).
     *
@@ -217,20 +212,8 @@ object FileIO {
                      targetBytes: Long = 128L << 20): (Int, Int) = {
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // automated recovery from a prior run's crash window: a leftover
-    // __compact_old with the table absent means the JVM died between the
-    // two swap renames — restore it; with the table present it means only
-    // the final cleanup delete failed — retry that delete.
-    val stale = new org.apache.hadoop.fs.Path(path + "__compact_old")
-    if (fs.exists(stale)) {
-      if (!fs.exists(hPath)) {
-        if (!fs.rename(stale, hPath))
-          throw new IllegalStateException(
-            s"compact recovery: could not restore $stale to $path")
-      } else if (!fs.delete(stale, true))
-        throw new IllegalStateException(
-          s"compact recovery: could not delete stale backup $stale")
-    }
+    val bak = new org.apache.hadoop.fs.Path(path + "__compact_old")
+    recoverSwap(fs, hPath, bak, "compact")
     if (!fs.exists(hPath)) return (0, 0)
     val files = fs.listStatus(hPath)
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
@@ -241,24 +224,62 @@ object FileIO {
     val tmp = new org.apache.hadoop.fs.Path(path + "__compact_swap")
     fs.delete(tmp, true)
     compacted.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val bak = new org.apache.hadoop.fs.Path(path + "__compact_old")
-    fs.delete(bak, true)
-    if (!fs.rename(hPath, bak)) {
-      fs.delete(tmp, true) // a full table copy must not linger as debris
-      throw new IllegalStateException(s"compact: could not move $path aside")
+    swapIn(fs, tmp, hPath, bak, "compact")
+    (files.length, nOut)
+  }
+
+  /** Crash recovery for [[swapIn]], run on entry BEFORE the table at
+    * `path` is read: a leftover `bak` with the table absent means the
+    * JVM died between the two swap renames — restore it; with the table
+    * present it means only the final cleanup delete failed — retry that
+    * delete. */
+  private[graft] def recoverSwap(fs: org.apache.hadoop.fs.FileSystem,
+                                 path: org.apache.hadoop.fs.Path,
+                                 bak: org.apache.hadoop.fs.Path,
+                                 what: String): Unit =
+    if (fs.exists(bak)) {
+      if (!fs.exists(path)) {
+        if (!fs.rename(bak, path))
+          throw new IllegalStateException(
+            s"$what recovery: could not restore $bak to $path")
+      } else if (!fs.delete(bak, true))
+        throw new IllegalStateException(
+          s"$what recovery: could not delete stale backup $bak")
     }
-    if (!fs.rename(tmp, hPath)) {
-      fs.rename(bak, hPath) // restore — the table must never vanish
-      fs.delete(tmp, true)
-      throw new IllegalStateException(s"compact swap rename failed for $path")
+
+  /** Swap the fully-written directory `fresh` in as `path` by two
+    * renames: move the table aside to `bak`, rename `fresh` in
+    * (restoring `bak` if that fails), then delete `bak`. Every failure
+    * path deletes its debris and leaves the original table in place; an
+    * absent `path` (a first write) is simply renamed into. The two
+    * renames are not jointly atomic: a JVM crash exactly between them
+    * leaves the table at `bak` and no `path`, which the next entry's
+    * [[recoverSwap]] restores — the window self-heals and is never
+    * silent data loss. */
+  private[graft] def swapIn(fs: org.apache.hadoop.fs.FileSystem,
+                            fresh: org.apache.hadoop.fs.Path,
+                            path: org.apache.hadoop.fs.Path,
+                            bak: org.apache.hadoop.fs.Path,
+                            what: String): Unit = {
+    val hadTable = fs.exists(path)
+    if (hadTable) {
+      fs.delete(bak, true)
+      if (!fs.rename(path, bak)) {
+        fs.delete(fresh, true) // a full table copy must not linger as debris
+        throw new IllegalStateException(s"$what: could not move $path aside")
+      }
     }
-    if (!fs.delete(bak, true))
+    if (!fs.rename(fresh, path)) {
+      if (hadTable) fs.rename(bak, path) // restore — the table must never vanish
+      fs.delete(fresh, true)
+      throw new IllegalStateException(s"$what swap rename failed for $path")
+    }
+    if (hadTable && !fs.delete(bak, true))
       // a full table copy must not linger silently; next run's entry
       // recovery retries this delete, so surface it rather than hide it
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"compact: could not delete backup $bak — a full table copy " +
-          "remains on disk; the next compact run will retry the delete")
-    (files.length, nOut)
+        s"$what: could not delete backup $bak — a full table copy " +
+          s"remains on disk; the next $what run will retry the delete")
   }
 
   /** GDPR-style tombstone delete propagation over a partitioned parquet

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.FileIO
 import org.apache.spark.sql.{DataFrame, Row, SaveMode}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -28,15 +29,17 @@ object Upsert {
     * checkpoint processes only NEW source files — restartable and
     * exactly-once from the sink's perspective.
     *
-    * The merged frame is written to a TEMP directory and swapped in
-    * (Hadoop FileSystem rename, works on local FS and HDFS) — never an
-    * in-place overwrite of the directory the merge is reading: a
-    * cache-as-barrier overwrite would recompute lost partitions from an
-    * already-deleted path on executor failure. Only a missing target
-    * path falls back to an empty target; any OTHER read failure (e.g. a
-    * half-written directory from a crashed swap) propagates — silently
-    * rebuilding from one batch would discard all previously merged
-    * keys. */
+    * The merged frame is written to a TEMP directory and swapped in by
+    * [[graft.sources.FileIO.swapIn]] (Hadoop FileSystem renames, work on
+    * local FS and HDFS) — never an in-place overwrite of the directory
+    * the merge is reading: a cache-as-barrier overwrite would recompute
+    * lost partitions from an already-deleted path on executor failure.
+    * Each batch first runs the swap's crash recovery, so a crash between
+    * the swap renames restores the table from `targetDir + "__old"`
+    * before it is read. Only a missing target path then falls back to
+    * an empty target; any OTHER read failure (e.g. a corrupt directory)
+    * propagates — silently rebuilding from one batch would discard all
+    * previously merged keys. */
   def startParquetUpsert(source: DataFrame, targetDir: String,
                          checkpointDir: String, keys: Seq[String],
                          orderCols: Seq[String]): StreamingQuery =
@@ -47,6 +50,8 @@ object Upsert {
         val spark = batch.sparkSession
         val hadoopPath = new org.apache.hadoop.fs.Path(targetDir)
         val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val bak = new org.apache.hadoop.fs.Path(targetDir + "__old")
+        FileIO.recoverSwap(fs, hadoopPath, bak, "upsert")
         val target =
           if (fs.exists(hadoopPath)) spark.read.parquet(targetDir)
           else batch.limit(0).toDF()
@@ -54,13 +59,9 @@ object Upsert {
           target.unionByName(batch.toDF()), keys, orderCols.map(col))
         val tmpDir = targetDir + "__swap"
         merged.write.mode(SaveMode.Overwrite).parquet(tmpDir)
-        fs.delete(hadoopPath, true)
-        // rename signals failure by RETURN VALUE; ignoring it would leave
-        // the target deleted and the next batch would silently rebuild
-        // from scratch — fail the batch instead (checkpoint replays it)
-        require(fs.rename(new org.apache.hadoop.fs.Path(tmpDir), hadoopPath),
-          s"upsert swap rename $tmpDir -> $targetDir failed")
-        ()
+        // a failed swap throws, failing the batch (checkpoint replays it)
+        FileIO.swapIn(fs, new org.apache.hadoop.fs.Path(tmpDir), hadoopPath,
+          bak, "upsert")
       }
       .start()
 }

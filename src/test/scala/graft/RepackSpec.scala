@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * repackInto is called BELOW Tables' JVM-local lock, so these threads
   * race exactly where two JVMs would) all resolve a complete,
   * value-identical dir; crash remnants (.tmp_* orphans) are never
-  * served and get swept; RAW_SCANS honors only the literal "1". */
+  * served and get swept. */
 class RepackSpec extends SparkSpec {
 
   private def freshBase(): File = {
@@ -130,13 +130,5 @@ class RepackSpec extends SparkSpec {
     val v = graft.core.Tables.repackInto(spark, src, b, "t", 8L << 20)
     assert(spark.read.parquet(v.getPath).count() == 20000)
     assert(!orphan.exists(), "hour-old crash remnant should be swept")
-  }
-
-  test("RAW_SCANS contract: only the literal \"1\" disables the repack") {
-    import graft.core.Tables.rawScansRequested
-    assert(rawScansRequested(Some("1")))
-    assert(!rawScansRequested(Some("0")))
-    assert(!rawScansRequested(Some("true")))
-    assert(!rawScansRequested(None))
   }
 }

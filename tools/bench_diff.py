@@ -62,15 +62,6 @@ def load(spec):
     truncated = n_queries is not None and len(queries) < n_queries
     return {
         "total": parsed.get("value"),
-        # artifact-carried normalized total (r17): the board's total at
-        # its PRIOR record's host speed, total * calib_ref/calib_pre
-        "total_norm": parsed.get("value_calib_norm"),
-        # floor-normalized total (r17): the board at its prior record's
-        # per-job harness floor — catches IO/scheduler degradation the
-        # single-threaded calib probe cannot see
-        "total_floor_norm": parsed.get("value_floor_norm"),
-        "calib_ref": env.get("calib_ref_sec"),
-        "floor_ref": env.get("floor_ref_sec"),
         "queries": queries,
         "n_queries": n_queries,
         "truncated": truncated,
@@ -154,15 +145,6 @@ def main():
         print(f"totals at OLD board's harness floor: {old['total']} -> "
               f"{adj:.2f} s  (new total - n*(floor_new-floor_old) = "
               f"{nf}-{of} over {new['n_queries']} rows)")
-    for side, art in (("old", old), ("new", new)):
-        if art["total_norm"] is not None:
-            print(f"{side} artifact's own calib-normalized total: "
-                  f"{art['total_norm']} s (vs its prior record's calib "
-                  f"{art['calib_ref']})")
-        if art["total_floor_norm"] is not None:
-            print(f"{side} artifact's own floor-normalized total: "
-                  f"{art['total_floor_norm']} s (vs its prior record's "
-                  f"floor {art['floor_ref']})")
     for side, art in (("old", old), ("new", new)):
         if art["truncated"]:
             print(f"WARNING: {side} artifact is a truncated stdout tail "

@@ -13,10 +13,11 @@ import graft.core.QueryMetrics
   * untimed — warming scan caches and codegen, and counting its rows
   * through an [[Observation]], so the count costs no extra job — then
   * once under [[QueryMetrics.measure]]. One row per query: wall, rows,
-  * tasks, executor CPU and GC, slowest task, input, shuffle write/read,
-  * spill, broadcast builds and bytes, and the shuffle-to-input byte
-  * ratio — the number that decides whether an operator's network cost
-  * at 100 TB is a scan-shaped constant or a blow-up.
+  * jobs, stages, tasks, executor CPU and GC, slowest task, input,
+  * shuffle write/read, spill, broadcast builds and bytes, and the
+  * shuffle-to-input byte ratio — the number that decides whether an
+  * operator's network cost at 100 TB is a scan-shaped constant or a
+  * blow-up.
   *
   * Usage: runMain graft.ShuffleSmoke [sfDir] [name ...]
   * (no names → a default panel of the shuffle-heaviest board rows)
@@ -58,7 +59,8 @@ object ShuffleSmoke {
     System.setProperty("spark.hadoop.parquet.hadoop.vectored.io.enabled", "false")
     val spark = graft.core.GraftSession.local(appName = "graft-shuffle-smoke")
     val mb = 1024.0 * 1024.0
-    println(f"${"query"}%-26s ${"wall_s"}%7s ${"rows"}%10s ${"tasks"}%6s " +
+    println(f"${"query"}%-26s ${"wall_s"}%7s ${"rows"}%10s ${"jobs"}%5s " +
+      f"${"stages"}%6s ${"tasks"}%6s " +
       f"${"cpu_s"}%7s ${"gc_s"}%6s ${"task_max_s"}%10s ${"input_mb"}%9s " +
       f"${"in_rec"}%10s ${"sh_w_mb"}%8s ${"sh_w_rec"}%10s ${"sh_r_mb"}%8s " +
       f"${"sh_r_rec"}%10s ${"mem_spill_mb"}%12s ${"disk_spill_mb"}%13s " +
@@ -70,7 +72,8 @@ object ShuffleSmoke {
         val ratio =
           if (m.inputBytes > 0) m.shuffleWriteBytes.toDouble / m.inputBytes else 0.0
         val taskMax = m.taskMs.lastOption.getOrElse(0L) / 1e3
-        println(f"$name%-26s ${m.wallNs / 1e9}%7.2f $rows%10d ${m.tasks}%6d " +
+        println(f"$name%-26s ${m.wallNs / 1e9}%7.2f $rows%10d ${m.jobs}%5d " +
+          f"${m.stages}%6d ${m.tasks}%6d " +
           f"${m.executorCpuNs / 1e9}%7.2f ${m.gcMs / 1e3}%6.2f $taskMax%10.2f " +
           f"${m.inputBytes / mb}%9.1f ${m.inputRecords}%10d " +
           f"${m.shuffleWriteBytes / mb}%8.1f ${m.shuffleWriteRecords}%10d " +

@@ -4,9 +4,9 @@ import org.apache.spark.sql.DataFrame
 
 /** The engine's ONE materialization primitive — every multi-consumer or
   * iterative plan (t_doc_terms' tf frame, passageScrub's block frame,
-  * connected-components generations, heavyHitters' summary, k-means
-  * cell assignment) pins an intermediate through this helper instead of
-  * calling `localCheckpoint` directly.
+  * connected-components and FixedPoint generations, heavyHitters'
+  * summary, k-means cell assignment) pins an intermediate through this
+  * helper instead of calling `localCheckpoint` directly.
   *
   * Why it exists: `localCheckpoint` stores RDD blocks UNREPLICATED on
   * executors and truncates lineage. On a real cluster — dynamic
@@ -30,8 +30,7 @@ import org.apache.spark.sql.DataFrame
   *                  per generation and a lost replica of
   *                  `DISK_ONLY_2` re-runs the whole ancestry), and the
   *                  storage is shared-read by every consumer. Default
-  *                  on a non-local master. Same strategy as
-  *                  [[graft.operators.FixedPoint]]'s generation store.
+  *                  on a non-local master.
   *
   * Scratch location (conf `graft.materialize.scratchDir`): defaults to
   * `<spark.sql.warehouse.dir>/_graft_scratch/<appId>`. Production

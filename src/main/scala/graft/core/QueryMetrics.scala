@@ -2,7 +2,8 @@ package graft.core
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -10,8 +11,10 @@ import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.graft.GraftSql
 
-/** What one measured region cost, summed over every task and SQL
-  * execution that ended inside it. Byte and record fields are task
+/** What one measured region cost, summed over every job, stage, task and
+  * SQL execution inside it. `jobs` counts job starts and `stages`
+  * completed stages (a skipped stage — a reused shuffle — never completes,
+  * so it is not counted). Byte and record fields are task
   * metrics; `taskMs` is every task's duration, sorted ascending, so its
   * max over its median is a stage-skew number; the broadcast fields come
   * from the AQE FINAL plans (the initial plan never shows AQE's
@@ -23,6 +26,7 @@ import org.apache.spark.sql.graft.GraftSql
   * does). */
 final case class QueryMetrics(
     wallNs: Long,
+    jobs: Int, stages: Int,
     inputBytes: Long, inputRecords: Long,
     shuffleWriteBytes: Long, shuffleWriteRecords: Long,
     shuffleReadBytes: Long, shuffleReadRecords: Long,
@@ -41,8 +45,8 @@ object QueryMetrics {
   /** Runs `body` under a fresh listener and returns its result with what
     * it cost. The listener bus is drained before registering, so an
     * earlier job's backlog cannot leak in, and after `body`, so every
-    * task and execution end of `body` is counted — deterministic, no
-    * sleep. `wallNs` times `body` alone. */
+    * job, stage, task and execution event of `body` is counted —
+    * deterministic, no sleep. `wallNs` times `body` alone. */
   def measure[T](spark: SparkSession)(body: => T): (T, QueryMetrics) = {
     GraftSql.drainListenerBus(spark)
     val l = new Listener
@@ -70,10 +74,16 @@ object QueryMetrics {
   }
 
   private final class Listener extends SparkListener {
+    private var jobs, stages = 0
     private var input, inputRec, shWrite, shWriteRec, shRead, shReadRec,
       memSpill, diskSpill, cpuNs, gcMs = 0L
     private val taskMs = ArrayBuffer.empty[Long]
     private val bcast = ArrayBuffer.empty[Long]
+
+    override def onJobStart(j: SparkListenerJobStart): Unit = synchronized(jobs += 1)
+
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      synchronized(stages += 1)
 
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
       val m = t.taskMetrics
@@ -102,7 +112,7 @@ object QueryMetrics {
     }
 
     def result(wallNs: Long): QueryMetrics = synchronized(QueryMetrics(wallNs,
-      input, inputRec, shWrite, shWriteRec, shRead, shReadRec,
+      jobs, stages, input, inputRec, shWrite, shWriteRec, shRead, shReadRec,
       memSpill, diskSpill, cpuNs, gcMs, taskMs.toIndexedSeq.sorted,
       bcast.toSeq))
   }

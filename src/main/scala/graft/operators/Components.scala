@@ -301,11 +301,11 @@ object Components {
   }
 
   /** Weighted PageRank over an edge list by power iteration through
-    * [[FixedPoint.iterate]] (each generation materializes to parquet —
-    * one-step lineage, the recursive-CTE substitute of SURVEY §4). Per
-    * iteration: one join of ranks to edges + one aggregation — both
-    * shuffle on the node key, nothing is quadratic; the driver holds
-    * only the node count and the iteration index.
+    * [[FixedPoint.iterateSteps]] (generations pinned through
+    * Materialize — bounded lineage, the recursive-CTE substitute of
+    * SURVEY §4). Per iteration: one join of ranks to edges + one
+    * aggregation — both shuffle on the node key, nothing is quadratic;
+    * the driver holds only the node count and the iteration index.
     *
     * Deterministic at any parallelism: per-edge contributions are exact
     * per-row doubles (`(rank * w) / out`, pinned parenthesization) and
@@ -319,14 +319,10 @@ object Components {
     *               nodes (no edges) still receive the base rank
     * @param iters  fixed power-iteration count (PageRank converges
     *               geometrically; counts never change, so the fixed-step
-    *               [[FixedPoint.iterateSteps]] schedule applies)
-    * @param tmpDir generation storage — pass a stable dir in repeated
-    *               contexts (the fallback temp dir is never cleaned) */
+    *               [[FixedPoint.iterateSteps]] schedule applies) */
   def pageRank(edges: DataFrame, nodes: DataFrame,
                fromCol: String, toCol: String, weightCol: String,
-               damping: Double = 0.85, iters: Int = 10,
-               tmpDir: Option[String] = None,
-               materializeEvery: Int = 2): DataFrame = {
+               damping: Double = 0.85, iters: Int = 10): DataFrame = {
     import graft.queries.dec
     // materialize the (possibly expensive) edge/node plans ONCE — every
     // iteration joins against them, and an unmaterialized lineage would
@@ -354,11 +350,6 @@ object Components {
         .select(col("node"),
           (lit((1.0 - damping) / nNodes) +
             lit(damping) * coalesce(col("__contrib"), lit(0.0))).as("rank"))
-    }, numSteps = iters, tmpDir = tmpDir,
-      // two generations per parquet round-trip by default: halves the
-      // fixed-point job count (the floor of a small-graph rank like
-      // e_pagerank is per-job overhead, not compute) at identical
-      // arithmetic — values are unchanged by where materialization lands
-      materializeEvery = materializeEvery)
+    }, numSteps = iters)
   }
 }

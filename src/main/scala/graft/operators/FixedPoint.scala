@@ -1,43 +1,49 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
+
+import graft.core.Materialize.MaterializeOps
 
 /** General driver-paced fixed-point iteration — the recursive-CTE
   * substitute (SURVEY §4; ref: slow_temp_table_write_in_palce_of_
   * recursive_cte.py:104-183 loops {step → overwrite temp table → count}
   * until the count stabilizes).
   *
-  * Each generation is materialized to parquet so the lineage stays one
-  * step deep (an unmaterialized loop would stack N plan copies and
-  * re-execute everything per action). The driver holds only counts and
-  * the iteration index; every step is distributed. Convergence is
-  * count-based by default (the reference's criterion) — pass a custom
-  * predicate for monotone steps where equal counts don't imply a fixed
-  * point.
+  * Generations are pinned through [[graft.core.Materialize]], so the
+  * lineage stays a few steps deep (an unmaterialized loop would stack N
+  * plan copies and re-execute everything per action) and the loop keeps
+  * no storage of its own: local mode holds them as checkpoint blocks,
+  * reliable mode as ledgered scratch parquet that `releaseScratch`
+  * deletes. The driver holds only counts and the iteration index; every
+  * step is distributed.
   */
 object FixedPoint {
 
-  /** @param init         starting frame
-    * @param step         one distributed rewrite; must be deterministic
-    * @param maxIter      hard bound — a step that never converges throws
-    * @param tmpDir       generation storage (a fresh temp dir if None)
-    * @param convergedWhen (prevCount, newCount) => done; default: equal
-    * @return the converged frame (reads from the last generation) */
-  def iterate(init: DataFrame, step: DataFrame => DataFrame, maxIter: Int,
-              tmpDir: Option[String] = None,
-              convergedWhen: (Long, Long) => Boolean = _ == _): DataFrame = {
-    val spark = init.sparkSession
-    val dir = genDir(tmpDir)
+  /** Generations per pin in [[iterateSteps]]. In local mode e_pagerank's
+    * 8 steps run 42 jobs when every generation is pinned and 33 at 4, and
+    * r18's A/B (OPTIMIZATION_r18.md §5) measured 4 faster than 2 at
+    * identical arithmetic. Each unpinned step multiplies the plan under
+    * the next pin, so keep it small. */
+  private val StepsPerPin = 4
+
+  /** Count-based convergence (the reference's criterion): each generation
+    * is `step(cur).materialized()` and its `count()` — in local mode that
+    * count is the action that fills the lazy checkpoint.
+    *
+    * @param init    starting frame
+    * @param step    one distributed rewrite; must be deterministic
+    * @param maxIter hard bound — a step that never converges throws
+    * @return the converged frame (the last pinned generation) */
+  def iterate(init: DataFrame, step: DataFrame => DataFrame,
+              maxIter: Int): DataFrame = {
     var cur = init
     var n = cur.count()
     var iter = 0
     var done = false
     while (!done && iter < maxIter) {
-      val path = s"$dir/iter$iter"
-      step(cur).write.mode(SaveMode.Overwrite).parquet(path)
-      cur = spark.read.parquet(path)
+      cur = step(cur).materialized()
       val n2 = cur.count()
-      done = convergedWhen(n, n2)
+      done = n == n2
       n = n2
       iter += 1
     }
@@ -48,44 +54,21 @@ object FixedPoint {
 
   /** Exactly `numSteps` generations — the FIXED-STEP schedule (power
     * iteration and friends) where convergence is analytic, not
-    * count-based: no per-generation count job runs and no convergence
-    * predicate applies. Kept separate from [[iterate]] so a fixed-step
-    * intent can never silently interact with count-based convergence.
+    * count-based: no per-generation count job runs. Kept separate from
+    * [[iterate]] so a fixed-step intent can never silently interact with
+    * count-based convergence.
     *
-    * `materializeEvery` batches generations per parquet round-trip: with
-    * 2, steps run as step(step(gen)) inside ONE job before the write —
-    * identical arithmetic (materialization never changes values; doubles
-    * round-trip parquet exactly), half the job count, and the lineage
-    * stays bounded at `materializeEvery` plan copies. The LAST generation
-    * is always materialized so the returned frame reads from storage, not
-    * a deep plan. Keep the value small (2-3): each unmaterialized step
-    * multiplies the plan under the write, and optimizer time grows with
-    * it. */
+    * Every [[StepsPerPin]]th generation and the last one are pinned,
+    * lazily: the steps between pins run inside the next pin's job at
+    * identical arithmetic (materialization never changes values), and
+    * the returned frame reads from the last pin, not a deep plan. */
   def iterateSteps(init: DataFrame, step: DataFrame => DataFrame,
-                   numSteps: Int, tmpDir: Option[String] = None,
-                   materializeEvery: Int = 1): DataFrame = {
+                   numSteps: Int): DataFrame = {
     require(numSteps > 0, "numSteps must be positive")
-    require(materializeEvery > 0, "materializeEvery must be positive")
-    val spark = init.sparkSession
-    val dir = genDir(tmpDir)
-    var cur = init
-    var i = 0
-    while (i < numSteps) {
+    (0 until numSteps).foldLeft(init) { (cur, i) =>
       val next = step(cur)
-      if ((i + 1) % materializeEvery == 0 || i == numSteps - 1) {
-        val path = s"$dir/iter$i"
-        next.write.mode(SaveMode.Overwrite).parquet(path)
-        cur = spark.read.parquet(path)
-      } else cur = next
-      i += 1
+      if ((i + 1) % StepsPerPin == 0 || i == numSteps - 1) next.materialized()
+      else next
     }
-    cur
   }
-
-  /** Generation storage root. Callers in any repeated context (query
-    * catalog, tests) should pass `tmpDir` — the fresh-dir fallback is
-    * never cleaned up by this process and is meant for one-shot
-    * interactive use. */
-  private def genDir(tmpDir: Option[String]): String = tmpDir.getOrElse(
-    java.nio.file.Files.createTempDirectory("graft-fixpoint").toString)
 }

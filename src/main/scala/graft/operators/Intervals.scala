@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -44,13 +44,13 @@ object Intervals {
 
   /** Iterative fixed-point variant (ref: `slow_temp_table_write_in_palce_of_
     * recursive_cte.py:104-183`): repeatedly merge pairwise-overlapping
-    * neighbours and re-write a temp parquet until the row count stops
-    * shrinking (null-bound rows dropped, as in [[collapse]]). Kept for
-    * capability parity — prefer [[collapse]]; the reference itself warns
-    * this takes 45-90 s on 200 rows (BASELINE.md). */
+    * neighbours, pinning each generation through [[FixedPoint.iterate]],
+    * until the row count stops shrinking (null-bound rows dropped, as in
+    * [[collapse]]). Kept for capability parity — prefer [[collapse]]; the
+    * reference itself warns this takes 45-90 s on 200 rows (BASELINE.md). */
   def collapseFixedPoint(df0: DataFrame, keys: Seq[String], begin: String,
-                         end: String, gapDays: Int = 1, maxIter: Int = 50,
-                         tmpDir: Option[String] = None): DataFrame = {
+                         end: String, gapDays: Int = 1,
+                         maxIter: Int = 50): DataFrame = {
     def step(cur: DataFrame): DataFrame = {
       val w = Window.partitionBy(keys.map(col): _*).orderBy(col(begin), col(end))
       // A row absorbs its successor only when the row itself survives this
@@ -74,6 +74,6 @@ object Intervals {
     FixedPoint.iterate(
       df0.filter(col(begin).isNotNull && col(end).isNotNull)
         .select((keys.map(col) :+ col(begin) :+ col(end)): _*),
-      step, maxIter, tmpDir)
+      step, maxIter)
   }
 }

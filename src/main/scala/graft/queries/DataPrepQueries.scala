@@ -152,28 +152,16 @@ object DataPrepQueries {
     // PageRank over the event-type transition graph (edges shared with
     // e_transitions via transitionEdges) — the fixed-point/recursive-CTE
     // substitute of SURVEY §4 as a GREEN row: 8 power iterations through
-    // FixedPoint.iterateSteps, generations materialized in pairs
-    // (materializeEvery=2 — bounded two-step lineage, half the job
-    // count, identical arithmetic; r12 verdict item 5 A/B: 3.14→2.19 s)
-    // under a stable scratch dir that reruns overwrite. The
-    // oracle unrolls the identical 8 iterations as chained CTEs with the
-    // same decimal-exact per-node sums and explicit DOUBLE casts on
-    // every constant, so both engines execute the same IEEE operation
-    // sequence.
+    // FixedPoint.iterateSteps, which pins every 4th generation and the
+    // last through Materialize. The oracle unrolls the identical 8
+    // iterations as chained CTEs with the same decimal-exact per-node
+    // sums and explicit DOUBLE casts on every constant, so both engines
+    // execute the same IEEE operation sequence.
     "e_pagerank" -> { (s, dir) =>
-      val gen = scratchDir("prep", dir, "pagerank_gen")
-      rmrf(gen)
       val nodes = Tables.events(s, dir)
         .select(col("event_type").as("node")).distinct()
       graft.operators.Components.pageRank(transitionEdges(s, dir), nodes,
-          "prev", "curr", "n", damping = 0.85, iters = 8,
-          tmpDir = Some(gen),
-          // 4 generations per parquet round-trip (r18, verdict item 4):
-          // two fewer write+read jobs than the r12 pairing at identical
-          // arithmetic (materialization never changes values) — A/B
-          // alternated pairs, min-of-3: 2.330/2.213 s at 2 vs
-          // 1.995/1.888 s at 4 (OPTIMIZATION_r18.md §5).
-          materializeEvery = 4)
+          "prev", "curr", "n", damping = 0.85, iters = 8)
         .orderBy("node")
     },
 

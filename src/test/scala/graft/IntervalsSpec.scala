@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Materialize
 import graft.operators.Intervals
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -162,5 +163,14 @@ class IntervalsSpec extends SparkSpec {
     check("collapseFixedPoint gapDays=1",
       offsets(Intervals.collapseFixedPoint(df, Seq("k"), "b", "e", gapDays = 1)),
       oracle(1))
+    // the cluster default: every generation a ledgered parquet round trip
+    spark.conf.set(Materialize.ModeKey, "reliable")
+    try check("collapseFixedPoint gapDays=1, reliable materialization",
+      offsets(Intervals.collapseFixedPoint(df, Seq("k"), "b", "e", gapDays = 1)),
+      oracle(1))
+    finally {
+      Materialize.releaseScratch(spark)
+      spark.conf.unset(Materialize.ModeKey)
+    }
   }
 }

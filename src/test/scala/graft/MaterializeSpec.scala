@@ -11,13 +11,17 @@ import graft.core.Materialize
   *
   *   - t_doc_terms            → TextQueries (tf frame, 2 consumers)
   *   - d_dedup_clusters       → Components.connectedComponents (loop)
-  *   - e_pagerank             → Components.pageRank (edge/node pins)
+  *   - e_pagerank             → Components.pageRank (edge/node pins) and
+  *                              FixedPoint.iterateSteps (generations)
   *   - e_heavy_hitters        → Sketches.heavyHitters (MG summary)
   *   - d_incremental_dedup    → TextDedup.dedupAgainstIndex (batch index)
   *   - t_passage_scrub        → TextDedup.passageScrub (block frame)
   *   - io_delete_propagation  → FileIO.propagateDeletes (survivor pin)
   *   - pl_pretrain_corpus     → PipelineQueries (flagged frame)
   *   - s_semdedup             → SimQueries (cell assignment)
+  *
+  * FixedPoint.iterate's generations have no catalog row: IntervalsSpec's
+  * day-expansion oracle runs `collapseFixedPoint` in both modes.
   */
 class MaterializeSpec extends SparkSpec {
 

@@ -144,10 +144,19 @@ class OperatorsSpec extends SparkSpec {
         .unionByName(cur.filter(col("id") === col("parent")))
         .distinct()
     }
-    val got = FixedPoint.iterate(df, step, maxIter = 10)
-    assert(got.select("id").collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L))
-    intercept[IllegalStateException] {
-      FixedPoint.iterate(df, step, maxIter = 1)
+    for (mode <- Seq("local", "reliable")) {
+      spark.conf.set(graft.core.Materialize.ModeKey, mode)
+      try {
+        val got = FixedPoint.iterate(df, step, maxIter = 10)
+        assert(got.select("id").collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L),
+          mode)
+        intercept[IllegalStateException] {
+          FixedPoint.iterate(df, step, maxIter = 1)
+        }
+      } finally {
+        graft.core.Materialize.releaseScratch(spark)
+        spark.conf.unset(graft.core.Materialize.ModeKey)
+      }
     }
   }
 

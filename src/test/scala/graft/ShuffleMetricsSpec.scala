@@ -35,6 +35,8 @@ class ShuffleMetricsSpec extends SparkSpec {
     val m = measure("a1_pricing_summary")
     assert(m.shuffleWriteRecords < 200,
       s"a1 shuffled ${m.shuffleWriteRecords} records — partial aggregation lost")
+    // the listener sees the run's jobs and stages, not only its tasks
+    assert(m.jobs >= 1 && m.stages >= 1, s"a1 jobs ${m.jobs}, stages ${m.stages}")
   }
 
   test("j13: salted join replicates the dim, never shuffles the fact") {

@@ -128,6 +128,41 @@ case class MinHashBands(child: Expression, k: Int, bands: Int)
     copy(child = newChild)
 }
 
+/** SRP (random-hyperplane) band keys of a vector column in one pass:
+  * `nPlanes` sign bits against deterministic hyperplanes, packed into
+  * ⌈nPlanes / bits⌉ band keys. The planes are built once per expression
+  * instance; each row is one native fold per plane. See
+  * [[NativeEval.srpBandKeys]] for the bit definition. Accepts
+  * `array<float>` and `array<double>` (floats widen exactly). */
+case class SrpBandKeys(child: Expression, dims: Int, bits: Int, nPlanes: Int,
+                       seedK: Long) extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[org.apache.spark.sql.graft.GraftSql.AbstractDataType] =
+    Seq(org.apache.spark.sql.graft.GraftSql.typeCollection(
+      ArrayType(FloatType), ArrayType(DoubleType)))
+  require(dims > 0 && nPlanes > 0 && bits > 0 && bits < 64)
+
+  private lazy val isFloat = child.dataType match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
+  }
+  @transient private lazy val planes = NativeEval.srpPlanes(dims, nPlanes, seedK)
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "graft_srp_band_keys"
+
+  override protected def nullSafeEval(input: Any): Any =
+    NativeEval.srpBandKeys(input.asInstanceOf[ArrayData], isFloat, planes, bits)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val p = ctx.addReferenceObj("srpPlanes", planes, "double[][]")
+    defineCodeGen(ctx, ev,
+      c => s"graft.functions.NativeEval.srpBandKeys($c, $isFloat, $p, $bits)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): SrpBandKeys =
+    copy(child = newChild)
+}
+
 /** Winnowing fingerprints of a text column: polynomial rolling k-gram
   * hashes → sliding-window-of-w minima → sorted distinct `array<long>`.
   * See [[NativeEval.winnowFingerprints]] for the algorithm, portability

@@ -357,6 +357,48 @@ object NativeEval {
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
+  /** SRP hyperplanes: component d of plane j is the integer-arithmetic
+    * literal ((j·dims + d)·seedK mod 2001 − 1000) / 1000, which any
+    * engine rebuilds bit-for-bit. */
+  def srpPlanes(dims: Int, nPlanes: Int, seedK: Long): Array[Array[Double]] =
+    Array.tabulate(nPlanes, dims)((j, d) =>
+      ((j.toLong * dims + d) * seedK % 2001L - 1000L) / 1000.0)
+
+  /** SRP band keys of one vector against [[srpPlanes]]: bit j is SQL's
+    * `cosine(vec, plane j) >= 0`, with [[cosine]]'s sequential dot/norm
+    * fold over min(len(vec), dims) elements, packed low bit first at
+    * j % bits into band j / bits. SQL ordering ranks NaN above every
+    * value, so a zero or empty vector sets every bit. When the plane
+    * count is not a multiple of bits the last band is partial. */
+  def srpBandKeys(vec: ArrayData, isFloat: Boolean, planes: Array[Array[Double]],
+                  bits: Int): ArrayData = {
+    val n = math.min(vec.numElements(), planes(0).length)
+    val x = new Array[Double](n)
+    var na = 0.0
+    var i = 0
+    while (i < n) {
+      val v = if (isFloat) vec.getFloat(i).toDouble else vec.getDouble(i)
+      x(i) = v; na += v * v
+      i += 1
+    }
+    val normA = math.sqrt(na)
+    val out = new Array[Long]((planes.length + bits - 1) / bits)
+    var j = 0
+    while (j < planes.length) {
+      val h = planes(j)
+      var dot = 0.0; var nb = 0.0
+      i = 0
+      while (i < n) {
+        val y = h(i)
+        dot += x(i) * y; nb += y * y
+        i += 1
+      }
+      if (!(dot / (normA * math.sqrt(nb)) < 0.0)) out(j / bits) |= 1L << (j % bits)
+      j += 1
+    }
+    new GenericArrayData(out)
+  }
+
   /** Winnowing fingerprints (Schleimer/Wilkerson/Aiken, "Winnowing: Local
     * Algorithms for Document Fingerprinting", SIGMOD'03 — public
     * literature): per-position polynomial rolling hashes of the text's

@@ -282,12 +282,19 @@ object VectorSim {
     * Hyperplane components are integer-arithmetic literals
     * (`((j·dims+d)·seedK mod 2001 − 1000)/1000`) that any engine
     * rebuilds bit-for-bit, so an external oracle can replicate the
-    * full band chain. The sign bit uses the native [[cosine]] kernel:
-    * sign(cos) == sign(dot) for nonzero norms, and the codegen'd
-    * single-pass kernel is what makes the planes-per-vector pass cheap.
+    * full band chain. All band keys of a vector come from one native
+    * expression ([[srpBandKeys]]): it builds the planes once, and each
+    * row folds the vector against every plane with [[cosine]]'s
+    * sequential dot/norm order, so the sign bit is bit-identical to
+    * `cosine(vec, plane) >= 0` (sign(cos) == sign(dot) for nonzero
+    * norms). No plane table, cross join or band aggregate is planned,
+    * and a null vector yields no band rows. Trade: without the
+    * aggregate's exchange for the self-join's two sides to share,
+    * `emb` is scanned once per side.
     *
-    * PRECONDITION: vectors must have nonzero norm — a zero vector makes
-    * the cosine NaN and `NaN >= 0` is engine-divergent; filter
+    * PRECONDITION: vectors should have nonzero norm — a zero vector
+    * makes the cosine NaN, which SQL ordering ranks above 0, so it sets
+    * every bit and collides with every all-ones band key; filter
     * zero-norm rows first (they carry no direction and belong in no
     * angular bucket).
     *
@@ -334,33 +341,26 @@ object VectorSim {
                     seedK: Long = 2654435761L,
                     dedup: Boolean = true,
                     numVectors: Long = -1L): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
     val bits =
       if (bandBits > 0) bandBits
       else srpBandBits(if (numVectors >= 0L) numVectors else emb.count())
     val planes = if (nPlanes > 0) nPlanes else srpBands(bits) * bits
-    // hyperplanes as an nPlanes-row broadcast dim (the oracle's CROSS
-    // JOIN shape): driver-computed long arithmetic, bit-for-bit
-    // reproducible by the oracle's list_transform
-    val hp = (0 until planes).map { j =>
-      (j, (0 until dims).map(d =>
-        ((j.toLong * dims + d) * seedK % 2001L - 1000L) / 1000.0).toArray)
-    }.toDF("j", "h")
-    val banded = emb.select(col(idCol), col(vecCol))
-      .crossJoin(broadcast(hp))
-      .select(col(idCol), (col("j") / bits).cast("int").as("bi"),
-        (col("j") % bits).as("bit"),
-        when(cosine(col(vecCol).cast("array<double>"),
-          col("h")) >= 0.0, 1L).otherwise(0L).as("s"))
-      .groupBy(col(idCol), col("bi"))
-      .agg(sum(col("s") * expr("shiftleft(CAST(1 AS BIGINT), bit)")).as("bk"))
+    val banded = emb.select(col(idCol),
+      posexplode(srpBandKeys(col(vecCol), dims, bits, planes, seedK)).as(Seq("bi", "bk")))
     val cand = banded.alias("__sx").join(banded.alias("__sy"),
         col("__sx.bi") === col("__sy.bi") && col("__sx.bk") === col("__sy.bk") &&
         col(s"__sx.$idCol") < col(s"__sy.$idCol"))
       .select(col(s"__sx.$idCol").as("a"), col(s"__sy.$idCol").as("b"))
     if (dedup) cand.distinct() else cand
   }
+
+  /** SRP band keys of a vector column as one native expression: band
+    * j / bits of `nPlanes` hyperplane sign bits, low bit first — see
+    * [[graft.functions.SrpBandKeys]]. */
+  def srpBandKeys(vec: Column, dims: Int, bits: Int, nPlanes: Int,
+                  seedK: Long): Column =
+    org.apache.spark.sql.graft.GraftSql.column(graft.functions.SrpBandKeys(
+      org.apache.spark.sql.graft.GraftSql.expression(vec), dims, bits, nPlanes, seedK))
 
   /** Capacity-safe band width for [[srpCandidates]]: max(8, ⌈log2 N⌉ − 3)
     * keeps expected random-collision bucket occupancy O(10) at any corpus

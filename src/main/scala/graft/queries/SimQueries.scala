@@ -88,12 +88,12 @@ object SimQueries {
     // Hyperplanes are integer-arithmetic literals both engines rebuild
     // bit-for-bit; the sign threshold compares the same sequential-fold
     // dot both engines compute.
-    // PRECONDITION: embeddings must have nonzero norm — a zero vector
-    // makes cosine NaN, and Spark's NaN>=0.0 (false → sign 0) diverges
-    // from the oracle's NaN comparison/cast semantics. The embeddings
-    // table is verified zero-free; a caller banding arbitrary vectors
-    // should filter zero-norm rows first (they carry no direction and
-    // belong in no angular bucket).
+    // PRECONDITION: embeddings should have nonzero norm — a zero vector
+    // makes cosine NaN, which Spark ranks above 0 (sign 1; the oracle's
+    // dot is 0 >= 0, also 1), so it lands in every all-ones bucket. The
+    // embeddings table is verified zero-free; a caller banding arbitrary
+    // vectors should filter zero-norm rows first (they carry no
+    // direction and belong in no angular bucket).
     "s_srp_lsh" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
       // candidate generation lives in the operator library (promoted like
@@ -107,11 +107,13 @@ object SimQueries {
       // SQL derives the SAME values from COUNT(*) via the integer-exact
       // bin-length form, so the full band chain stays bit-replicable at
       // ANY scale the board runs. numVectors passes the PRE-collapse
-      // count: the oracle's chain runs over the raw table. Sign bits
-      // come from the NATIVE CosineSim kernel — sign(cos) == sign(dot)
-      // since norms are positive, and the codegen'd kernel is what makes
-      // the planes-per-vector pass cheap (the zip_with+aggregate HOF
-      // form measured 3-8 s at sf0.1; this runs sub-second)
+      // count: the oracle's chain runs over the raw table. All band keys
+      // of a vector come from ONE codegen'd native expression
+      // (VectorSim.srpBandKeys), which folds the vector against every
+      // plane in CosineSim's order — sign(cos) == sign(dot) since norms
+      // are positive. The oracle's hyperplane CROSS JOIN and band
+      // GROUP BY have no plan counterpart; the codegen'd kernel is what
+      // makes the planes-per-vector pass cheap
       // exact-duplicate collapse before banding (collapseExactVecDups —
       // the ×10 twin board put the uncollapsed band join at 13 s on
       // ~100× true candidates); the threshold filter runs AFTER the

@@ -933,6 +933,122 @@ class DedupPropertySpec extends SparkSpec {
     assert(viaN == pinned)
   }
 
+  /** Band keys by the definition SrpBandKeys replaced: the plane
+    * literals as a table, SQL's `cosine(vec as double[], plane) >= 0` per
+    * plane ([[graft.functions.NativeEval.cosine]], compared in Spark's
+    * double ordering, which ranks NaN above 0), and Σ bit << (j % bits)
+    * summed per band j / bits. */
+  private def srpRefKeys(vec: Seq[Double], dims: Int, bits: Int,
+                         nPlanes: Int): Seq[Long] = {
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    val v = new GenericArrayData(vec.toArray)
+    (0 until nPlanes).groupBy(_ / bits).toSeq.sortBy(_._1).map { case (_, js) =>
+      js.map { j =>
+        val h = Array.tabulate(dims)(d =>
+          ((j.toLong * dims + d) * 2654435761L % 2001L - 1000L) / 1000.0)
+        val s = graft.functions.NativeEval.cosine(v, new GenericArrayData(h), false, false)
+        val ge = org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(s, 0.0) >= 0
+        if (ge) 1L << (j % bits) else 0L
+      }.sum
+    }
+  }
+
+  private def withConfs[T](confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("SrpBandKeys == brute-force plane/cosine/band-sum reference (codegen and interpreted)") {
+    import spark.implicits._
+    import graft.operators.VectorSim
+    val rnd = new scala.util.Random(59)
+    val dims = 12
+    def vec(len: Int) = Seq.fill(len)(rnd.nextDouble() * 2 - 1)
+    // full-width vectors plus one shorter and one longer than dims, a
+    // zero vector and an empty one (NaN cosines: all bits set)
+    val vecs = (0L until 40L).map(i => i -> vec(dims)) ++ Seq(
+      40L -> vec(5), 41L -> vec(dims + 4), 42L -> Seq.fill(dims)(0.0), 43L -> Seq.empty[Double])
+    val flt = vecs.map { case (i, v) => i -> v.map(_.toFloat) }
+    val inputs = Seq( // frame, and its vectors as the cast to double[] sees them
+      spark.sparkContext.parallelize(vecs, 2).toDF("id", "v") -> vecs.toMap,
+      spark.sparkContext.parallelize(flt, 2).toDF("id", "v") ->
+        flt.map { case (i, v) => i -> v.map(_.toDouble) }.toMap)
+    // (8, 32) is the derived correctness-board geometry; 23 planes of 5
+    // bits end in a 3-bit partial band
+    for ((bits, nPlanes) <- Seq((8, 32), (5, 23)); codegen <- Seq(true, false)) {
+      val confs = if (codegen) Seq("spark.sql.codegen.wholeStage" -> "true")
+        else Seq("spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+      withConfs(confs: _*) {
+        for ((df, asDouble) <- inputs) {
+          val keyed = df.select(col("id"),
+            VectorSim.srpBandKeys(col("v"), dims, bits, nPlanes, 2654435761L).as("k"))
+          val p = keyed.queryExecution.executedPlan.toString
+          assert(p.contains("graft_srp_band_keys") && p.contains("*(") == codegen, p)
+          keyed.collect().foreach { r =>
+            val id = r.getLong(0)
+            assert(r.getSeq[Long](1) == srpRefKeys(asDouble(id), dims, bits, nPlanes),
+              s"id $id, ${df.schema("v").dataType}, bits $bits, planes $nPlanes, codegen $codegen")
+          }
+        }
+      }
+    }
+    // the NaN vectors really are all-ones keys
+    assert(srpRefKeys(vecs(42)._2, dims, 8, 32).forall(_ == 255L))
+  }
+
+  test("srpCandidates degenerate inputs == brute-force band-collision pairs") {
+    import org.apache.spark.sql.{Row, types => T}
+    import graft.operators.VectorSim
+    val dims = 8
+    val schema = T.StructType(Seq(
+      T.StructField("vec_id", T.LongType, nullable = true),
+      T.StructField("embedding", T.ArrayType(T.FloatType), nullable = true)))
+    val rnd = new scala.util.Random(67)
+    def vec(): Seq[Float] = Seq.fill(dims)((rnd.nextDouble() * 2 - 1).toFloat)
+    val same = vec()
+    val zero = Seq.fill(dims)(0.0f)
+    // a vector with an all-zero band key: what a null vector banded as
+    // "no bits set" would collide with
+    val zeroKey = Iterator.continually(vec())
+      .find(v => srpRefKeys(v.map(_.toDouble), dims, 8, 32).contains(0L)).get
+    val mixed = (0L until 30L).map(i => Row(i, vec())) ++ Seq(
+      Row(30L, null), Row(31L, same), Row(32L, same), Row(33L, zero), Row(34L, zeroKey),
+      Row(null, same), Row(null, vec()), Row(null, null))
+    val cases = Seq(
+      "empty" -> Seq.empty[Row],
+      "single row" -> Seq(Row(1L, vec())),
+      "all identical" -> (0L until 6L).map(i => Row(i, same)),
+      "null vector, null id, zero vector, zero band key" -> mixed)
+    for ((name, rows) <- cases) {
+      // derived geometry below 2^11 vectors: 4 bands of 8 bits
+      val keyed = rows.collect { case Row(id: Long, v: Seq[Float @unchecked]) =>
+        id -> srpRefKeys(v.map(_.toDouble), dims, 8, 32) }
+      val brute = for {
+        (a, ka) <- keyed; (b, kb) <- keyed if a < b
+        bi <- ka.indices if ka(bi) == kb(bi)
+      } yield (a, b)
+      val emb = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+      for (dedup <- Seq(true, false)) {
+        val got = VectorSim.srpCandidates(emb, "vec_id", "embedding", dims = dims,
+            dedup = dedup)
+          .collect().map(r => (r.get(0), r.get(1)))
+        assert(got.forall { case (a, b) => a != null && b != null }, s"$name: null id")
+        val pairs = got.toSeq.map { case (a, b) => (a.asInstanceOf[Long], b.asInstanceOf[Long]) }
+        assert(!pairs.exists { case (a, b) => a == 30L || b == 30L }, s"$name: null vector paired")
+        val want = if (dedup) brute.distinct else brute
+        assert(pairs.sorted == want.sorted, s"$name dedup=$dedup: got ${pairs.sorted.take(5)}, " +
+          s"want ${want.sorted.take(5)}")
+      }
+      if (name == "all identical") assert(brute.size == 15 * 4)
+    }
+  }
+
   test("cellCosinePairs collapse == uncollapsed within-cell join on twins") {
     import spark.implicits._
     import graft.operators.VectorSim

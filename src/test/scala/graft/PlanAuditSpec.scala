@@ -24,11 +24,14 @@ class PlanAuditSpec extends SparkSpec {
 
   test("near-dup pipelines never plan an all-pairs join") {
     for (q <- Seq("d_minhash_lsh", "d_simhash", "d_ngram_jaccard",
-                  "d_incremental_dedup")) {
+                  "d_incremental_dedup", "s_srp_lsh")) {
       val p = plan(q)
       assert(!p.contains("CartesianProduct"), s"$q plans a cartesian product")
       assert(!p.contains("BroadcastNestedLoopJoin"), s"$q plans an NLJ")
     }
+    // SRP band keys come from one native expression, not a vector ×
+    // hyperplane cross join
+    assert(plan("s_srp_lsh").contains("graft_srp_band_keys("))
   }
 
   test("tiered verify: parity prune probes the skinny sketch relation, arrays join survivors only") {

@@ -14,8 +14,9 @@ import graft.core.QueryMetrics
   * through an [[Observation]], so the count costs no extra job — then
   * once under [[QueryMetrics.measure]]. One row per query: wall, rows,
   * jobs, stages, tasks, executor CPU and GC, slowest task, input,
-  * shuffle write/read, spill, broadcast builds and bytes, and the
-  * shuffle-to-input byte ratio — the number that decides whether an
+  * shuffle write/read, spill, broadcast builds, rows and bytes (bytes
+  * are allocated hash-relation pages, which scale with heap and cores —
+  * see [[QueryMetrics]]), and the shuffle-to-input byte ratio — the number that decides whether an
   * operator's network cost at 100 TB is a scan-shaped constant or a
   * blow-up.
   *
@@ -64,7 +65,7 @@ object ShuffleSmoke {
       f"${"cpu_s"}%7s ${"gc_s"}%6s ${"task_max_s"}%10s ${"input_mb"}%9s " +
       f"${"in_rec"}%10s ${"sh_w_mb"}%8s ${"sh_w_rec"}%10s ${"sh_r_mb"}%8s " +
       f"${"sh_r_rec"}%10s ${"mem_spill_mb"}%12s ${"disk_spill_mb"}%13s " +
-      f"${"bc_builds"}%9s ${"bc_mb"}%7s ${"sh/in"}%6s")
+      f"${"bc_builds"}%9s ${"bc_rows"}%9s ${"bc_mb"}%7s ${"sh/in"}%6s")
     names.foreach { name =>
       if (!SparkEntry.queries.contains(name)) println(s"$name: no such query")
       else {
@@ -79,7 +80,8 @@ object ShuffleSmoke {
           f"${m.shuffleWriteBytes / mb}%8.1f ${m.shuffleWriteRecords}%10d " +
           f"${m.shuffleReadBytes / mb}%8.1f ${m.shuffleReadRecords}%10d " +
           f"${m.memorySpillBytes / mb}%12.1f ${m.diskSpillBytes / mb}%13.1f " +
-          f"${m.broadcastBuilds}%9d ${m.broadcastBytes.sum / mb}%7.1f $ratio%6.2f")
+          f"${m.broadcastBuilds}%9d ${m.broadcastRows.sum}%9d " +
+          f"${m.broadcastBytes.sum / mb}%7.1f $ratio%6.2f")
       }
     }
     spark.stop()

@@ -18,7 +18,16 @@ import org.apache.spark.sql.graft.GraftSql
   * metrics; `taskMs` is every task's duration, sorted ascending, so its
   * max over its median is a stage-skew number; the broadcast fields come
   * from the AQE FINAL plans (the initial plan never shows AQE's
-  * stage-level exchange reuse), one entry per broadcast BUILD.
+  * stage-level exchange reuse), one entry per broadcast BUILD, in the
+  * same order in both.
+  *
+  * `broadcastRows` is each build's row count (`numOutputRows`), the same
+  * on any host. `broadcastBytes` is each build's `dataSize`: the memory
+  * its hash relation ALLOCATED, not the bytes of its rows. A hash
+  * relation takes whole pages of `spark.buffer.pageSize`, which Spark
+  * derives from heap and cores when unset, so one build reads e.g.
+  * 16.25 MB at -Xmx2g and 32.25 MB at -Xmx4g (s_srp_lsh, sf0.1, 4
+  * cores). Compare it only between runs of the same heap and cores.
   *
   * Parquet input bytes read 0 under Hadoop's vectored IO, which bypasses
   * the statistics `inputMetrics` reads; a harness that reports them sets
@@ -33,7 +42,7 @@ final case class QueryMetrics(
     memorySpillBytes: Long, diskSpillBytes: Long,
     executorCpuNs: Long, gcMs: Long,
     taskMs: IndexedSeq[Long],
-    broadcastBytes: Seq[Long]) {
+    broadcastBytes: Seq[Long], broadcastRows: Seq[Long]) {
   def tasks: Int = taskMs.length
   def spillBytes: Long = memorySpillBytes + diskSpillBytes
   def broadcastBuilds: Int = broadcastBytes.length
@@ -60,17 +69,18 @@ object QueryMetrics {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
-  /** `dataSize` of each broadcast build in an executed plan: the walk
-    * enters adaptive plans (through their final plan) and query stages,
-    * and counts a build once however many stages reuse it. */
-  private def broadcastBuilds(plan: SparkPlan): Seq[Long] = {
+  /** (`dataSize`, `numOutputRows`) of each broadcast build in an
+    * executed plan: the walk enters adaptive plans (through their final
+    * plan) and query stages, and counts a build once however many
+    * stages reuse it. */
+  private def broadcastBuilds(plan: SparkPlan): Seq[(Long, Long)] = {
     def walk(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
       case q: QueryStageExec => q +: walk(q.plan)
       case _ => p +: p.children.flatMap(walk)
     }
     walk(plan).collect { case b: BroadcastExchangeExec => b }.distinct
-      .map(_.metrics("dataSize").value)
+      .map(b => (b.metrics("dataSize").value, b.metrics("numOutputRows").value))
   }
 
   private final class Listener extends SparkListener {
@@ -78,7 +88,7 @@ object QueryMetrics {
     private var input, inputRec, shWrite, shWriteRec, shRead, shReadRec,
       memSpill, diskSpill, cpuNs, gcMs = 0L
     private val taskMs = ArrayBuffer.empty[Long]
-    private val bcast = ArrayBuffer.empty[Long]
+    private val bcast = ArrayBuffer.empty[(Long, Long)]
 
     override def onJobStart(j: SparkListenerJobStart): Unit = synchronized(jobs += 1)
 
@@ -105,8 +115,8 @@ object QueryMetrics {
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
       case end: SparkListenerSQLExecutionEnd =>
         GraftSql.executionOf(end).foreach { qe =>
-          val sizes = broadcastBuilds(qe.executedPlan)
-          synchronized(bcast ++= sizes)
+          val builds = broadcastBuilds(qe.executedPlan)
+          synchronized(bcast ++= builds)
         }
       case _ =>
     }
@@ -114,6 +124,6 @@ object QueryMetrics {
     def result(wallNs: Long): QueryMetrics = synchronized(QueryMetrics(wallNs,
       jobs, stages, input, inputRec, shWrite, shWriteRec, shRead, shReadRec,
       memSpill, diskSpill, cpuNs, gcMs, taskMs.toIndexedSeq.sorted,
-      bcast.toSeq))
+      bcast.map(_._1).toSeq, bcast.map(_._2).toSeq))
   }
 }

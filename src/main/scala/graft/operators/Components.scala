@@ -109,7 +109,7 @@ object Components {
     *                   graph H (e.g. `minhashLshPairsCollapsed(...).repPairs`)
     * @param dupMembers (rep, member) dup-group membership, rep = group min
     *                   id, rep itself included, singletons absent
-    *                   ([[graft.operators.TextDedup.collapseExactDupsFull]])
+    *                   ([[graft.operators.TextDedup.collapseExactDups]])
     * @return (node, n_triangles) over members AND singleton reps, nodes
     *         in ≥ 1 triangle only — the [[triangleCounts]] contract */
   def weightedTriangleCounts(repEdges: DataFrame,
@@ -165,7 +165,7 @@ object Components {
 
   /** [[connectedComponents]] of the BLOWN-UP near-dup graph, computed on
     * the collapsed rep graph. Sound because each dup group's rep IS its
-    * minimum member id ([[graft.operators.TextDedup.collapseExactDupsFull]]'s
+    * minimum member id ([[graft.operators.TextDedup.collapseExactDups]]'s
     * contract): a group's members connect only through their rep's
     * H-component, so components(expanded) == expand(components(H)) — the
     * min id of an expanded component is the min REP of its H-component,

@@ -175,22 +175,33 @@ object TextDedup {
       .distinct()
   }
 
-  /** Exact-duplicate collapse for pair-LISTING operators (the twin-board
-    * counterpart of [[VectorSim.semDedup]]'s collapse): rows whose
-    * `groupKey` — covering EVERY input the pair pipeline derives from —
-    * is identical are collapsed to their min-id representative before
-    * candidate generation, and representative pairs are expanded back to
-    * the full member pair list afterwards. Output-identical, because for
-    * any pair operator here
+  /** See [[collapseExactDups]]. */
+  final case class DupCollapse(reps: DataFrame, dupMembers: DataFrame,
+                               expand: DataFrame => DataFrame)
+
+  /** Exact-duplicate collapse for pair-LISTING operators — the ONE
+    * collapse of every text and vector pair lister (the twin-board
+    * counterpart of [[VectorSim.semDedup]]'s collapse): rows equal on
+    * EVERY `groupKeys` component — covering every input the pair
+    * pipeline derives from — are collapsed to their min-id
+    * representative before candidate generation, and representative
+    * pairs are expanded back to the full member pair list afterwards.
+    * Output-identical, because for any pair operator here
     *   (a) two rows with equal signatures are interchangeable: banding,
-    *       blocking, simhash, and jaccard are pure functions of the
-    *       signature, so a cross-group member pair qualifies iff its
-    *       representative pair qualifies, with the SAME jaccard; and
-    *   (b) an intra-group pair always qualifies in the uncollapsed
-    *       operator — identical signatures share every bucket/band
-    *       (Hamming 0, length diff 0) and have jaccard exactly 1.0
-    *       (s/s in IEEE double), which any threshold ≤ 1 admits — so
-    *       emitting all C(k,2) member pairs at literal 1.0 reproduces it.
+    *       blocking, simhash, jaccard and cosine are pure functions of
+    *       the signature, so a cross-group member pair qualifies iff
+    *       its representative pair qualifies, with the SAME value; and
+    *   (b) an intra-group pair takes `intraValue`, evaluated on the
+    *       member's own row: the literal the uncollapsed operator
+    *       computes for identical signatures (jaccard s/s = 1.0 in IEEE
+    *       double, edit distance 0), or a computed one where that value
+    *       is not a literal — cos(v, v) is ≈1 but not 1.0 (sqrt(d)² ≠ d
+    *       in IEEE), and members are byte-identical, so every member
+    *       carries its representative's self-cosine bit for bit.
+    * A threshold on the pair value runs AFTER the expansion: cross
+    * pairs inherit the rep value, so the filter commutes, and intra
+    * pairs are filtered on their own value (a zero-norm vector's NaN
+    * self-cosine fails every threshold, like the uncollapsed rerank).
     * Domain gates (minShingles, length ≥ n) must be applied BEFORE the
     * collapse: they too are signature-determined, so a group is in or
     * out wholesale. Candidate volume drops from quadratic-in-copies to
@@ -198,78 +209,73 @@ object TextDedup {
     * re-crawled corpus where most content is byte-identical this is the
     * difference between a pair scan and a disaster (measured: d_simhash
     * 51 s → ~5 s on the ×10-twins sf1 board, SCALING.md round-10).
-    * The group key is md5-based (128-bit): a collision needs ~2^64
+    * Text group keys are md5-based (128-bit): a collision needs ~2^64
     * co-resident distinct signatures — negligible at any corpus size
     * this engine targets (same acceptance as [[charShingleHashes]]).
     *
-    * NULL group keys never collapse: SQL NULL is not equal to NULL, so
-    * the uncollapsed pair operators never equi-join two null-signature
-    * rows (a null head/text reaches no bucket). Each null-key row is
-    * therefore its own representative — it partitions alone (secondary
-    * window key = its own id, so a corpus of null texts is not a skew
-    * hazard either) and contributes no intra expansion.
+    * NULLs never collapse: SQL NULL is not equal to NULL, so the
+    * uncollapsed pair operators never equi-join a row on a null key
+    * component (a null text, vector or cell reaches no bucket). A row
+    * with a null in ANY key is therefore its own representative — it
+    * partitions alone (secondary window key = its own id, so a corpus
+    * of null texts is not a skew hazard either) and contributes no
+    * intra expansion. A null-ID row joins no dup group either (the
+    * census skips it): it passes through `reps` untouched, and every
+    * candidate join drops it. Counting it in a group would let
+    * `expand` map it back onto the representative and emit each of
+    * the group's cross pairs twice.
     *
     * Plan shape (round-11 rework of the r10 groupBy-census + join):
-    * the census is ONE narrow (id, key) window — min(id) and count(*)
-    * over the key partition, one exchange, shared via ReuseExchange by
-    * every reference — and everything downstream consumes only the
-    * DUP-GROUP slice (count ≥ 2). On a mostly-clean corpus that slice
-    * is tiny, so `reps` is a broadcast ANTI-join against the non-rep
-    * dup ids (the base scan is never shuffled) and `expand`'s member
-    * joins broadcast instead of reshuffling a corpus-sized membership
-    * frame; on a heavily-duplicated corpus the slice grows with the
-    * duplicated rows — exactly the rows the collapse exists for — and
-    * AQE falls back to shuffled joins with the same asymptotics as
-    * before. Still deliberately LAZY — no driver action, no
-    * checkpoint: an eager census measured +2 s/row at sf0.1
-    * (NOTES_r10).
+    * the census is ONE narrow (id, keys, intra value) window — min(id)
+    * and count(*) over the key partition, one exchange, shared via
+    * ReuseExchange by every reference — and everything downstream
+    * consumes only the DUP-GROUP slice (count ≥ 2). On a mostly-clean
+    * corpus that slice is tiny, so `reps` is a broadcast ANTI-join
+    * against the non-rep dup ids (the base scan is never shuffled) and
+    * `expand`'s member joins broadcast instead of reshuffling a
+    * corpus-sized membership frame; on a heavily-duplicated corpus the
+    * slice grows with the duplicated rows — exactly the rows the
+    * collapse exists for — and AQE falls back to shuffled joins with
+    * the same asymptotics as before. Still deliberately LAZY — no
+    * driver action, no checkpoint: an eager census measured +2 s/row
+    * at sf0.1 (NOTES_r10).
     *
-    * @return (reps, expand): `reps` keeps the original columns, one row
-    *         per distinct signature (min id); `expand` maps rep pairs
-    *         (a, b, `valueCol`) to the full member pair list, a < b —
-    *         intra-group pairs carry `intraValue` (jaccard 1.0 by
-    *         default; pass e.g. 0 for an edit-distance output). */
-  def collapseExactDups(rows: DataFrame, idCol: String, groupKey: Column,
+    * @return `reps` keeps the original columns, one row per distinct
+    *         signature (min id); `expand` maps rep pairs (a, b,
+    *         `valueCol`) to the full member pair list, a < b;
+    *         `dupMembers` is the dup-group MEMBERSHIP (rep, member) —
+    *         what graph consumers need to stay on the collapsed graph
+    *         instead of expanding pairs only to re-contract them: one
+    *         row per member of each group of ≥ 2 equal signatures, the
+    *         rep itself included, singletons absent. `rep` is always
+    *         the group's MINIMUM member id — the invariant
+    *         [[graft.operators.Components]]' collapsed-graph operators
+    *         rely on (a component's label equals its min id, and each
+    *         group's min IS its rep, so labels computed on the rep graph
+    *         are already the labels of the expanded graph). */
+  def collapseExactDups(rows: DataFrame, idCol: String, groupKeys: Seq[Column],
                         valueCol: String = "jaccard",
-                        intraValue: Column = lit(1.0))
-      : (DataFrame, DataFrame => DataFrame) = {
-    val c = collapseExactDupsFull(rows, idCol, groupKey, valueCol, intraValue)
-    (c.reps, c.expand)
-  }
-
-  /** The collapse of [[collapseExactDups]] plus its dup-group MEMBERSHIP
-    * frame — what graph consumers need to stay on the collapsed graph
-    * instead of expanding pairs only to re-contract them.
-    *
-    * `dupMembers` is (rep, member): one row per member of each dup group
-    * (groups of ≥ 2 equal signatures; the rep itself included, singletons
-    * absent). `rep` is always the group's MINIMUM member id — the
-    * invariant [[graft.operators.Components]]' collapsed-graph operators
-    * rely on (a component's label equals its min id, and each group's
-    * min IS its rep, so labels computed on the rep graph are already the
-    * labels of the expanded graph). */
-  final case class DupCollapse(reps: DataFrame, dupMembers: DataFrame,
-                               expand: DataFrame => DataFrame)
-
-  def collapseExactDupsFull(rows: DataFrame, idCol: String, groupKey: Column,
-                            valueCol: String = "jaccard",
-                            intraValue: Column = lit(1.0)): DupCollapse = {
+                        intraValue: Column = lit(1.0)): DupCollapse = {
     import org.apache.spark.sql.expressions.Window
-    val census = rows.select(col(idCol), groupKey.as("__g"))
-    val w = Window.partitionBy(col("__g"),
-      when(col("__g").isNull, col(idCol)))
+    val keys = groupKeys.indices.map(i => s"__g$i")
+    val census = rows.filter(col(idCol).isNotNull)
+      .select(col(idCol) +: groupKeys.zip(keys).map { case (k, n) => k.as(n) } :+
+        intraValue.as("__iv"): _*)
+    val w = Window.partitionBy(keys.map(col) :+
+      when(keys.map(col(_).isNull).reduce(_ || _), col(idCol)): _*)
     // members of groups of size >= 2 — the only rows the collapse acts
     // on. Singleton groups (and every null-key row, which partitions
     // alone by its own id) pass through untouched.
     // Materialized (lazily) because FIVE downstream references replan it
     // otherwise — the reps anti-join plus expand's two member joins and
     // its intra self-join — each re-running the corpus scan + window.
-    // Narrow (id, rep) rows, sized by the duplicated subset only.
+    // Narrow (id, rep, intra value) rows, sized by the duplicated subset
+    // only.
     val dups = census
-      .select(col(idCol), min(col(idCol)).over(w).as("__rep"),
+      .select(col(idCol), col("__iv"), min(col(idCol)).over(w).as("__rep"),
         count(lit(1)).over(w).as("__cnt"))
       .filter(col("__cnt") >= 2)
-      .select(col(idCol), col("__rep"))
+      .select(col(idCol), col("__rep"), col("__iv"))
       .materialized()
     val dupNonReps = dups.filter(col(idCol) =!= col("__rep"))
       .select(col(idCol))
@@ -291,12 +297,11 @@ object TextDedup {
                    coalesce(col("__ib"), col("b"))).as("__b"),
           col(valueCol))
         .select(col("__a").as("a"), col("__b").as("b"), col(valueCol))
-      val m1 = dups.select(col("__rep"), col(idCol).as("__ia"))
+      val m1 = dups.select(col("__rep"), col(idCol).as("__ia"), col("__iv"))
       val m2 = dups.select(col("__rep"), col(idCol).as("__ib"))
       val intra = m1.join(m2, Seq("__rep"))
         .filter(col("__ia") < col("__ib"))
-        .select(col("__ia").as("a"), col("__ib").as("b"),
-          intraValue.as(valueCol))
+        .select(col("__ia").as("a"), col("__ib").as("b"), col("__iv").as(valueCol))
       cross.unionAll(intra)
     }
     DupCollapse(reps,
@@ -333,7 +338,7 @@ object TextDedup {
     * (measured: d_triangles 111 s → linear at ×100 twins, SCALING.md).
     *
     * @return repPairs (a, b, jaccard) with a < b over reps only;
-    *         dupMembers (rep, member) per [[collapseExactDupsFull]];
+    *         dupMembers (rep, member) per [[collapseExactDups]];
     *         expand maps rep pairs to the full member pair list — the
     *         identity `expand(repPairs) == minhashLshPairs(...)`. */
   /** `broadcastVerify` (r16 — the ngram verify-budget discipline applied
@@ -364,7 +369,7 @@ object TextDedup {
     // before banding (see collapseExactDups; keying on md5(text) keeps
     // array serialization out of the census scan, and a text-equal
     // group trivially satisfies the signature-equality contract)
-    val c = collapseExactDupsFull(sh0, idCol, md5(col(textCol)))
+    val c = collapseExactDups(sh0, idCol, Seq(md5(col(textCol))))
     // Rep-level derived frame, materialized ONCE (see the simhashPairs
     // twin comment): the band self-join's two sides and the verify
     // join's two sides otherwise each replan the corpus scan + tokenize
@@ -623,7 +628,7 @@ object TextDedup {
     // collapse identical texts before the band join (see
     // collapseExactDups; the minShingles domain gate is
     // signature-determined, so it runs first)
-    val (shRep, expand) = collapseExactDups(sh0, idCol, md5(col(textCol)))
+    val c = collapseExactDups(sh0, idCol, Seq(md5(col(textCol))))
     // Rep-level derived frame, materialized ONCE (see [[Materialize]]):
     // the band self-join's two sides and the verify join's two sides
     // otherwise each replan the corpus scan + tokenize + census window —
@@ -631,7 +636,7 @@ object TextDedup {
     // equal, so ReuseExchange never merges them (same failure mode as
     // the t_doc_terms r8 regression). One narrow row per rep: id,
     // shingle count, 64-bit signature, hashed shingle array.
-    val base = shRep.select(col(idCol), size(col("__sh")).as("__n"),
+    val base = c.reps.select(col(idCol), size(col("__sh")).as("__n"),
         simhash64(col("__sh")).as("__sim"),
         hashedShingles(col("__sh")).as("__shh"))
       .materialized()
@@ -678,7 +683,7 @@ object TextDedup {
       .repartition(col("a"), col("b"))
       .distinct()
     val shHashed = base.select(col(idCol), col("__shh").as("__sh"))
-    (expand, shHashed, bandedX, bandedOwn, cand)
+    (c.expand, shHashed, bandedX, bandedOwn, cand)
   }
 
   /** Bucket census of the simhash banded self-join (r18), a deterministic
@@ -836,13 +841,13 @@ object TextDedup {
     // shingles derive from the text, blocking from __len — collapse rows
     // identical on BOTH before the block join (see collapseExactDups;
     // the length-domain gate is signature-determined, so it runs first)
-    val (base, expand) = collapseExactDups(base0, idCol,
-      md5(concat(col(textCol), lit("|"), col("__len").cast("string"))))
-    val sh = base.select(col(idCol),
+    val c = collapseExactDups(base0, idCol,
+      Seq(md5(concat(col(textCol), lit("|"), col("__len").cast("string")))))
+    val sh = c.reps.select(col(idCol),
       charShingleHashes(col(textCol), n).as("__sh"))
-    val blocked = blockImages(base.select(col(idCol), col("__len")), idCol,
+    val blocked = blockImages(c.reps.select(col(idCol), col("__len")), idCol,
       blockWidth)
-    (base, expand, sh, blocked)
+    (c.reps, c.expand, sh, blocked)
   }
 
   /** (idCol, __len) rows exploded under their two block images
@@ -975,34 +980,27 @@ object TextDedup {
     blockedCandJoin(blockImages(rows, idCol, blockWidth), idCol, blockWidth)
   }
 
-  /** Estimated RAW (uncompressed logical) bytes the [[ngramJaccardPairs]]
-    * candidate verify must stage — the quantity that actually binds a
-    * single host's scratch (r15; the r14 doc-count proxy was calibrated
-    * to one corpus shape and broke silently on any other). One cheap
-    * aggregate over the corpus — one output row per length block, a few
-    * dozen rows at any scale — then driver-side arithmetic:
-    *
-    * Pairs are emitted at the LARGER doc's own block `b` (the
-    * uniqueness-by-construction rule in [[ngramJaccardPairs]]):
-    * within-block ~(p_b choose 2)·¾ (the ±blockWidth/2 band keeps ~¾ of
-    * same-block pairs under uniform-in-block lengths) plus cross pairs
-    * with block b−1 (~⅛ of the cross product sits inside the band;
-    * doubled to ¼ for safety). Each surviving candidate row then carries
-    * TWO sorted shingle-hash arrays of ~8·(len−n+1) bytes through the
-    * verify join's exchange — 16·meanLen bytes per pair dominates.
-    *
-    * The estimate is deliberately RAW: shuffle compression (lz4/zstd)
-    * shrinks it 20-30× on repetitive corpora (measured on the mutated
-    * boards), which the BUDGET parameter absorbs — see
-    * [[ngramShardBudgetBytes]]. */
-  def estimateNgramCandidateBytes(docs: DataFrame, textCol: String,
-                                  lenCol: Column, n: Int = 4,
-                                  blockWidth: Int = 100): Long =
-    estimateNgramStats(docs, textCol, lenCol, n, blockWidth).candidateBytes
-
   /** Plan-sizing estimates for the blocked ngram join, from one bounded
-    * aggregate (one output row per length block):
-    *   - `candidateBytes` drives the fallback shard count;
+    * aggregate over the corpus (one output row per length block, a few
+    * dozen rows at any scale), then driver-side arithmetic:
+    *   - `candidateBytes` drives the fallback shard count. It estimates
+    *     the RAW (uncompressed logical) bytes the [[ngramJaccardPairs]]
+    *     candidate verify must stage — the quantity that actually binds
+    *     a single host's scratch (r15; the r14 doc-count proxy was
+    *     calibrated to one corpus shape and broke silently on any
+    *     other). Pairs are emitted at the LARGER doc's own block `b`
+    *     (the uniqueness-by-construction rule in [[ngramJaccardPairs]]):
+    *     within-block ~(p_b choose 2)·¾ (the ±blockWidth/2 band keeps
+    *     ~¾ of same-block pairs under uniform-in-block lengths) plus
+    *     cross pairs with block b−1 (~⅛ of the cross product sits
+    *     inside the band; doubled to ¼ for safety). Each surviving
+    *     candidate row then carries TWO sorted shingle-hash arrays of
+    *     ~8·(len−n+1) bytes through the verify join's exchange —
+    *     16·meanLen bytes per pair dominates. The estimate is
+    *     deliberately RAW: shuffle compression (lz4/zstd) shrinks it
+    *     20-30× on repetitive corpora (measured on the mutated boards),
+    *     which the BUDGET parameter absorbs — see
+    *     [[ngramShardBudgetBytes]];
     *   - `shingleBytes` ([[verifyBroadcastBytes]] of total chars and
     *     docs — an upper bound on the hashed-shingle verify rows,
     *     PRE-collapse so it only overestimates)
@@ -1036,7 +1034,7 @@ object TextDedup {
   }
 
   /** Per-shard staging budget for [[ngramScratchShards]], in RAW
-    * candidate bytes ([[estimateNgramCandidateBytes]]'s unit).
+    * candidate bytes (the unit of [[NgramEstimate]]'s `candidateBytes`).
     * Default 1 TiB raw ≈ 25-40 GB of actual lz4/zstd-compressed shuffle
     * scratch on the synthetic corpora (measured: the mutated ×30 board
     * staged ~1 TB raw per rebalanced shard at a flat tens-of-GB disk
@@ -1128,18 +1126,18 @@ object TextDedup {
     // blocked path, applied BEFORE the collapse (signature-determined)
     val base0 = docs.filter(length(col(textCol)) >= n)
       .select(col(idCol), col(textCol))
-    val (base, expand) = collapseExactDups(base0, idCol, md5(col(textCol)))
+    val c = collapseExactDups(base0, idCol, Seq(md5(col(textCol))))
     // hashed shingles throughout (r15, matching ngramJaccardPairs): the
     // global total order PPJoin needs is ANY consistent one — ascending
     // (df, hash64) works exactly like (df, string) — and 64-bit hash
     // arrays are ~3x lighter through every exchange and probe, exact up
     // to xxhash64 collisions (~k²/2^64 per pair, negligible)
-    val sh = base.select(col(idCol), charShingleHashes(col(textCol), n).as("__sh"))
+    val sh = c.reps.select(col(idCol), charShingleHashes(col(textCol), n).as("__sh"))
     // same broadcast decision as the blocked path — the verify cliff is
     // identical (measured: the natural-shape ×30 board's prefix verify
     // ENOSPC'd through the fat SMJ exchange before this fix)
     val bcast = broadcastVerify.getOrElse {
-      val row = base.agg(sum(length(col(textCol))), count(lit(1))).head()
+      val row = c.reps.agg(sum(length(col(textCol))), count(lit(1))).head()
       verifyBroadcastBytes(if (row.isNullAt(0)) 0L else row.getLong(0),
         row.getLong(1)) <= ngramBroadcastBudgetBytes
     }
@@ -1156,7 +1154,7 @@ object TextDedup {
     // partitioning — still exactly ONE exchange, now at full width.
     val cand = prefixCandidatesFrom(sh, idCol, threshold)
       .repartition(col("a"), col("b")).distinct()
-    expand(verifyJaccard(cand, sh, idCol, threshold, broadcastShingles = bcast))
+    c.expand(verifyJaccard(cand, sh, idCol, threshold, broadcastShingles = bcast))
   }
 
   /** The measured blocked-vs-prefix routing threshold (SCALING.md

@@ -76,26 +76,28 @@ object VectorSim {
     * corpus. Output: (a, b, cos). */
   def cellCosinePairs(corpus: DataFrame, idCol: String, vecCol: String,
                       cellCol: String, threshold: Double): DataFrame = {
-    // Exact-dup collapse keyed on (vector, cell) — the full derivation
-    // signature of this pipeline: bucketing uses the cell, scoring the
-    // vector, so (vector, cell)-identical rows are interchangeable and
-    // a re-crawled corpus (K byte-identical copies per doc) would
-    // otherwise pay K² cosines inside every cell (measured: 38× wall
-    // at ×30 twins before the collapse). The threshold filter runs
-    // AFTER the expansion, so intra-group pairs are filtered on their
-    // computed self-cosine exactly like the uncollapsed plan (a
-    // zero-norm vector's NaN self-cosine still fails every threshold).
+    // Exact-dup collapse (TextDedup.collapseExactDups) keyed on
+    // (vector, cell) — the full derivation signature of this pipeline:
+    // bucketing uses the cell, scoring the vector, so (vector,
+    // cell)-identical rows are interchangeable, while equal vectors in
+    // different cells are not. A re-crawled corpus (K byte-identical
+    // copies per doc) would otherwise pay K² cosines inside every cell
+    // (measured: 38× wall at ×30 twins before the collapse). The
+    // threshold filter runs AFTER the expansion, so intra-group pairs
+    // are filtered on their computed self-cosine exactly like the
+    // uncollapsed plan (a zero-norm vector's NaN self-cosine still
+    // fails every threshold).
     val v0 = corpus.select(col(idCol), col(cellCol), col(vecCol))
-    val (reps, expand) =
-      collapseExactVecDups(v0, idCol, vecCol, Seq(col(cellCol)))
-    val v = reps.select(col(idCol).as("__id"), col(cellCol).as("__cell"),
+    val c = TextDedup.collapseExactDups(v0, idCol,
+      Seq(col(vecCol), col(cellCol)), "cos", cosine(col(vecCol), col(vecCol)))
+    val v = c.reps.select(col(idCol).as("__id"), col(cellCol).as("__cell"),
       col(vecCol).as("__v"))
     val x = v.alias("__vx"); val y = v.alias("__vy")
     val repPairs = x.join(y, col("__vx.__cell") === col("__vy.__cell") &&
         col("__vx.__id") < col("__vy.__id"))
       .withColumn("cos", cosine(col("__vx.__v"), col("__vy.__v")))
       .select(col("__vx.__id").as("a"), col("__vy.__id").as("b"), col("cos"))
-    expand(repPairs).filter(col("cos") >= threshold)
+    c.expand(repPairs).filter(col("cos") >= threshold)
   }
 
   /** IVF-style ANN: the corpus is pre-partitioned into cells (here the
@@ -334,8 +336,10 @@ object VectorSim {
     * @return (a, b) with a < b — candidate pairs for an exact rerank
     *         (see s_srp_lsh for the native-cosine rerank pattern; on
     *         corpora with exact-duplicate vectors, wrap the whole
-    *         candidates+rerank pipeline in [[collapseExactVecDups]]
-    *         so the band join sees only distinct vectors) */
+    *         candidates+rerank pipeline in
+    *         [[TextDedup.collapseExactDups]] keyed on the vector, with
+    *         the self-cosine as intra value, so the band join sees only
+    *         distinct vectors) */
   def srpCandidates(emb: DataFrame, idCol: String, vecCol: String,
                     dims: Int, nPlanes: Int = -1, bandBits: Int = -1,
                     seedK: Long = 2654435761L,
@@ -378,92 +382,6 @@ object VectorSim {
     * back — max(4, bits − 4) holds near-dup recall ≈0.9 across the
     * (8,4) → (13,9) → (15,11) ladder (see srpCandidates scaladoc). */
   def srpBands(bandBits: Int): Int = math.max(4, bandBits - 4)
-
-  /** Exact-duplicate collapse for vector-PAIR-LISTING pipelines (the
-    * embedding twin of [[graft.operators.TextDedup]]'s collapseExactDups;
-    * see that scaladoc for the output-identity argument). Byte-identical
-    * vectors collapse to their min-id representative BEFORE banding and
-    * rerank; `expand` maps representative pairs (a, b, cos) back to the
-    * full member pair list — cross-group pairs inherit the
-    * representative cosine (identical vectors ⇒ identical bands and
-    * cosines), intra-group pairs carry the COMPUTED self-cosine
-    * cos(v, v) of their group's vector (numerically ≈1 but not literal
-    * 1.0 — sqrt(d)² ≠ d in IEEE — and both engines compute the same
-    * value). Apply any cosine threshold AFTER expansion: cross pairs
-    * inherit the rep value so the filter commutes, and intra pairs get
-    * filtered on their actual self-cosine (a zero-norm vector's NaN
-    * self-cosine fails every threshold, matching the uncollapsed
-    * plan's NaN rerank). Candidate volume on a K-times-duplicated
-    * corpus drops from K² to the distinct volume + output-proportional
-    * expansion. */
-  def collapseExactVecDups(emb: DataFrame, idCol: String, vecCol: String,
-                           extraKeys: Seq[Column] = Nil)
-      : (DataFrame, DataFrame => DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.core.Materialize.MaterializeOps
-    // Dup-group-only window census — same plan shape and rationale as
-    // [[TextDedup.collapseExactDups]]: one narrow (id, vec) shuffle
-    // computes min(id)/count(*) per distinct vector, and everything
-    // downstream consumes only the groups of size >= 2. On a clean
-    // corpus that slice is tiny (reps is a broadcast anti-join, the
-    // expand joins broadcast); on a duplicated corpus it grows with
-    // the duplicated rows and AQE falls back to shuffled joins. A NULL
-    // vector never collapses: it is its own representative (singleton
-    // window partition keyed by its own id), matching the uncollapsed
-    // plan where NULL never equi-joins.
-    // extraKeys extend the group signature for pipelines whose pairing
-    // depends on more than the vector (e.g. cellCosinePairs blocks on a
-    // cell label: equal vectors in DIFFERENT cells are not
-    // interchangeable, so they must not collapse). A NULL in ANY key
-    // component forces a singleton, matching the uncollapsed plans
-    // where NULL never equi-joins.
-    val census = emb
-    val nullKey = (col(vecCol).isNull +: extraKeys.map(_.isNull))
-      .reduce(_ || _)
-    val w = Window.partitionBy(
-      (col(vecCol) +: extraKeys) :+ when(nullKey, col(idCol)): _*)
-    // Materialized (lazily): SIX downstream references (reps anti-join,
-    // expand's two member joins, the self-cosine frame, the intra
-    // self-join) otherwise each replan the embeddings scan + window.
-    // Rows carry the vector (selfCos needs it), sized by the duplicated
-    // subset only.
-    val dups = census
-      .select(col(idCol), col(vecCol),
-        min(col(idCol)).over(w).as("__rep"),
-        count(lit(1)).over(w).as("__cnt"))
-      .filter(col("__cnt") >= 2)
-      .select(col(idCol), col(vecCol), col("__rep"))
-      .materialized()
-    val dupNonReps = dups.filter(col(idCol) =!= col("__rep"))
-      .select(col(idCol))
-    val reps = emb.join(dupNonReps, Seq(idCol), "left_anti")
-    def expand(repPairs: DataFrame): DataFrame = {
-      val ma = dups.select(col("__rep").as("a"), col(idCol).as("__ia"))
-      val mb = dups.select(col("__rep").as("b"), col(idCol).as("__ib"))
-      val cross = repPairs
-        .join(ma, Seq("a"), "left_outer")
-        .join(mb, Seq("b"), "left_outer")
-        .select(
-          least(coalesce(col("__ia"), col("a")),
-                coalesce(col("__ib"), col("b"))).as("a"),
-          greatest(coalesce(col("__ia"), col("a")),
-                   coalesce(col("__ib"), col("b"))).as("b"),
-          col("cos"))
-      // intra pairs exist only inside dup groups, so the self-cosine
-      // comes from the dup reps' own vectors (computed, not literal —
-      // sqrt(d)^2 != d in IEEE, and both engines compute this value)
-      val selfCos = dups.filter(col(idCol) === col("__rep"))
-        .select(col("__rep"), cosine(col(vecCol), col(vecCol)).as("cos"))
-      val m1 = dups.select(col("__rep"), col(idCol).as("__ia"))
-      val m2 = dups.select(col("__rep"), col(idCol).as("__ib"))
-      val intra = m1.join(m2, Seq("__rep"))
-        .filter(col("__ia") < col("__ib"))
-        .join(selfCos, "__rep")
-        .select(col("__ia").as("a"), col("__ib").as("b"), col("cos"))
-      cross.unionAll(intra)
-    }
-    (reps, expand)
-  }
 
   /** SemDeDup — embedding-level semantic dedup (the builder brief's
     * embedding-cosine near-dup family): assign every vector to its

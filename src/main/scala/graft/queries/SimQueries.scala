@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.core.Materialize.MaterializeOps
 import graft.core.Tables
-import graft.operators.VectorSim
+import graft.operators.{TextDedup, VectorSim}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -114,13 +114,13 @@ object SimQueries {
       // are positive. The oracle's hyperplane CROSS JOIN and band
       // GROUP BY have no plan counterpart; the codegen'd kernel is what
       // makes the planes-per-vector pass cheap
-      // exact-duplicate collapse before banding (collapseExactVecDups —
-      // the ×10 twin board put the uncollapsed band join at 13 s on
-      // ~100× true candidates); the threshold filter runs AFTER the
-      // expansion so intra-group pairs are filtered on their computed
-      // self-cosine, exactly like the uncollapsed plan
-      val (repEmb, expandPairs) =
-        VectorSim.collapseExactVecDups(emb, "vec_id", "embedding")
+      // exact-duplicate collapse keyed on the vector before banding
+      // (TextDedup.collapseExactDups — the ×10 twin board put the
+      // uncollapsed band join at 13 s on ~100× true candidates); intra
+      // pairs carry the computed self-cosine and the threshold filter
+      // runs AFTER the expansion, exactly like the uncollapsed plan
+      val c = TextDedup.collapseExactDups(emb, "vec_id", Seq(col("embedding")),
+        "cos", VectorSim.cosine(col("embedding"), col("embedding")))
       val nRaw = embCount(s, dir)
       // RERANK SHAPE (r14): with a broadcastable vector side, rerank the
       // RAW band hits (dedup = false) against broadcast(va)/(vb) and
@@ -141,10 +141,10 @@ object SimQueries {
       // falls back to the old order: distinct FIRST (so the shuffled
       // rerank joins see the minimum row count), shuffled joins after.
       val bcastable = nRaw <= 500000L
-      val cand = VectorSim.srpCandidates(repEmb, "vec_id", "embedding",
+      val cand = VectorSim.srpCandidates(c.reps, "vec_id", "embedding",
         dims = 64, numVectors = nRaw, dedup = !bcastable)
-      val va = repEmb.select(col("vec_id").as("a"), col("embedding").as("__ea"))
-      val vb = repEmb.select(col("vec_id").as("b"), col("embedding").as("__eb"))
+      val va = c.reps.select(col("vec_id").as("a"), col("embedding").as("__ea"))
+      val vb = c.reps.select(col("vec_id").as("b"), col("embedding").as("__eb"))
       // NATIVE cosine kernel, not dotFold over the raw float arrays:
       // zip_with multiplies float32 on float inputs while the oracle
       // multiplies float64 — a 1.5e-8 cos divergence measured across
@@ -163,7 +163,7 @@ object SimQueries {
         val f = reranked.filter(col("cos") >= 0.4)
         if (bcastable) f.distinct() else f
       }
-      expandPairs(repPairs)
+      c.expand(repPairs)
         .filter(col("cos") >= 0.4)
         .select(col("a"), col("b"),
           floor(col("cos") * 1e6).cast("long").as("cos_micro"))

@@ -493,16 +493,15 @@ object TextQueries {
       // segment join (collapseExactDups — twin pairs expand back with
       // dist 0 = lev(h, h); the dist >= 0 threshold commutes with the
       // expansion because cross pairs inherit the rep distance)
-      val (repDocs, expandPairs) = graft.operators.TextDedup
-        .collapseExactDups(
-          Tables.documents(s, dir)
-            .select(col("doc_id"), col("text"), col("n_chars")),
-          "doc_id",
-          md5(concat(substring(col("text"), 1, 40), lit("|"),
-            col("n_chars").cast("string"))),
-          valueCol = "dist", intraValue = lit(0))
+      val c = graft.operators.TextDedup.collapseExactDups(
+        Tables.documents(s, dir)
+          .select(col("doc_id"), col("text"), col("n_chars")),
+        "doc_id",
+        Seq(md5(concat(substring(col("text"), 1, 40), lit("|"),
+          col("n_chars").cast("string")))),
+        valueCol = "dist", intraValue = lit(0))
       val cand = graft.operators.TextDedup.passJoinCandidates(
-        repDocs, "doc_id", "text",
+        c.reps, "doc_id", "text",
         maxEdits = 5, headLen = 40, lengthBand = 10,
         lenCol = Some("n_chars"))
       // thresholded kernel: the banded DP abandons a pair the moment its
@@ -520,7 +519,7 @@ object TextQueries {
         .withColumn("dist", levenshtein(col("__ha"), col("__hb"), 5))
         .filter(col("dist") >= 0)
         .select(col("a"), col("b"), col("dist"))
-      expandPairs(repPairs)
+      c.expand(repPairs)
         .orderBy(col("a"), col("b"))
     },
 

@@ -80,6 +80,140 @@ class DedupPropertySpec extends SparkSpec {
     assert(sh == shNull && sh.nonEmpty)
   }
 
+  /** A null-id row inside an exact-dup group must not change the pair
+    * list: min(id) skipped the null, so the group's rep stood in for it
+    * in `expand` and every cross pair of the group came out twice. The
+    * collapse now keeps null ids out of every dup group, and the
+    * candidate joins drop them. */
+  test("null-id row in an exact-dup group: each pair emitted once") {
+    import org.apache.spark.sql.{DataFrame, Row, types => T}
+    import graft.operators.VectorSim
+    val t1 = corpus.head._2
+    val t2 = t1 + " zz9"
+    val docSchema = T.StructType(Seq(
+      T.StructField("doc_id", T.LongType, nullable = true),
+      T.StructField("text", T.StringType, nullable = true)))
+    def docs(rows: Seq[Row]) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 2), docSchema)
+    val clean = Seq(Row(5L, t1), Row(7L, t1), Row(9L, t2))
+    val want = Seq((5L, 7L), (5L, 9L), (7L, 9L))
+    def pairs(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    def check(name: String, op: DataFrame => DataFrame,
+              rows: Seq[Row] => DataFrame): Unit = {
+      assert(pairs(op(rows(clean))) == want, s"$name without the null id")
+      assert(pairs(op(rows(Row(null, t1) +: clean))) == want,
+        s"$name with a null id in the dup group")
+    }
+    check("ngramJaccardPairs", d => TextDedup.ngramJaccardPairs(d, "doc_id",
+      "text", lenCol = length(col("text")), n = 4, threshold = 0.6), docs)
+    check("minhashLshPairs", d => TextDedup.minhashLshPairs(d, "doc_id",
+      "text", shingleN = 3, threshold = 0.7), docs)
+    check("simhashPairs", d => TextDedup.simhashPairs(d, "doc_id", "text",
+      shingleN = 3, maxHamming = 15, threshold = 0.5, minShingles = 16), docs)
+    check("ngramJaccardPairsPrefix", d => TextDedup.ngramJaccardPairsPrefix(
+      d, "doc_id", "text", n = 4, threshold = 0.85), docs)
+    // the vector pair listers: v2 is a small perturbation of v1
+    val rnd = new scala.util.Random(71)
+    val v1 = Seq.fill(16)((rnd.nextDouble() * 2 - 1).toFloat)
+    val v2 = v1.updated(0, v1.head + 0.01f)
+    val vecSchema = T.StructType(Seq(
+      T.StructField("vec_id", T.LongType, nullable = true),
+      T.StructField("label", T.StringType, nullable = true),
+      T.StructField("embedding", T.ArrayType(T.FloatType), nullable = true)))
+    def vecs(rows: Seq[Row]) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map {
+        case Row(id, t) => Row(id, "c0", if (t == t1) v1 else v2)
+      }, 2), vecSchema)
+    check("cellCosinePairs", e => VectorSim.cellCosinePairs(e, "vec_id",
+      "embedding", "label", 0.4), vecs)
+    check("srp collapse+expand", { e =>
+      val c = TextDedup.collapseExactDups(e, "vec_id", Seq(col("embedding")),
+        "cos", VectorSim.cosine(col("embedding"), col("embedding")))
+      val va = c.reps.select(col("vec_id").as("a"), col("embedding").as("__ea"))
+      val vb = c.reps.select(col("vec_id").as("b"), col("embedding").as("__eb"))
+      c.expand(VectorSim.srpCandidates(c.reps, "vec_id", "embedding", dims = 16)
+        .join(va, "a").join(vb, "b")
+        .select(col("a"), col("b"),
+          VectorSim.cosine(col("__ea"), col("__eb")).as("cos")))
+    }, vecs)
+  }
+
+  /** The collapse on degenerate inputs: expand(pairs over reps) must
+    * equal the same pair relation brute-forced over the UNCOLLAPSED
+    * rows — no duplicate row, no pair with a null id — under single and
+    * two-component keys, with a literal and a computed intra value.
+    * The pair relation is signature-determined, as the collapse
+    * requires: rows pair when their k1 share a first letter, and the
+    * value is a function of both rows' keys. */
+  test("collapseExactDups degenerate inputs == brute-force pairs over all rows") {
+    import org.apache.spark.sql.{DataFrame, Row, types => T}
+    type R = (Option[Long], Option[String], Option[String])
+    val schema = T.StructType(Seq(
+      T.StructField("id", T.LongType, nullable = true),
+      T.StructField("k1", T.StringType, nullable = true),
+      T.StructField("k2", T.StringType, nullable = true)))
+    def r(id: java.lang.Long, k1: String, k2: String): R =
+      (Option(id).map(_.longValue), Option(k1), Option(k2))
+    val singles = Seq(r(20L, "ac", "y"), r(21L, "ad", "x"), r(22L, "b1", "x"),
+      r(23L, "ae", null))
+    val cases: Seq[(String, Seq[R])] = Seq(
+      "empty" -> Nil,
+      "single row" -> Seq(r(1L, "ab", "x")),
+      "all identical" -> (1L to 6L).map(i => r(i, "ab", "x")),
+      "hot key next to singletons" -> ((1L to 8L).map(i => r(i, "ab", "x")) ++ singles),
+      "null key" -> (Seq(r(1L, null, "x"), r(2L, null, "x"), r(3L, "ab", "x"),
+        r(4L, "ab", "x")) ++ singles),
+      "null keys in a multi-key group" -> (Seq(r(1L, "ab", null), r(2L, "ab", null),
+        r(3L, "ab", "x"), r(4L, "ab", "x"), r(5L, "ab", "y")) ++ singles),
+      "null id alone" -> (Seq(r(null, "zz", "x"), r(3L, "ab", "x"),
+        r(4L, "ab", "x")) ++ singles),
+      "null id in a dup group" -> (Seq(r(null, "ab", "x"), r(5L, "ab", "x"),
+        r(7L, "ab", "x"), r(9L, "ac", "x")) ++ singles))
+    for ((name, rows) <- cases; keys <- Seq(Seq("k1"), Seq("k1", "k2"));
+         computed <- Seq(false, true)) {
+      val label = s"$name, keys ${keys.mkString("+")}, ${if (computed) "computed" else "literal"}"
+      // driver-side relation over every row
+      def ks(x: R): Seq[Option[String]] = keys.map(k => if (k == "k1") x._2 else x._3)
+      def f(x: R): Double = ks(x).map(_.fold(0)(_.length)).sum.toDouble
+      def value(x: R, y: R): Double =
+        if (computed) f(x) * f(y) + 0.25
+        else if (ks(x).zip(ks(y)).forall { case (p, q) => p.isDefined && p == q }) 1.0
+        else 0.5
+      val brute = (for {
+        x <- rows; y <- rows
+        if x._1.isDefined && y._1.isDefined && x._1.get < y._1.get
+        if x._2.isDefined && y._2.isDefined && x._2.get.head == y._2.get.head
+      } yield (x._1.get, y._1.get, value(x, y))).sorted
+      // the same relation in Spark, over the representatives only
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(
+        rows.map(x => Row(x._1.orNull, x._2.orNull, x._3.orNull)), 2), schema)
+      def fc(p: String): org.apache.spark.sql.Column = keys
+        .map(k => coalesce(length(col(s"$p$k")), lit(0))).reduce(_ + _).cast("double")
+      val c = TextDedup.collapseExactDups(df, "id", keys.map(col), "v",
+        if (computed) fc("") * fc("") + 0.25 else lit(1.0))
+      val x = c.reps.select(col("id").as("xid") +: keys.map(k => col(k).as(s"x$k")): _*)
+      val y = c.reps.select(col("id").as("yid") +: keys.map(k => col(k).as(s"y$k")): _*)
+      val same = keys.map(k => col(s"x$k") === col(s"y$k")).reduce(_ && _)
+      val repPairs = x.join(y, substring(col("xk1"), 1, 1) === substring(col("yk1"), 1, 1) &&
+          col("xid") < col("yid"))
+        .select(col("xid").as("a"), col("yid").as("b"),
+          (if (computed) fc("x") * fc("y") + 0.25
+           else when(same, lit(1.0)).otherwise(lit(0.5))).as("v"))
+      val got = c.expand(repPairs).collect().map(r => (r.get(0), r.get(1), r.getDouble(2)))
+      assert(got.forall { case (a, b, _) => a != null && b != null }, s"$label: null id")
+      val gotPairs = got.toSeq
+        .map { case (a, b, v) => (a.asInstanceOf[Long], b.asInstanceOf[Long], v) }.sorted
+      assert(gotPairs == brute, s"$label: got $gotPairs, want $brute")
+      // every dup group's rep is its minimum member, and no null id is a member
+      val members = c.dupMembers.collect().map(r => (r.get(0), r.get(1)))
+      assert(members.forall { case (rep, m) => rep != null && m != null }, s"$label: null member")
+      members.groupBy(_._1).foreach { case (rep, ms) =>
+        assert(ms.map(_._2.asInstanceOf[Long]).min == rep, s"$label: rep $rep is not the group min")
+      }
+    }
+  }
+
   test("minhashLshPairs == driver-side brute-force exact Jaccard") {
     import spark.implicits._
     val docs = corpus.toDF("doc_id", "text")
@@ -824,8 +958,8 @@ class DedupPropertySpec extends SparkSpec {
     val estCorpus = spark.createDataFrame(
       (1 to 4).map(i => (i.toLong, "x" * 12)) ++
         (5 to 6).map(i => (i.toLong, "y" * 25))).toDF("doc_id", "text")
-    val est = TextDedup.estimateNgramCandidateBytes(estCorpus, "text",
-      length(col("text")), n = 4, blockWidth = 10)
+    val est = TextDedup.estimateNgramStats(estCorpus, "text",
+      length(col("text")), n = 4, blockWidth = 10).candidateBytes
     val estWant = ((4.0 * 3 / 2 * 0.75) * 16 * 12 +
       (2.0 * 1 / 2 * 0.75 + 2.0 * 4 / 4) * 16 * 25).toLong
     assert(est == estWant, s"estimator arithmetic: got $est want $estWant")
@@ -883,9 +1017,10 @@ class DedupPropertySpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val plain = toSet(rerank(emb,
       VectorSim.srpCandidates(emb, "vec_id", "embedding", dims = dim)))
-    val (reps, expand) = VectorSim.collapseExactVecDups(emb, "vec_id", "embedding")
-    val collapsed = toSet(expand(rerank(reps,
-      VectorSim.srpCandidates(reps, "vec_id", "embedding", dims = dim))))
+    val c = TextDedup.collapseExactDups(emb, "vec_id", Seq(col("embedding")), "cos",
+      VectorSim.cosine(col("embedding"), col("embedding")))
+    val collapsed = toSet(c.expand(rerank(c.reps,
+      VectorSim.srpCandidates(c.reps, "vec_id", "embedding", dims = dim))))
     assert(collapsed == plain, s"mismatch: missing=${(plain -- collapsed).take(3)} " +
       s"extra=${(collapsed -- plain).take(3)}")
     assert(plain.exists { case (a, b, _) => a >= 500 || b >= 500 },

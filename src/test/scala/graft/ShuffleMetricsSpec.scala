@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.graft.GraftSql
 
-import graft.core.QueryMetrics
+import graft.core.{QueryMetrics, Tables}
 
 /** Measured-data-movement audits. PlanAuditSpec pins plan SHAPE (broadcast
   * nodes present, no cartesians); these pin the actual task-metric flow —
@@ -29,6 +29,15 @@ class ShuffleMetricsSpec extends SparkSpec {
     // planned as ones
     assert(m.broadcastBytes.exists(_ > 0),
       s"j1 broadcast builds (dataSize bytes): ${m.broadcastBytes}")
+    // a build's row count is the same on any host (its dataSize is
+    // allocated hash-relation pages, which scale with heap and cores):
+    // each build holds exactly its broadcast dim's rows. Besides the
+    // hinted nation and region, customer (150 rows at sf0.001) is under
+    // the auto-broadcast threshold, so it is built as one too.
+    val dims = Seq(Tables.customer(spark, sf001), Tables.nation(spark, sf001),
+      Tables.region(spark, sf001)).map(_.count())
+    assert(m.broadcastRows.sorted == dims.sorted,
+      s"j1 broadcast build rows ${m.broadcastRows}, dims $dims")
   }
 
   test("a1: map-side combine holds — shuffle carries group rows only") {

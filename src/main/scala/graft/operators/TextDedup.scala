@@ -155,24 +155,101 @@ object TextDedup {
     GraftSql.column(graft.functions.ArrayJaccard(
       GraftSql.expression(a), GraftSql.expression(b)))
 
-  /** Candidate pairs (idA < idB) of docs sharing at least one bucket.
-    * `buckets` is (id, bucketKey…) with one row per (doc, bucket).
-    * One shuffle on the bucket key; within-bucket self-join. The
-    * user-origin repartition in front of the distinct keeps AQE's
-    * byte-based coalesce from pinning the downstream verify (broadcast
-    * probes + Jaccard kernel) to ~one task on skinny pair rows — the
-    * same move as the prefix path's; the distinct's aggregate reuses
-    * the partitioning, so it is still exactly one exchange (r16). */
-  private def pairsFromBuckets(buckets: DataFrame, idCol: String,
-                               bucketCols: Seq[String]): DataFrame = {
-    val x = buckets.alias("__lsh_x")
-    val y = buckets.alias("__lsh_y")
-    val keyEq = bucketCols.map(c => col(s"__lsh_x.$c") === col(s"__lsh_y.$c"))
-      .reduce(_ && _)
-    x.join(y, keyEq && col(s"__lsh_x.$idCol") < col(s"__lsh_y.$idCol"))
-      .select(col(s"__lsh_x.$idCol").as("a"), col(s"__lsh_y.$idCol").as("b"))
-      .repartition(col("a"), col("b"))
-      .distinct()
+  /** A column of one side of [[bucketPairs]]: `X("__len")` is x's `__len`. */
+  private[graft] type PairSide = String => Column
+
+  /** How [[bucketPairs]] admits and orients a pair. */
+  private[graft] sealed trait PairRule
+  /** x.id < y.id, emitted as (x.id, y.id): each unordered pair once per
+    * shared bucket of a symmetric join. */
+  private[graft] case object Lower extends PairRule
+  /** x.id ≠ y.id, emitted as (least, greatest): an asymmetric join whose
+    * pair may meet in both orientations (the caller then wants `distinct`). */
+  private[graft] case object NotEqual extends PairRule
+  /** The caller's exactly-once predicate, emitted as (least, greatest). */
+  private[graft] final case class Designated(pred: (PairSide, PairSide) => Column)
+    extends PairRule
+
+  /** The ONE candidate-pair join of every pair operator: rows of `x` and
+    * `y` equal on every `keys` column meet, and each admitted combo is
+    * emitted as (a, b) plus the caller's `out` columns. One shuffle on
+    * the keys (or a broadcast of a small side), never a cartesian. The
+    * sides are the caller's: asymmetric images, a salt key and its
+    * repartition, and join hints are built before the call, so `x` and
+    * `y` may be the same frame or two different ones.
+    *
+    * Shared decisions, made here once:
+    *   - NULL IDS are dropped explicitly on both sides. A [[Designated]]
+    *     predicate need not touch the ids at all, and a [[NotEqual]]
+    *     pair goes through least/greatest, so without the filter a
+    *     null-id row could pair and come out as a pair with a null end.
+    *     A null key component never matches (SQL equality), so a row
+    *     with one reaches no bucket.
+    *   - CONDITION ORDER: keys, then [[Lower]]'s id compare (it halves
+    *     the combos of a symmetric join), then `residual`, then the
+    *     [[NotEqual]] / [[Designated]] test. Conjuncts short-circuit left
+    *     to right in codegen.
+    *   - `distinct` removes pairs that meet in several buckets behind a
+    *     user-origin repartition on (a, b). Without it, the distinct's
+    *     planner exchange hashes skinny pair rows and AQE's byte-based
+    *     coalesce pins the downstream verify (broadcast probes + kernel,
+    *     the CPU-heavy part) to about one task (measured ~5 s single-core
+    *     on the prefix path at sf0.1). A user-origin exchange is never
+    *     coalesced, and the distinct's aggregate reuses its partitioning,
+    *     so it is still exactly one exchange (r16).
+    * The combo volume of this join is [[bucketCensus]] of the same
+    * sides; DedupPropertySpec pins the join against brute force on
+    * degenerate inputs under every rule. */
+  private[graft] def bucketPairs(x: DataFrame, y: DataFrame, idCol: String,
+      keys: Seq[String], rule: PairRule,
+      residual: (PairSide, PairSide) => Column = (_, _) => lit(true),
+      distinct: Boolean = false,
+      out: (PairSide, PairSide) => Seq[Column] = (_, _) => Nil): DataFrame = {
+    val X: PairSide = c => col(s"__bp_x.$c")
+    val Y: PairSide = c => col(s"__bp_y.$c")
+    val (first, last, a, b) = rule match {
+      case Lower => (X(idCol) < Y(idCol), lit(true), X(idCol), Y(idCol))
+      case NotEqual => (lit(true), X(idCol) =!= Y(idCol),
+        least(X(idCol), Y(idCol)), greatest(X(idCol), Y(idCol)))
+      case Designated(pred) => (lit(true), pred(X, Y),
+        least(X(idCol), Y(idCol)), greatest(X(idCol), Y(idCol)))
+    }
+    val keyEq = keys.map(k => X(k) === Y(k)).reduce(_ && _)
+    val pairs = x.filter(col(idCol).isNotNull).alias("__bp_x")
+      .join(y.filter(col(idCol).isNotNull).alias("__bp_y"),
+        keyEq && first && residual(X, Y) && last)
+      .select(a.as("a") +: b.as("b") +: out(X, Y): _*)
+    if (distinct) pairs.repartition(col("a"), col("b")).distinct() else pairs
+  }
+
+  /** Combo census of [[bucketPairs]] over the same sides and keys, a
+    * deterministic count on any host. Per bucket of x (a bucket is one
+    * value of `keys`; rows with a null id or key reach none, as in the
+    * join) nx = |x rows| and ny = |y rows|, left-outer so an x bucket
+    * with no y rows counts with ny = 0. One row:
+    *   - `buckets`: x buckets;
+    *   - `scanCombos`: Σ nx·ny — the combos the merge scan walks before
+    *     any id rule or residual, which is exactly the row count of the
+    *     keys-only equi-join of the two sides;
+    *   - `pairCombosX`: Σ nx(nx−1)/2, the r17 pair-combo metric;
+    *   - `maxBucketX`, `maxBucketY`: the skew — whether a wall is a few
+    *     straggler tasks (hot buckets are byte-tiny, so AQE's skew split
+    *     never fires) or spread volume.
+    * A salt splits x rows, but its Σ over salts restores nx·ny per
+    * bucket, so census callers pass the sides before any salt. */
+  private[graft] def bucketCensus(x: DataFrame, y: DataFrame, idCol: String,
+                                  keys: Seq[String]): Row = {
+    def by(df: DataFrame, n: String) = df
+      .filter((col(idCol) +: keys.map(col)).map(_.isNotNull).reduce(_ && _))
+      .groupBy(keys.map(col): _*).agg(count(lit(1)).as(n))
+    val ny = coalesce(col("ny"), lit(0L))
+    by(x, "nx").join(by(y, "ny"), keys, "left_outer")
+      .agg(count(lit(1)).as("buckets"),
+        coalesce(sum(col("nx") * ny), lit(0L)).as("scanCombos"),
+        coalesce(sum((col("nx") * (col("nx") - 1) / 2).cast("long")), lit(0L))
+          .as("pairCombosX"),
+        max(col("nx")).as("maxBucketX"), max(ny).as("maxBucketY"))
+      .head()
   }
 
   /** See [[collapseExactDups]]. */
@@ -381,7 +458,9 @@ object TextDedup {
     val banded = base
       .select(col(idCol), posexplode(col("__mb")))
       .withColumnRenamed("pos", "__band").withColumnRenamed("col", "__bsig")
-    val cand = pairsFromBuckets(banded, idCol, Seq("__band", "__bsig"))
+    // a pair sharing several bands meets once per band: distinct
+    val cand = bucketPairs(banded, banded, idCol, Seq("__band", "__bsig"),
+      Lower, distinct = true)
     // verify over hashed shingles: same Jaccard (collision-negligible),
     // far fewer join-shuffle bytes than the string arrays
     val shHashed = base.select(col(idCol), col("__shh").as("__sh"))
@@ -435,7 +514,9 @@ object TextDedup {
   def winnowPairs(docs: DataFrame, idCol: String, textCol: String,
                   k: Int = 5, w: Int = 8, minShared: Int = 3,
                   maxDocFreq: Int = WinnowDefaultMaxDocFreq): DataFrame = {
-    val all = docs.select(col(idCol),
+    // a null-id row is no document of the pair relation, so it must not
+    // count toward a fingerprint's document frequency (and the cap) either
+    val all = docs.filter(col(idCol).isNotNull).select(col(idCol),
         explode(winnowFingerprints(col(textCol), k, w)).as("__fp"))
     // document frequencies via groupBy (NOT a window over __fp: map-side
     // partial counts mean one row per fingerprint per mapper crosses the
@@ -447,10 +528,9 @@ object TextDedup {
       .filter(col("__df") <= maxDocFreq)
       .select("__fp")
     val fp = all.join(keep, Seq("__fp"), "left_semi")
-    val x = fp.alias("__wn_x"); val y = fp.alias("__wn_y")
-    x.join(y, col("__wn_x.__fp") === col("__wn_y.__fp") &&
-        col(s"__wn_x.$idCol") < col(s"__wn_y.$idCol"))
-      .groupBy(col(s"__wn_x.$idCol").as("a"), col(s"__wn_y.$idCol").as("b"))
+    // one combo per shared fingerprint: the count IS n_shared
+    bucketPairs(fp, fp, idCol, Seq("__fp"), Lower)
+      .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
   }
@@ -603,12 +683,15 @@ object TextDedup {
       broadcastShingles = broadcastVerify.getOrElse(false)))
   }
 
+  /** The bucket keys of the simhash band join: band index, band value
+    * and log2-size block. */
+  private[graft] val SimhashBandKeys = Seq("__band", "__bval", "__lblk")
+
   /** The simhash path's internal stage frames — (expand, hashed-shingle
     * projection, x-side band rows [both log2-size images], y-side band
-    * rows [own log2-size block only], distinct candidate pairs) — shared
-    * by [[simhashPairs]] and [[simhashCensus]]: one definition, so the
-    * census counts the EXACT frames the shipped plan joins. Not a dedup
-    * API — callers want [[simhashPairs]]. */
+    * rows [own log2-size block only], distinct candidate pairs). The
+    * sides are exposed so [[bucketCensus]] counts the EXACT frames the
+    * shipped plan joins. Not a dedup API — callers want [[simhashPairs]]. */
   private[graft] def simhashInternals(docs: DataFrame, idCol: String,
       textCol: String, shingleN: Int, maxHamming: Int, numBands: Int,
       minShingles: Int)
@@ -640,12 +723,7 @@ object TextDedup {
         simhash64(col("__sh")).as("__sim"),
         hashedShingles(col("__sh")).as("__shh"))
       .materialized()
-    // null-id rows dropped explicitly (see blockedCandJoin — same
-    // reasoning; here id inequality would still null-reject, but the
-    // filter keeps the optimizer from inferring isnotnull(least/greatest)
-    // conjuncts into the per-combo join condition)
     val sims = base.select(col(idCol), col("__n"), col("__sim"))
-      .filter(col(idCol).isNotNull)
     // Narrow bands have few distinct values (a 4-bit band: 16), so a band
     // key alone buckets O(N) docs. Compose a log2(shingle-count) block
     // into the key: Jaccard ≥ t ≥ 0.5 forces a size ratio ≥ t, i.e. the
@@ -656,8 +734,8 @@ object TextDedup {
     // so every qualifying pair still shares a bucket while the y rows
     // and the within-bucket combo volume of the self-join are half those
     // of two-image sides. An equal-size pair meets once per matching band
-    // in BOTH orientations; id inequality + least/greatest normalization
-    // and the downstream distinct() absorb that multiplicity.
+    // in BOTH orientations: the NotEqual rule's least/greatest and the
+    // distinct absorb that multiplicity.
     def withBands(df: DataFrame): DataFrame = df
       .select(col(idCol), col("__sim"), col("__lblk"),
         posexplode(transform(sequence(lit(0), lit(numBands - 1)),
@@ -670,44 +748,11 @@ object TextDedup {
     val bandedOwn = withBands(sims
       .select(col(idCol), col("__sim"),
         floor(log(2.0, col("__n"))).as("__lblk")))
-    val x = bandedX.alias("__sim_x"); val y = bandedOwn.alias("__sim_y")
-    val cand = x.join(y,
-        col("__sim_x.__band") === col("__sim_y.__band") &&
-        col("__sim_x.__bval") === col("__sim_y.__bval") &&
-        col("__sim_x.__lblk") === col("__sim_y.__lblk") &&
-        col(s"__sim_x.$idCol") =!= col(s"__sim_y.$idCol"))
-      .filter(bit_count(col("__sim_x.__sim").bitwiseXOR(col("__sim_y.__sim"))) <= maxHamming)
-      .select(least(col(s"__sim_x.$idCol"), col(s"__sim_y.$idCol")).as("a"),
-              greatest(col(s"__sim_x.$idCol"), col(s"__sim_y.$idCol")).as("b"))
-      // user repartition before the distinct — see pairsFromBuckets
-      .repartition(col("a"), col("b"))
-      .distinct()
+    val cand = bucketPairs(bandedX, bandedOwn, idCol, SimhashBandKeys, NotEqual,
+      residual = (x, y) => bit_count(x("__sim").bitwiseXOR(y("__sim"))) <= maxHamming,
+      distinct = true)
     val shHashed = base.select(col(idCol), col("__shh").as("__sh"))
     (c.expand, shHashed, bandedX, bandedOwn, cand)
-  }
-
-  /** Bucket census of the simhash banded self-join (r18), a deterministic
-    * count on any host: the merge scan walks Σ nx·ny combos over the
-    * (band, bval, lblk) buckets of the x and y sides (`scanCombos`); the
-    * r17 pair-combo metric Σ nx(nx−1)/2 is `pairCombosX`. The bucket
-    * maxima show the skew — whether the wall is a few straggler tasks
-    * (hot buckets are byte-tiny, so AQE's skew split never fires) or
-    * spread volume. One row: buckets, scanCombos, pairCombosX,
-    * maxBucketX, maxBucketY. */
-  private[graft] def simhashCensus(docs: DataFrame, idCol: String,
-      textCol: String, shingleN: Int, maxHamming: Int, numBands: Int,
-      minShingles: Int): Row = {
-    val (_, _, bandedX, bandedOwn, _) = simhashInternals(docs, idCol,
-      textCol, shingleN, maxHamming, numBands, minShingles)
-    def by(df: DataFrame, n: String) = df
-      .groupBy(col("__band"), col("__bval"), col("__lblk"))
-      .agg(count(lit(1)).as(n))
-    by(bandedX, "nx").join(by(bandedOwn, "ny"), Seq("__band", "__bval", "__lblk"))
-      .agg(count(lit(1)).as("buckets"),
-        sum((col("nx") * col("ny")).cast("long")).as("scanCombos"),
-        sum((col("nx") * (col("nx") - 1) / 2).cast("long")).as("pairCombosX"),
-        max(col("nx")).as("maxBucketX"), max(col("ny")).as("maxBucketY"))
-      .head()
   }
 
   /** Blocked exact n-gram Jaccard dedup: docs are bucketed by
@@ -825,10 +870,9 @@ object TextDedup {
   }
 
   /** The blocked path's internal stage frames — (post-collapse reps,
-    * expand, hashed shingles, exploded block rows) — shared by
-    * [[ngramJaccardPairs]] and [[ngramCandCensus]]: one definition, so
-    * the census counts the EXACT frames the shipped plan joins, not a
-    * reimplementation that can drift. Not a dedup API — callers want
+    * expand, hashed shingles, exploded block rows). The block rows are
+    * exposed so [[bucketCensus]] of their [[blockedSides]] counts the
+    * EXACT frames the shipped plan joins. Not a dedup API — callers want
     * [[ngramJaccardPairs]]. */
   private[graft] def ngramBlockedInternals(docs: DataFrame, idCol: String,
       textCol: String, lenCol: Column, n: Int, blockWidth: Int)
@@ -859,12 +903,10 @@ object TextDedup {
   }
 
   /** The (x, y) sides of [[blockedCandJoin]] before any salt: x keeps
-    * both images of every non-null-id row, y only each row's own block. */
-  private[graft] def blockedSides(blk: DataFrame, idCol: String,
-                                  blockWidth: Int): (DataFrame, DataFrame) = {
-    val x = blk.filter(col(idCol).isNotNull)
-    (x, x.filter(col("__blk") === (col("__len") / blockWidth).cast("long")))
-  }
+    * both images of every row, y only each row's own block. */
+  private[graft] def blockedSides(blk: DataFrame,
+                                  blockWidth: Int): (DataFrame, DataFrame) =
+    (blk, blk.filter(col("__blk") === (col("__len") / blockWidth).cast("long")))
 
   /** The length-blocked candidate join shared by [[ngramJaccardPairs]]
     * and the measurement surface [[ngramBlockedCandidates]]: `blk` holds
@@ -903,16 +945,9 @@ object TextDedup {
   private[graft] def blockedCandJoin(blk: DataFrame, idCol: String,
                                      blockWidth: Int,
                                      streamSalt: Int = 1): DataFrame = {
-    val maxDiff = blockWidth / 2
-    // Null ids are dropped EXPLICITLY: the (len, id)-max designation's
-    // first branch never touches the ids, so without this filter a
-    // null-id row could emit a corrupt pair through least/greatest.
-    // Per-row, pushed to the scan; also lets the optimizer skip
-    // inferring isnotnull(least/greatest) conjuncts into the per-combo
-    // join condition.
-    val (xBase, yBase) = blockedSides(blk, idCol, blockWidth)
-    val (x, y) =
-      if (streamSalt <= 1) (xBase.alias("__blk_x"), yBase.alias("__blk_y"))
+    val (x, y) = blockedSides(blk, blockWidth)
+    val (xs, ys, keys) =
+      if (streamSalt <= 1) (x, y, Seq("__blk"))
       else (
         // BOTH sides user-repartitioned on the (block, salt) keys and the
         // join hinted merge: the replicated y side must not be planner-
@@ -924,47 +959,17 @@ object TextDedup {
         // A/B/A: shuffle_hash 62.9 s vs merge 48.2/53.5 s, identical
         // 3.02e9 candidates): the per-partition hash build + probe costs
         // more than sorting the skinny salted rows.
-        xBase.withColumn("__salt",
-            pmod(xxhash64(col(idCol)), lit(streamSalt.toLong)))
+        x.withColumn("__salt", pmod(xxhash64(col(idCol)), lit(streamSalt.toLong)))
           .repartition(streamSalt, col("__blk"), col("__salt"))
-          .hint("merge")
-          .alias("__blk_x"),
-        yBase.withColumn("__salt",
-            explode(sequence(lit(0L), lit(streamSalt.toLong - 1L))))
-          .repartition(streamSalt, col("__blk"), col("__salt"))
-          .alias("__blk_y"))
-    val cond =
-      col("__blk_x.__blk") === col("__blk_y.__blk") &&
-      abs(col("__blk_x.__len") - col("__blk_y.__len")) <= maxDiff &&
-      // y is the (len, id)-max: exactly-once emission
-      (col("__blk_y.__len") > col("__blk_x.__len") ||
-        (col("__blk_y.__len") === col("__blk_x.__len") &&
-         col(s"__blk_y.$idCol") > col(s"__blk_x.$idCol")))
-    val saltedCond =
-      if (streamSalt <= 1) cond
-      else cond && col("__blk_x.__salt") === col("__blk_y.__salt")
-    x.join(y, saltedCond)
-      .select(least(col(s"__blk_x.$idCol"), col(s"__blk_y.$idCol")).as("a"),
-              greatest(col(s"__blk_x.$idCol"), col(s"__blk_y.$idCol")).as("b"))
-  }
-
-  /** Combo census of the blocked candidate join (r18), a deterministic
-    * count on any host: the merge scan walks Σ nx·ny combos over the
-    * block buckets, nx = |x rows of block b| and ny = |y rows of b|
-    * ([[blockedSides]]). A salt splits x rows but its Σ over salts
-    * restores nx·ny per block, so the census is salt-free. One row:
-    * scanCombos, maxBlock (the largest x bucket). */
-  private[graft] def ngramCandCensus(docs: DataFrame, idCol: String,
-      textCol: String, lenCol: Column, n: Int, blockWidth: Int): Row = {
-    val (_, _, _, blocked) =
-      ngramBlockedInternals(docs, idCol, textCol, lenCol, n, blockWidth)
-    val (x, y) = blockedSides(blocked, idCol, blockWidth)
-    val img = x.groupBy(col("__blk")).agg(count(lit(1)).as("nx"))
-    val own = y.groupBy(col("__blk")).agg(count(lit(1)).as("ny"))
-    img.join(own, Seq("__blk"), "left_outer")
-      .agg(sum((col("nx") * coalesce(col("ny"), lit(0L))).cast("long")).as("scanCombos"),
-        max(col("nx")).as("maxBlock"))
-      .head()
+          .hint("merge"),
+        y.withColumn("__salt", explode(sequence(lit(0L), lit(streamSalt.toLong - 1L))))
+          .repartition(streamSalt, col("__blk"), col("__salt")),
+        Seq("__blk", "__salt"))
+    // y is the (len, id)-max: exactly-once emission
+    bucketPairs(xs, ys, idCol, keys,
+      Designated((x, y) => y("__len") > x("__len") ||
+        (y("__len") === x("__len") && y(idCol) > x(idCol))),
+      residual = (x, y) => abs(x("__len") - y("__len")) <= blockWidth / 2)
   }
 
   /** Candidate (a, b) pairs of the length-blocked path, PRE-verify and
@@ -1141,19 +1146,7 @@ object TextDedup {
       verifyBroadcastBytes(if (row.isNullAt(0)) 0L else row.getLong(0),
         row.getLong(1)) <= ngramBroadcastBudgetBytes
     }
-    // distinct IS load-bearing here, unlike the blocked path: a pair can
-    // share several prefix shingles. It runs on skinny (a, b) rows only
-    // — the arrays join in AFTER, via the broadcast probes. The USER
-    // repartition in front of it is the blocked path's salt lesson in
-    // its simplest form: distinct's own planner exchange hashes the
-    // skinny pairs and AQE's byte-based coalesce then pins the verify
-    // stage (broadcast probes + Jaccard kernel — the CPU-heavy part) to
-    // ~one task (1.3M pairs ≈ 20 MB < the advisory size; measured ~5 s
-    // single-core at sf0.1). A user-origin repartition on the same keys
-    // is never coalesced, and the distinct's aggregate reuses its
-    // partitioning — still exactly ONE exchange, now at full width.
     val cand = prefixCandidatesFrom(sh, idCol, threshold)
-      .repartition(col("a"), col("b")).distinct()
     c.expand(verifyJaccard(cand, sh, idCol, threshold, broadcastShingles = bcast))
   }
 
@@ -1209,8 +1202,11 @@ object TextDedup {
     }
 
   /** The PPJoin candidate stage of [[ngramJaccardPairsPrefix]] (over
-    * post-collapse reps). `sh` is (idCol, __sh) with __sh a non-empty
-    * hashed-shingle array.
+    * post-collapse reps): distinct (a, b) pairs. `sh` is (idCol, __sh)
+    * with __sh a non-empty hashed-shingle array. The distinct IS
+    * load-bearing here, unlike the blocked path: a pair can share several
+    * prefix shingles. It runs on skinny (a, b) rows only — the arrays
+    * join in AFTER, via the verify's broadcast probes.
     *
     * Two candidate-side prunes beyond the prefix itself, both from the
     * PPJoin literature (Xiao/Wang/Lin/Yu, WWW'08 — public algorithm):
@@ -1254,19 +1250,14 @@ object TextDedup {
       .filter(col("__rn") <= col("__n") - ceil(lit(threshold) * col("__n")) + 1)
       .select(col(idCol), col("__n"), col("__rn"), col("__s"))
       .materialized()
-    val x = prefix.alias("__pf_x"); val y = prefix.alias("__pf_y")
-    x.join(y,
-        col("__pf_x.__s") === col("__pf_y.__s") &&
-        col(s"__pf_x.$idCol") < col(s"__pf_y.$idCol") &&
+    bucketPairs(prefix, prefix, idCol, Seq("__s"), Lower,
+      residual = (x, y) =>
         // J ≥ t forces a size ratio ≥ t — prune before the exact check
-        least(col("__pf_x.__n"), col("__pf_y.__n")) >=
-          lit(threshold) * greatest(col("__pf_x.__n"), col("__pf_y.__n")) &&
+        least(x("__n"), y("__n")) >= lit(threshold) * greatest(x("__n"), y("__n")) &&
         // positional filter — see scaladoc
-        (lit(1) + least(col("__pf_x.__n") - col("__pf_x.__rn"),
-                        col("__pf_y.__n") - col("__pf_y.__rn"))) >=
-          lit(threshold / (1 + threshold) * (1 - 1e-12)) *
-            (col("__pf_x.__n") + col("__pf_y.__n")))
-      .select(col(s"__pf_x.$idCol").as("a"), col(s"__pf_y.$idCol").as("b"))
+        (lit(1) + least(x("__n") - x("__rn"), y("__n") - y("__rn"))) >=
+          lit(threshold / (1 + threshold) * (1 - 1e-12)) * (x("__n") + y("__n")),
+      distinct = true)
   }
 
   /** Join candidate (a, b) pairs back to hashed (`array<long>`, sorted)
@@ -1515,13 +1506,13 @@ object TextDedup {
         substring(col("__pj_head"), st, ln).as("s")) }: _*)).as("__pb"))
       .select(col("__pj_id"), col("__pj_len"), col("__pj_head"),
         col("__pb.i").as("i"), col("__pb.s").as("s"))
-    val candFull = segs.alias("__pj_a").join(probes.alias("__pj_b"),
-        col("__pj_a.i") === col("__pj_b.i") &&
-        col("__pj_a.s") === col("__pj_b.s") &&
-        col("__pj_a.__pj_id") < col("__pj_b.__pj_id") &&
-        abs(col("__pj_a.__pj_len") - col("__pj_b.__pj_len")) <= lengthBand)
-      .select(col("__pj_a.__pj_id").as("a"), col("__pj_b.__pj_id").as("b"),
-        col("__pj_a.__pj_head").as("head_a"), col("__pj_b.__pj_head").as("head_b"))
+    def heads(x: PairSide, y: PairSide) =
+      Seq(x("__pj_head").as("head_a"), y("__pj_head").as("head_b"))
+    def inBand(x: PairSide, y: PairSide) =
+      abs(x("__pj_len") - y("__pj_len")) <= lengthBand
+    // segments of the smaller id against probes of the larger
+    val candFull = bucketPairs(segs, probes, "__pj_id", Seq("i", "s"), Lower,
+      residual = inBand, out = heads)
     // short-head fallback: a doc under headLen chars can only pair with
     // docs under headLen + lengthBand chars — a corpus-small pool,
     // length-blocked so the join stays equi-shaped (each doc in blocks
@@ -1531,16 +1522,12 @@ object TextDedup {
     val shortPool = base.filter(col("__pj_len") <= headLen + lengthBand - 1)
       .withColumn("__blk", explode(array((col("__pj_len") / bw).cast("long"),
         (col("__pj_len") / bw).cast("long") + 1)))
-    val candShort = shortPool.alias("__pj_x").join(shortPool.alias("__pj_y"),
-        col("__pj_x.__blk") === col("__pj_y.__blk") &&
-        col("__pj_x.__pj_id") < col("__pj_y.__pj_id") &&
-        abs(col("__pj_x.__pj_len") - col("__pj_y.__pj_len")) <= lengthBand &&
-        least(col("__pj_x.__pj_len"), col("__pj_y.__pj_len")) < headLen &&
-        col("__pj_x.__blk") ===
-          greatest((col("__pj_x.__pj_len") / bw).cast("long"),
-                   (col("__pj_y.__pj_len") / bw).cast("long")))
-      .select(col("__pj_x.__pj_id").as("a"), col("__pj_y.__pj_id").as("b"),
-        col("__pj_x.__pj_head").as("head_a"), col("__pj_y.__pj_head").as("head_b"))
+    val candShort = bucketPairs(shortPool, shortPool, "__pj_id", Seq("__blk"), Lower,
+      residual = (x, y) => inBand(x, y) &&
+        least(x("__pj_len"), y("__pj_len")) < headLen &&
+        x("__blk") === greatest((x("__pj_len") / bw).cast("long"),
+          (y("__pj_len") / bw).cast("long")),
+      out = heads)
     candFull.unionByName(candShort)
   }
 }

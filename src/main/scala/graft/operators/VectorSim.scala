@@ -92,11 +92,8 @@ object VectorSim {
       Seq(col(vecCol), col(cellCol)), "cos", cosine(col(vecCol), col(vecCol)))
     val v = c.reps.select(col(idCol).as("__id"), col(cellCol).as("__cell"),
       col(vecCol).as("__v"))
-    val x = v.alias("__vx"); val y = v.alias("__vy")
-    val repPairs = x.join(y, col("__vx.__cell") === col("__vy.__cell") &&
-        col("__vx.__id") < col("__vy.__id"))
-      .withColumn("cos", cosine(col("__vx.__v"), col("__vy.__v")))
-      .select(col("__vx.__id").as("a"), col("__vy.__id").as("b"), col("cos"))
+    val repPairs = TextDedup.bucketPairs(v, v, "__id", Seq("__cell"), TextDedup.Lower,
+      out = (x, y) => Seq(cosine(x("__v"), y("__v")).as("cos")))
     c.expand(repPairs).filter(col("cos") >= threshold)
   }
 
@@ -351,11 +348,8 @@ object VectorSim {
     val planes = if (nPlanes > 0) nPlanes else srpBands(bits) * bits
     val banded = emb.select(col(idCol),
       posexplode(srpBandKeys(col(vecCol), dims, bits, planes, seedK)).as(Seq("bi", "bk")))
-    val cand = banded.alias("__sx").join(banded.alias("__sy"),
-        col("__sx.bi") === col("__sy.bi") && col("__sx.bk") === col("__sy.bk") &&
-        col(s"__sx.$idCol") < col(s"__sy.$idCol"))
-      .select(col(s"__sx.$idCol").as("a"), col(s"__sy.$idCol").as("b"))
-    if (dedup) cand.distinct() else cand
+    TextDedup.bucketPairs(banded, banded, idCol, Seq("bi", "bk"), TextDedup.Lower,
+      distinct = dedup)
   }
 
   /** SRP band keys of a vector column as one native expression: band

@@ -965,28 +965,200 @@ class DedupPropertySpec extends SparkSpec {
     assert(est == estWant, s"estimator arithmetic: got $est want $estWant")
   }
 
-  /** NgramWallSmoke's combo censuses are arithmetic over the joins'
-    * buckets; each must equal the row count of the shipped x/y sides
-    * equi-joined on the bucket key alone, so a census cannot drift from
-    * the join it counts. */
+  /** The combo census is arithmetic over a join's buckets; it must
+    * equal the row count of the shipped x/y sides equi-joined on the
+    * bucket keys alone, so it cannot drift from the join it counts. */
   test("candidate-join censuses == equi-join row counts of the shipped sides") {
     import spark.implicits._
     val docs = corpus.toDF("doc_id", "text")
     val (_, _, _, blocked) = TextDedup.ngramBlockedInternals(docs, "doc_id",
       "text", length(col("text")), 4, 20)
-    val (x, y) = TextDedup.blockedSides(blocked, "doc_id", 20)
+    val (x, y) = TextDedup.blockedSides(blocked, 20)
     val ngramJoin = x.join(y, "__blk").count()
-    val ngram = TextDedup.ngramCandCensus(docs, "doc_id", "text",
-      length(col("text")), 4, 20).getAs[Long]("scanCombos")
+    val ngram = TextDedup.bucketCensus(x, y, "doc_id", Seq("__blk"))
+      .getAs[Long]("scanCombos")
     assert(ngramJoin > 0 && ngram == ngramJoin,
       s"ngram census $ngram != blocked join $ngramJoin")
     val (_, _, bandedX, bandedOwn, _) = TextDedup.simhashInternals(docs,
       "doc_id", "text", 3, 15, 16, 32)
-    val simJoin = bandedX.join(bandedOwn, Seq("__band", "__bval", "__lblk")).count()
-    val sim = TextDedup.simhashCensus(docs, "doc_id", "text", 3, 15, 16, 32)
-      .getAs[Long]("scanCombos")
+    val simJoin = bandedX.join(bandedOwn, TextDedup.SimhashBandKeys).count()
+    val sim = TextDedup.bucketCensus(bandedX, bandedOwn, "doc_id",
+      TextDedup.SimhashBandKeys).getAs[Long]("scanCombos")
     assert(simJoin > 0 && sim == simJoin,
       s"simhash census $sim != banded join $simJoin")
+  }
+
+  /** The deterministic counts an image-scheme change to the two hot
+    * candidate joins is judged by: scanCombos of d_ngram_jaccard's
+    * blocked join (n=4, blockWidth 20) and of d_simhash's band join
+    * (16 bands, Hamming 15) on the sf0.01 documents. A change that
+    * lowers a count updates its pin; one that raises a count must say
+    * why. */
+  test("census pins: sf0.01 scanCombos of the d_ngram_jaccard and d_simhash joins") {
+    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.01")
+    val (_, _, _, blocked) = TextDedup.ngramBlockedInternals(docs, "doc_id",
+      "text", col("n_chars"), 4, 20)
+    val (x, y) = TextDedup.blockedSides(blocked, 20)
+    val ngram = TextDedup.bucketCensus(x, y, "doc_id", Seq("__blk"))
+    assert(ngram.getAs[Long]("scanCombos") == 20384L, s"ngram census: $ngram")
+    val (_, _, bandedX, bandedOwn, _) = TextDedup.simhashInternals(docs,
+      "doc_id", "text", 3, 15, 16, 32)
+    val sim = TextDedup.bucketCensus(bandedX, bandedOwn, "doc_id",
+      TextDedup.SimhashBandKeys)
+    assert(sim.getAs[Long]("scanCombos") == 106322L, s"simhash census: $sim")
+  }
+
+  /** The one candidate-pair join on degenerate inputs, under every rule,
+    * with and without a residual and `distinct`: the exact pair list
+    * (sorted, so a duplicate row fails) of a driver-side brute force
+    * over every (x, y) combo. Rows are (id, k1, k2, len); both keys
+    * must be non-null and equal, and the residual is a length band. */
+  test("bucketPairs degenerate inputs == brute-force pairs under every rule") {
+    import org.apache.spark.sql.{Row, types => T}
+    type R = (Option[Long], Option[String], Option[String], Int)
+    val schema = T.StructType(Seq(
+      T.StructField("id", T.LongType, nullable = true),
+      T.StructField("k1", T.StringType, nullable = true),
+      T.StructField("k2", T.StringType, nullable = true),
+      T.StructField("len", T.IntegerType, nullable = false)))
+    def r(id: java.lang.Long, k1: String, k2: String, len: Int): R =
+      (Option(id).map(_.longValue), Option(k1), Option(k2), len)
+    val some = Seq(r(1L, "a", "p", 10), r(2L, "a", "p", 12), r(3L, "a", "q", 10),
+      r(4L, "b", "p", 11), r(5L, "a", "p", 10))
+    val cases: Seq[(String, Seq[R], Seq[R])] = Seq(
+      ("empty x", Nil, some),
+      ("empty y", some, Nil),
+      ("empty both", Nil, Nil),
+      ("single row", Seq(r(1L, "a", "p", 10)), Seq(r(1L, "a", "p", 10))),
+      ("null id on x", some :+ r(null, "a", "p", 11), some),
+      ("null id on y", some, some :+ r(null, "a", "p", 11)),
+      ("null key component", some ++ Seq(r(6L, "a", null, 10), r(7L, "a", null, 10),
+        r(8L, null, "p", 10)), some ++ Seq(r(6L, "a", null, 10), r(7L, "a", null, 10),
+        r(8L, null, "p", 10))),
+      ("hot key, an id under two rows", (1L to 8L).map(i => r(i, "h", "h", 10 + (i % 3).toInt)) :+
+        r(3L, "h", "h", 10), (1L to 8L).map(i => r(i, "h", "h", 10 + (i % 3).toInt))),
+      ("same row on both sides of an asymmetric join",
+        Seq(r(1L, "a", "p", 10), r(2L, "a", "p", 10)), Seq(r(1L, "a", "p", 10))))
+    def yMax(x: R, y: R) = y._4 > x._4 || (y._4 == x._4 && y._1.get > x._1.get)
+    val rules: Seq[(String, TextDedup.PairRule, (R, R) => Boolean)] = Seq(
+      ("Lower", TextDedup.Lower, (x, y) => x._1.get < y._1.get),
+      ("NotEqual", TextDedup.NotEqual, (x, y) => x._1.get != y._1.get),
+      ("Designated", TextDedup.Designated((x, y) => y("len") > x("len") ||
+        (y("len") === x("len") && y("id") > x("id"))), yMax))
+    def df(rows: Seq[R]) = spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.map(x => Row(x._1.orNull, x._2.orNull, x._3.orNull, x._4)), 2), schema)
+    val admitted = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
+    for ((name, xs, ys) <- cases; (ruleName, rule, admits) <- rules;
+         banded <- Seq(false, true); distinct <- Seq(false, true)) {
+      val label = s"$name, $ruleName, banded=$banded, distinct=$distinct"
+      val brute0 = for {
+        x <- xs; y <- ys
+        if x._1.isDefined && y._1.isDefined
+        if x._2.isDefined && x._3.isDefined && x._2 == y._2 && x._3 == y._3
+        if !banded || math.abs(x._4 - y._4) <= 1
+        if admits(x, y)
+        (a, b) = (x._1.get, y._1.get)
+      } yield if (ruleName == "Lower") (a, b) else (a min b, a max b)
+      val brute = (if (distinct) brute0.distinct else brute0).sorted
+      val pairs = TextDedup.bucketPairs(df(xs), df(ys), "id", Seq("k1", "k2"), rule,
+          residual = (x, y) => if (banded) abs(x("len") - y("len")) <= 1 else lit(true),
+          distinct = distinct)
+        .collect().map(p => (p.get(0), p.get(1))).toSeq
+      assert(pairs.forall { case (a, b) => a != null && b != null }, s"$label: null id")
+      val got = pairs.map { case (a, b) => (a.asInstanceOf[Long], b.asInstanceOf[Long]) }.sorted
+      assert(got.forall { case (a, b) => a != b }, s"$label: self-pair in $got")
+      assert(got == brute, s"$label: got $got, want $brute")
+      admitted(ruleName) += brute.size
+    }
+    assert(admitted.size == rules.size && admitted.values.forall(_ > 0),
+      s"vacuous battery: $admitted")
+  }
+
+  /** The public pair operators that list pairs through [[TextDedup.bucketPairs]]
+    * on degenerate corpora: no exception, no pair with a null end, and
+    * the brute-force pair list — a null-id row is no document of the
+    * pair relation (it can never be reported), so it must not change
+    * which pairs of other documents are. */
+  test("winnowPairs / passJoinCandidates / dedupAgainstIndex degenerate inputs == brute force") {
+    import org.apache.spark.sql.{DataFrame, Row, types => T}
+    type D = (Option[Long], Option[String])
+    val schema = T.StructType(Seq(
+      T.StructField("doc_id", T.LongType, nullable = true),
+      T.StructField("text", T.StringType, nullable = true)))
+    def d(id: java.lang.Long, t: String): D = (Option(id).map(_.longValue), Option(t))
+    val t1 = corpus.head._2
+    val t2 = t1.split(" ").updated(3, "zz9").mkString(" ") // 1-word edit
+    val hot = corpus(1)._2.split(" ").take(50).mkString(" ")
+    val cases: Seq[(String, Seq[D])] = Seq(
+      "empty" -> Nil,
+      "single row" -> Seq(d(1L, t1)),
+      "null id" -> Seq(d(1L, t1), d(null, t1), d(2L, t2), d(3L, corpus(2)._2)),
+      "null text" -> Seq(d(1L, t1), d(2L, null), d(3L, t2)),
+      "all identical" -> (1L to 5L).map(i => d(i, t1)),
+      "hot key" -> (1L to 6L).map(i => d(i, s"$hot tail$i ${corpus(2 + i.toInt)._2.take(30)}")))
+    def df(rows: Seq[D]) = spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.map(x => Row(x._1.orNull, x._2.orNull)), 2), schema)
+    def ids(p: DataFrame) = {
+      val rows = p.collect().map(r => (r.get(0), r.get(1))).toSeq
+      assert(rows.forall { case (a, b) => a != null && b != null }, "null id in a pair")
+      rows.map { case (a, b) => (a.asInstanceOf[Long], b.asInstanceOf[Long]) }.sorted
+    }
+    def valid(rows: Seq[D]) = rows.collect { case (Some(i), Some(t)) => (i, t) }
+    // operators whose brute-force list was non-empty in some case
+    val exercised = scala.collection.mutable.Set[String]()
+    for ((name, rows) <- cases) {
+      val docs = valid(rows)
+      // winnow, uncapped and at a cap the hot fingerprints reach
+      for (cap <- Seq(Int.MaxValue, 2)) {
+        val fps = docs.map { case (i, t) => i -> bruteWinnow(t).toSet }
+        val df0 = fps.flatMap(_._2.toSeq).groupBy(identity).map { case (f, v) => f -> v.size }
+        val want = (for {
+          (a, fa) <- fps; (b, fb) <- fps if a < b
+          if (fa & fb).count(df0(_) <= cap) >= 1
+        } yield (a, b)).sorted
+        val got = ids(TextDedup.winnowPairs(df(rows), "doc_id", "text", minShared = 1,
+          maxDocFreq = cap))
+        assert(got == want, s"$name, winnow cap=$cap: got $got, want $want")
+        if (want.nonEmpty) exercised += s"winnow cap=$cap"
+      }
+      // PassJoin: candidates, deduplicated and verified, == brute head edit distance
+      def ed(a: String, b: String) = {
+        val dp = Array.tabulate(a.length + 1, b.length + 1)((i, j) =>
+          if (i == 0) j else if (j == 0) i else 0)
+        for (i <- 1 to a.length; j <- 1 to b.length)
+          dp(i)(j) = math.min(math.min(dp(i - 1)(j), dp(i)(j - 1)) + 1,
+            dp(i - 1)(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
+        dp(a.length)(b.length)
+      }
+      val pjWant = (for {
+        (a, ta) <- docs; (b, tb) <- docs if a < b
+        if math.abs(ta.length - tb.length) <= 10 && ed(ta.take(40), tb.take(40)) <= 5
+      } yield (a, b)).sorted
+      val pjGot = ids(TextDedup.passJoinCandidates(df(rows), "doc_id", "text")
+        .groupBy(col("a"), col("b"))
+        .agg(max(col("head_a")).as("ha"), max(col("head_b")).as("hb"))
+        .filter(levenshtein(col("ha"), col("hb"), 5) >= 0)
+        .select("a", "b"))
+      assert(pjGot == pjWant, s"$name, passJoin: got $pjGot, want $pjWant")
+      if (pjWant.nonEmpty) exercised += "passJoin"
+      // index: odd ids are the corpus, even ids the batch, null ids on both
+      def shingles(t: String) = t.split(" ").sliding(3).map(_.toSeq).toSet
+      val nulls = rows.filter(_._1.isEmpty)
+      val idxRows = rows.filter(_._1.exists(_ % 2 == 1)) ++ nulls
+      val batchRows = rows.filter(_._1.exists(_ % 2 == 0)) ++ nulls
+      val ixWant = (for {
+        (b, tb) <- valid(batchRows); (c, tc) <- valid(idxRows)
+        sb = shingles(tb); sc = shingles(tc)
+        if (sb & sc).size.toDouble / (sb | sc).size >= 0.7
+      } yield (b, c)).sorted
+      val index = TextDedup.buildMinhashIndex(df(idxRows), "doc_id", "text", shingleN = 3)
+      val ixGot = ids(TextDedup.dedupAgainstIndex(df(batchRows), index, "doc_id", "text",
+          shingleN = 3, threshold = 0.7).select("b", "c"))
+      assert(ixGot == ixWant, s"$name, dedupAgainstIndex: got $ixGot, want $ixWant")
+      if (ixWant.nonEmpty) exercised += "dedupAgainstIndex"
+    }
+    assert(exercised == Set(s"winnow cap=${Int.MaxValue}", "winnow cap=2", "passJoin",
+      "dedupAgainstIndex"), s"vacuous battery: only $exercised")
   }
 
   /** The SRP pair lister's collapse+expand must equal the uncollapsed

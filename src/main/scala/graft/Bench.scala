@@ -1,5 +1,11 @@
 package graft
 
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.graft.GraftSql
+
+import graft.core.QueryMetrics
+
 /** Benchmark main — one JSON line with per-query wall seconds at the
   * SPARK_GRAFT_SF_DIR scale factor. Failed queries are reported in an
   * `errors` map (name → exception class) instead of being silently timed.
@@ -19,7 +25,17 @@ package graft
   * record, and its only input knob is SPARK_GRAFT_SF_DIR.
   * The stdout line reports warm times for the slowest queries (bounded so
   * the whole line fits the driver's 2000-char stdout tail window); the
-  * complete warm+cold per-query detail lands in bench_detail.json.
+  * complete warm+cold per-query detail lands in bench_detail.json, with
+  * each row's [[QueryMetrics]] (jobs, stages, tasks, CPU, GC, input,
+  * shuffle, spill, broadcast builds) from its best run and its row count
+  * from its cold run ([[measureRow]] measures one run).
+  *
+  * Usage: Bench [name ...] — no names runs the whole catalog.
+  *
+  * The session disables parquet vectored IO: Hadoop's vectored range
+  * reads on local files bypass the per-thread `FileSystem.Statistics`
+  * that feed `taskMetrics.inputMetrics`, so with it on every parquet scan
+  * reports ~0 input bytes (measured: a1 5.7 MB read vs 0.0 reported).
   */
 object Bench {
 
@@ -147,12 +163,69 @@ object Bench {
     (cold, math.min(cold, warm))
   }
 
+  /** One run of catalog row `name`: build its frame, strip the trailing
+    * sort, write it to the noop sink under [[QueryMetrics.measure]] (the
+    * wall covers frame building and the write, not the listener-bus
+    * drains), then release reliable-mode scratch. With `countRows` the
+    * run carries an [[Observation]] that counts the rows, which costs no
+    * job; the noop sink itself reports no written records.
+    * @return (wall seconds, what the run cost, rows if counted) */
+  private[graft] def measureRow(spark: SparkSession, sfDir: String, name: String,
+                                countRows: Boolean = false)
+      : (Double, QueryMetrics, Option[Long]) = {
+    val observer = if (countRows) Some(new Observation("rows")) else None
+    try {
+      val (_, m) = QueryMetrics.measure(spark) {
+        val df = GraftSql.stripTrailingSort(SparkEntry.queries(name)(spark, sfDir))
+        observer.fold(df)(o => df.observe(o, count(lit(1)).as("rows")))
+          .write.format("noop").mode("overwrite").save()
+      }
+      (m.wallNs / 1e9, m, observer.map(_.get("rows").asInstanceOf[Long]))
+    } finally graft.core.Materialize.releaseScratch(spark)
+  }
+
+  // explicit ROOT locale: the f interpolator honors the JVM default
+  // locale, and a comma-decimal locale would emit invalid JSON
+  private def num(pat: String, v: Double): String =
+    String.format(java.util.Locale.ROOT, pat, Double.box(v))
+
+  /** One row's `metrics` object in bench_detail.json: its cold run's
+    * rows and its best run's [[QueryMetrics]]. `bc_mb` is allocated
+    * hash-relation pages, which scale with heap and cores; `bc_rows`
+    * does not (see [[QueryMetrics]]). */
+  private def metricsJson(rows: Long, m: QueryMetrics): String = {
+    val mb = 1024.0 * 1024.0
+    def n(v: Double): String = num("%.3f", v)
+    Seq("rows" -> rows.toString,
+      "jobs" -> m.jobs.toString, "stages" -> m.stages.toString,
+      "tasks" -> m.tasks.toString,
+      "cpu_s" -> n(m.executorCpuNs / 1e9), "gc_s" -> n(m.gcMs / 1e3),
+      "task_max_s" -> n(m.taskMs.lastOption.getOrElse(0L) / 1e3),
+      "input_mb" -> n(m.inputBytes / mb), "in_rec" -> m.inputRecords.toString,
+      "sh_w_mb" -> n(m.shuffleWriteBytes / mb),
+      "sh_w_rec" -> m.shuffleWriteRecords.toString,
+      "sh_r_mb" -> n(m.shuffleReadBytes / mb),
+      "sh_r_rec" -> m.shuffleReadRecords.toString,
+      "mem_spill_mb" -> n(m.memorySpillBytes / mb),
+      "disk_spill_mb" -> n(m.diskSpillBytes / mb),
+      "bc_builds" -> m.broadcastBuilds.toString,
+      "bc_rows" -> m.broadcastRows.sum.toString,
+      "bc_mb" -> n(m.broadcastBytes.sum / mb))
+      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val names: Seq[String] =
+      if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"no such catalog row: ${unknown.mkString(", ")}")
     val (loadWaitSec, loadGateExceeded, _) =
       boundedWait("load", MaxLoad, MaxLoadWaitSec, 10)(() => gateLoad())
     val loadPre = loadAvg()
     val calibPre = calibrate()
+    // see the scaladoc: vectored IO hides parquet bytes from inputMetrics
+    System.setProperty("spark.hadoop.parquet.hadoop.vectored.io.enabled", "false")
     val spark = graft.core.GraftSession.local(appName = "graft-bench")
     // In-session per-run floor probe: the same fixed trivial job (plan +
     // schedule + one-stage aggregate + noop sink) every query pays as
@@ -183,25 +256,28 @@ object Bench {
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(_.getCollectionTime).sum
     }
-    def runOnce(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Double = {
+    // per row: the fastest run's (wall, metrics), and the cold run's rows
+    val fastestRun = scala.collection.mutable.Map[String, (Double, QueryMetrics)]()
+    val rowCounts = scala.collection.mutable.Map[String, Long]()
+    def runOnce(name: String): Double = {
       val g0 = gcMillis()
       val t0 = System.nanoTime()
-      try {
-        org.apache.spark.sql.graft.GraftSql.stripTrailingSort(fn(spark, sfDir))
-          .write.format("noop").mode("overwrite").save()
-      }
-      catch { case e: Throwable => errors(name) = e.getClass.getSimpleName }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // reliable-mode drills: each run rebuilds its materializations,
-      // so releasing after the sink write keeps scratch bounded
-      graft.core.Materialize.releaseScratch(spark)
+      val sec =
+        try {
+          val (s, m, rows) = measureRow(spark, sfDir, name, countRows = !runLog.contains(name))
+          rows.foreach(rowCounts(name) = _)
+          if (fastestRun.get(name).forall(_._1 > s)) fastestRun(name) = (s, m)
+          s
+        } catch { case e: Throwable =>
+          errors(name) = e.getClass.getSimpleName
+          (System.nanoTime() - t0) / 1e9
+        }
       runLog(name) = runLog.getOrElse(name, Vector.empty) :+
         (sec, (gcMillis() - g0) / 1e3)
       sec
     }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val (cold, best) = timeRow(() => runOnce(name, fn), () => errors.contains(name))
+    val results = names.map { name =>
+      val (cold, best) = timeRow(() => runOnce(name), () => errors.contains(name))
       (name, cold, best)
     }
     val ok = results.filterNot { case (k, _, _) => errors.contains(k) }
@@ -213,10 +289,6 @@ object Bench {
     // (see build.sbt showSuccess notes): report the slowest queries up
     // to a character budget on the line, and write the complete
     // per-query detail (warm + cold + errors) to bench_detail.json.
-    // explicit ROOT locale: the f interpolator honors the JVM default
-    // locale, and a comma-decimal locale would emit invalid JSON
-    def num(pat: String, v: Double): String =
-      String.format(java.util.Locale.ROOT, pat, Double.box(v))
     def fmt(entries: Seq[(String, Double)]): String =
       entries.map { case (k, v) => "\"" + k + "\":" + num("%.2f", v) }
         .mkString("{", ",", "}")
@@ -230,6 +302,11 @@ object Bench {
       "\"" + k + "\":[" + rs.map { case (t, g) =>
         "[" + num("%.3f", t) + "," + num("%.3f", g) + "]" }.mkString(",") + "]"
     }.mkString("{", ",", "}")
+    val metricsJsonAll = ok.map { case (k, _, _) =>
+      "\"" + k + "\":" + metricsJson(rowCounts(k), fastestRun(k)._2)
+    }.mkString("{", ",", "}")
+    // the same probe after the board: a warm session's per-job floor
+    val floorPost = floorProbe()
     spark.stop()
     // Post-board fingerprint AFTER spark.stop() so the probe measures the
     // bare host, not leftover executor threads.
@@ -244,12 +321,14 @@ object Bench {
       s""""floor_gate_exceeded":$floorGateExceeded,""" +
       s""""calib_pre_sec":${num("%.2f", calibPre)},""" +
       s""""calib_post_sec":${num("%.2f", calibPost)},""" +
-      s""""floor_probe_sec":${num("%.3f", floorSec)}}"""
+      s""""floor_probe_sec":${num("%.3f", floorSec)},""" +
+      s""""floor_post_sec":${num("%.3f", floorPost)}}"""
     val detail =
       s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${ok.size},
          |"queries":${fmt(bySlowest)},
          |"cold_queries":${fmt(results.map { case (k, c, _) => (k, c) })},
          |"runs":$runsJson,
+         |"metrics":$metricsJsonAll,
          |"errors":$es,
          |$env,
          |"sf":"$sfDir"}""".stripMargin.replace("\n", "")

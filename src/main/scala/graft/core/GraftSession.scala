@@ -79,10 +79,12 @@ object GraftSession {
   def local(cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
               .getOrElse(Runtime.getRuntime.availableProcessors()),
             appName: String = "graft"): SparkSession = {
-    // Operability drill hook: SPARK_GRAFT_MASTER=local-cluster[4,8,4096]
-    // runs the SAME session against a multi-JVM master — real executor
-    // processes, real serialization/broadcast boundaries, real executor
-    // loss. Executors are separate JVMs, so they need the engine classes
+    // Multi-JVM hook: SPARK_GRAFT_MASTER=local-cluster[4,8,4096] runs the
+    // SAME session (Verify's board, Bench, the catalog's JDBC rows over
+    // ThriftEndpoint) against a multi-JVM master — real executor
+    // processes, real serialization/broadcast boundaries. Executor loss is
+    // MaterializeSpec's "losing the blocks" test, in one JVM. Executors
+    // are separate JVMs, so they need the engine classes
     // on their own classpath and the Java-17 --add-opens set the driver
     // launcher already applies.
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cores]")

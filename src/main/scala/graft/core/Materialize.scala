@@ -15,7 +15,8 @@ import org.apache.spark.sql.DataFrame
   * failure mode is invisible at local[32] (one JVM, nothing to lose),
   * which is exactly why it must not be hard-wired at the call sites:
   * the same plan has to run with a cluster-safe materialization when
-  * deployed.
+  * deployed. MaterializeSpec shows both outcomes in one JVM by dropping a
+  * materialization's blocks: `local` fails, `reliable` recounts.
   *
   * Mode selection (conf `graft.materialize.mode`):
   *   - `local`    — lazy/eager `localCheckpoint`: zero-copy in-memory

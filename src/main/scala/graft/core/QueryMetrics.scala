@@ -31,7 +31,7 @@ import org.apache.spark.sql.graft.GraftSql
   *
   * Parquet input bytes read 0 under Hadoop's vectored IO, which bypasses
   * the statistics `inputMetrics` reads; a harness that reports them sets
-  * `spark.hadoop.parquet.hadoop.vectored.io.enabled=false` (ShuffleSmoke
+  * `spark.hadoop.parquet.hadoop.vectored.io.enabled=false` (Bench
   * does). */
 final case class QueryMetrics(
     wallNs: Long,

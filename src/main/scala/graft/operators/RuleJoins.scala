@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftAnti, LeftOuter, LeftSemi}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -73,11 +74,23 @@ object RuleJoins {
     * n-fold and shuffles it on (key, salt) — size n to the observed skew
     * (the reference uses 16), not larger. `factKey`/`dimKey` may differ
     * (l_orderkey vs o_orderkey); the dim's key column is dropped from the
-    * output, like USING-join semantics. */
+    * output, like USING-join semantics.
+    *
+    * `joinType` is inner, left, left_semi or left_anti: each fact row
+    * meets exactly one salt replica of its dim rows, so those four equal
+    * the plain join. A join that keeps unmatched dim rows (right, full)
+    * would emit each such row once per replica, so it is rejected. */
   def saltedJoin(fact: DataFrame, dim: DataFrame, factKey: String,
                  dimKey: String, n: Int, seed: Long = 42L,
                  joinType: String = "inner"): DataFrame = {
     require(n > 0)
+    JoinType(joinType) match {
+      case Inner | LeftOuter | LeftSemi | LeftAnti =>
+      case _ => throw new IllegalArgumentException(
+        s"saltedJoin cannot run a '$joinType' join: the dim side is replicated " +
+          s"$n ways, so a dim row no fact row matches would come out once per " +
+          "salt replica. Use inner, left, left_semi or left_anti.")
+    }
     // internal rename avoids output duplication when factKey == dimKey
     val dimTmpKey = "__salt_dim_key"
     val salted   = fact.withColumn("__fsalt", (rand(seed) * n).cast("int"))

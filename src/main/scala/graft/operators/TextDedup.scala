@@ -1275,7 +1275,7 @@ object TextDedup {
     * broadcast-converts anyway, but one byte past it the plan falls off
     * a cliff to sort-merge joins whose exchanges carry two arrays per
     * candidate — measured on the mutated ×100 board as a >65 GB
-    * single-shard sort spill (ShuffleSmoke: the same plan under the
+    * single-shard sort spill (QueryMetrics: the same plan under the
     * threshold moves 1.9 GB total). Callers pass true whenever the
     * array side fits [[ngramBroadcastBudgetBytes]]. */
   private def verifyJaccard(cand: DataFrame, shingled: DataFrame,

@@ -13,8 +13,9 @@ import org.apache.spark.sql.types._
   * `SELECT …columns… WHERE lower <= key AND key < upper AND pushed`
   * range queries then parse natively on the remote Spark.
   *
-  * Registered by [[register]] (idempotent). Used by the multi-JVM JDBC
-  * drill (graft.JdbcClusterSmoke), where a thrift server backed by the
+  * Registered by [[register]] (idempotent). Used by the catalog's JDBC
+  * rows under a `local-cluster` master ([[ThriftEndpoint]]), where a
+  * thrift server backed by the
   * driver's session catalog is the network database and executors in
   * separate JVMs issue the partition scans — the production JDBC-source
   * topology (executors → network endpoint) without an external RDBMS.

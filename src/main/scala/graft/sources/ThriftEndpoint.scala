@@ -15,9 +15,10 @@ import org.apache.spark.sql.SparkSession
   * same constraint). Serving the session catalog over thrift reproduces
   * the production topology instead (executors → network endpoint), so
   * the same queries complete under `local-cluster` and the multi-JVM
-  * verify board closes to the full row count. Factored out of the
-  * standalone drill (graft.JdbcClusterSmoke), which proves the
-  * partitioned-scan + pushdown behavior of this path in isolation.
+  * verify board closes to the full row count. The catalog's JDBC rows
+  * (io_jdbc_roundtrip, pl_graphql_ingest) reach it through
+  * `jdbcFixtureEndpoint` under `SPARK_GRAFT_MASTER=local-cluster[...]`
+  * and run a partitioned `JdbcIO.read` from the executor JVMs.
   *
   * Startup is lazy and once-per-JVM (the server lives until the JVM
   * exits; HiveThriftServer2 has no public stop). Port:

@@ -109,4 +109,42 @@ class MaterializeSpec extends SparkSpec {
       spark.conf.unset(Materialize.ScratchKey)
     }
   }
+
+  test("losing the blocks: local mode fails, reliable mode recounts") {
+    // The in-process stand-in for losing the executor that held a
+    // materialization's blocks: unpersist the RDDs the materialization
+    // added, then recount. localCheckpoint truncated the lineage, so
+    // local mode has no recompute path; the reliable round trip pins no
+    // RDD and rereads its scratch parquet. Only RDDs this test added are
+    // unpersisted — the session is shared.
+    import org.apache.spark.sql.functions._
+    val sc = spark.sparkContext
+    def persisted: Set[Int] = sc.getPersistentRDDs.keySet.toSet
+    def loseBlocks(mode: String): (Set[Int], Either[Throwable, Long]) = {
+      spark.conf.set(Materialize.ModeKey, mode)
+      try {
+        val before = persisted
+        val m = Materialize(spark.range(0, 20000, 1, 4)
+          .groupBy(pmod(col("id"), lit(1000)).as("k")).agg(count(lit(1)).as("n")),
+          eager = true)
+        val added = persisted -- before
+        added.foreach(id => sc.getPersistentRDDs(id).unpersist(blocking = true))
+        (added, try Right(m.count()) catch { case e: Throwable => Left(e) })
+      } finally {
+        spark.conf.unset(Materialize.ModeKey)
+        Materialize.releaseScratch(spark)
+      }
+    }
+    val (localAdded, local) = loseBlocks("local")
+    assert(localAdded.nonEmpty, "local mode pinned no RDD")
+    local match {
+      case Right(n) => fail(s"local mode recounted n=$n after losing its blocks")
+      case Left(e) =>
+        val msgs = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+        assert(msgs.exists(m => m != null && m.contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND")), e)
+    }
+    val (reliableAdded, reliable) = loseBlocks("reliable")
+    assert(reliableAdded.isEmpty, s"reliable mode pinned RDDs $reliableAdded")
+    assert(reliable == Right(1000L), reliable)
+  }
 }

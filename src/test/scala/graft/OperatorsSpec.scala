@@ -27,6 +27,60 @@ class OperatorsSpec extends SparkSpec {
     assert(salted.except(plain).count() == 0 && plain.except(salted).count() == 0)
   }
 
+  private def multiset(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("saltedJoin degenerate battery: == the plain join; right/full rejected") {
+    def fact(rows: (Option[Long], Int)*) = rows.toDF("fk", "fv")
+    def dim(rows: (Option[Long], String)*) = rows.toDF("dk", "dv")
+    val f3 = fact((Some(1L), 10), (Some(1L), 11), (Some(2L), 20))
+    val d2 = dim((Some(1L), "a"), (Some(3L), "c"))
+    val cases = Seq(
+      "base" -> (f3, d2),
+      "empty fact" -> (fact(), d2),
+      "empty dim" -> (f3, dim()),
+      "single row" -> (fact((Some(1L), 10)), dim((Some(1L), "a"))),
+      "null fact key" -> (fact((None, 10), (Some(1L), 11)), d2),
+      "null dim key" -> (f3, dim((None, "n"), (Some(1L), "a"))),
+      "one hot key" -> ((1 to 200).map(i => (Option(1L), i)).toDF("fk", "fv"),
+        dim((Some(1L), "a"), (Some(2L), "b"))))
+    for ((label, (f, d)) <- cases; jt <- Seq("inner", "left", "left_semi", "left_anti");
+         n <- Seq(1, 4, 16)) {
+      val r = d.withColumnRenamed("dk", "__d")
+      val want = multiset(f.join(r, f("fk") === r("__d"), jt).drop("__d"))
+      val got = multiset(RuleJoins.saltedJoin(f, d, "fk", "dk", n, joinType = jt))
+      assert(got == want, s"$label, $jt, n=$n")
+    }
+    for (jt <- Seq("right", "right_outer", "full", "outer", "full_outer")) {
+      val e = intercept[IllegalArgumentException](
+        RuleJoins.saltedJoin(f3, d2, "fk", "dk", 4, joinType = jt))
+      assert(e.getMessage.contains("once per salt replica"), s"$jt: ${e.getMessage}")
+    }
+  }
+
+  test("rangeJoin degenerate battery: null value/lo/hi match nothing") {
+    import org.apache.spark.sql.Row
+    val facts: Seq[(Int, Option[Double])] = Seq((1, Some(5.0)), (2, None), (3, Some(50.0)), (4, Some(10.0)))
+    val bands: Seq[(Option[Double], Option[Double], String)] = Seq((Some(0.0), Some(10.0), "a"), (Some(10.0), Some(20.0), "b"),
+      (None, Some(100.0), "lo_null"), (Some(0.0), None, "hi_null"), (None, None, "both_null"))
+    val cases = Seq(
+      ("base", facts, bands), ("empty fact", Nil, bands), ("empty bands", facts, Nil),
+      ("single row", facts.take(1), bands.take(1)))
+    def box(v: Option[Double]): java.lang.Double = v.map(Double.box).orNull
+    for ((label, fs, bs) <- cases; jt <- Seq("left", "inner")) {
+      // brute force with SQL's three-valued compare: a null bound never matches
+      val want = fs.flatMap { case (id, v) =>
+        val hits = bs.filter { case (lo, hi, _) =>
+          (for (x <- v; l <- lo; h <- hi) yield l <= x && x <= h).getOrElse(false)
+        }.map { case (lo, hi, b) => Row(id, box(v), box(lo), box(hi), b) }
+        if (hits.isEmpty && jt == "left") Seq(Row(id, box(v), null, null, null)) else hits
+      }.map(_.toString).sorted
+      val got = multiset(RuleJoins.rangeJoin(fs.toDF("id", "v"), bs.toDF("lo", "hi", "band"),
+        col("v"), col("lo"), col("hi"), jt))
+      assert(got == want, s"$label, $jt")
+    }
+  }
+
   test("outerCoalesceMerge: incoming wins on shared keys, unmatched rows kept") {
     val existing = Seq((1, "old", 10), (2, "keep", 20)).toDF("k", "name", "a")
     val incoming = Seq((1, "new"), (3, "ins")).toDF("k", "name")

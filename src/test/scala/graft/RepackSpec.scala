@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * repackInto is called BELOW Tables' JVM-local lock, so these threads
   * race exactly where two JVMs would) all resolve a complete,
   * value-identical dir; crash remnants (.tmp_* orphans) are never
-  * served and get swept. */
+  * served and get swept. The cross-JVM leg forks two [[RepackRacer]]
+  * processes onto one fresh repack root. */
 class RepackSpec extends SparkSpec {
 
   private def freshBase(): File = {
@@ -130,5 +131,71 @@ class RepackSpec extends SparkSpec {
     val v = graft.core.Tables.repackInto(spark, src, b, "t", 8L << 20)
     assert(spark.read.parquet(v.getPath).count() == 20000)
     assert(!orphan.exists(), "hour-old crash remnant should be swept")
+  }
+
+  test("two racing JVMs on one fresh repack root: identical fingerprints, no tmp orphans") {
+    import scala.jdk.CollectionConverters._
+    val root = freshBase()
+    val work = freshBase()
+    // sf0.1 lineitem (one 10.8 MB file) clears RepackMinBytes, so both
+    // JVMs race the stage + atomic-rename publish
+    val sf = new File(new File(sf001).getParentFile, "sf0.1").getPath
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.toSeq
+    // this JVM's --add-opens set, in either the joined or the two-token form
+    val opens = jvmArgs.zipWithIndex.flatMap {
+      case (a, _) if a.startsWith("--add-opens=") => Seq(a)
+      case ("--add-opens", i) => Seq("--add-opens", jvmArgs(i + 1))
+      case _ => Nil
+    }
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx1g",
+      "-Dspark.ui.enabled=false") ++ opens ++
+      Seq("-cp", System.getProperty("java.class.path"), "graft.RepackRacer", sf,
+        "lineitem,orders,documents")
+    val racers = Seq("a", "b").map { tag =>
+      val (out, err) = (new File(work, s"$tag.out"), new File(work, s"$tag.err"))
+      val pb = new ProcessBuilder(cmd.asJava).directory(work)
+        .redirectOutput(out).redirectError(err)
+      pb.environment().put("SPARK_GRAFT_REPACK_DIR", root.getPath)
+      (pb.start(), out, err)
+    }
+    // wait for both before asserting, so a failed racer leaves no live sibling
+    val exits = racers.map { case (p, _, _) =>
+      if (p.waitFor(300, java.util.concurrent.TimeUnit.SECONDS)) p.exitValue()
+      else { p.destroyForcibly().waitFor(); -1 }
+    }
+    val prints = racers.zip(exits).map { case ((_, out, err), exit) =>
+      assert(exit == 0, s"racer exit $exit: ${Files.readString(err.toPath).takeRight(2000)}")
+      Files.readAllLines(out.toPath).asScala.filter(_.startsWith("RACE ")).toSeq
+    }
+    assert(prints.head.size == 3 && prints.head == prints(1),
+      s"fingerprints differ:\n${prints.head}\n${prints(1)}")
+    def walk(f: File): Seq[File] =
+      f +: Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+    val all = walk(root)
+    assert(all.exists(f => f.getName.startsWith("lineitem.parquet.v") &&
+      new File(f, "_SUCCESS").exists()), "no published lineitem repack")
+    val orphans = all.filter(_.getName.startsWith(".tmp_"))
+    assert(orphans.isEmpty, s"staging orphans survived: $orphans")
+    Seq(root, work).foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+  }
+}
+
+/** One racer of RepackSpec's cross-JVM test: resolves each named table
+  * through [[graft.core.Tables]] (on the `SPARK_GRAFT_REPACK_DIR` root)
+  * and prints `RACE <table> <rows> <hash>`, where the hash is the
+  * order-insensitive sum of every row's xxhash64 over all columns.
+  *
+  * Usage: RepackRacer <sfDir> <table,table,...>
+  */
+object RepackRacer {
+  def main(args: Array[String]): Unit = {
+    val spark = graft.core.GraftSession.local(2, "graft-repack-race")
+    args(1).split(",").foreach { t =>
+      val df = graft.core.Tables(spark, args(0), t)
+      val r = df.agg(count(lit(1)), sum(xxhash64(df.columns.map(col).toSeq: _*))).head()
+      println(s"RACE $t ${r.get(0)} ${r.get(1)}")
+    }
+    spark.stop()
   }
 }

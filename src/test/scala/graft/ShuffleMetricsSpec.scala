@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.graft.GraftSql
-
 import graft.core.{QueryMetrics, Tables}
 
 /** Measured-data-movement audits. PlanAuditSpec pins plan SHAPE (broadcast
@@ -14,11 +12,9 @@ import graft.core.{QueryMetrics, Tables}
   * counts — partition-count and AQE changes shouldn't flake them. */
 class ShuffleMetricsSpec extends SparkSpec {
 
-  /** Metrics of one query run (noop sink, sort-stripped plan). */
+  /** Metrics of one query run, measured as Bench measures a row. */
   private def measure(name: String): QueryMetrics =
-    QueryMetrics.measure(spark)(
-      GraftSql.stripTrailingSort(SparkEntry.queries(name)(spark, sf001))
-        .write.format("noop").mode("overwrite").save())._2
+    Bench.measureRow(spark, sf001, name)._2
 
   test("j1: broadcast star — the fact side never rides an exchange") {
     val m = measure("j1_star_revenue")
@@ -67,11 +63,13 @@ class ShuffleMetricsSpec extends SparkSpec {
     }
   }
 
-  test("ShuffleSmoke: rows observed on the warm-up == count()") {
+  test("Bench.measureRow: rows observed on the cold run == count()") {
     for (q <- Seq("a1_pricing_summary", "d_simhash")) {
-      val (rows, _) = ShuffleSmoke.measureQuery(spark, sf001, q)
+      val (_, m, rows) = Bench.measureRow(spark, sf001, q, countRows = true)
       val want = SparkEntry.queries(q)(spark, sf001).count()
-      assert(rows == want, s"$q: observed $rows rows, count() $want")
+      assert(rows.contains(want), s"$q: observed $rows rows, count() $want")
+      assert(m.jobs >= 1 && m.stages >= 1 && m.tasks >= 1,
+        s"$q jobs ${m.jobs}, stages ${m.stages}, tasks ${m.tasks}")
     }
   }
 }

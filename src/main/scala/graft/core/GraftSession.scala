@@ -76,6 +76,23 @@ object GraftSession {
     s
   }
 
+  /** Entries of Spark's codegen class cache (the static conf
+    * `spark.sql.codegen.cache.maxEntries`, default 100). Recurring work
+    * reruns the same plans in one session, and the cache is an LRU: a
+    * cycle of plans that generates more than 100 distinct classes evicts
+    * each class before its next use, so every pass recompiles it (the
+    * ten rows of perfbench's board_mix compiled 120 classes in one pass
+    * at sf0.001 and 107 of them again in the next), and a recompiled
+    * class is new to the JIT too.
+    * Sized from a count, not a guess: one session running the whole
+    * 218-row catalog at sf0.01 with the cache uncapped compiled 2,709
+    * distinct classes in its first pass and 49 more in a second (plans
+    * AQE varies), so 3,000 holds the catalog. Metaspace used after those
+    * two passes (after a full GC, 4 cores): 224 MB at 100 entries, which
+    * recompiled 3,192 classes in the second pass and unloads the evicted
+    * ones, and 243 MB at 3,000, which recompiled 44. */
+  val CodegenCacheEntries = 3000
+
   def local(cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
               .getOrElse(Runtime.getRuntime.availableProcessors()),
             appName: String = "graft"): SparkSession = {
@@ -110,6 +127,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // reference pipelines assume lenient Hive-style null-on-error casts
       .config("spark.sql.ansi.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       // NOTE on shuffle-file hygiene: sequenced big-shuffle loops (the
       // ngram shard fallback) clean their own files deterministically
       // via per-execution shuffleDependency.fileCleanup — do NOT lower

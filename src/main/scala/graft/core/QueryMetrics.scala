@@ -2,6 +2,7 @@ package graft.core
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
@@ -32,7 +33,17 @@ import org.apache.spark.sql.graft.GraftSql
   * Parquet input bytes read 0 under Hadoop's vectored IO, which bypasses
   * the statistics `inputMetrics` reads; a harness that reports them sets
   * `spark.hadoop.parquet.hadoop.vectored.io.enabled=false` (Bench
-  * does). */
+  * does).
+  *
+  * `codegenCompiles` is how many generated classes Janino compiled while
+  * the region ran: the delta of Spark's `CodegenMetrics` compile-time
+  * histogram count. A class found in the codegen cache
+  * ([[GraftSession.CodegenCacheEntries]]) is not compiled again, so a
+  * warm rerun of a plan reads 0. Two limits: the count is JVM-global, so
+  * anything else compiling in the same JVM while the region runs (a
+  * concurrent query, another session) is counted too; and under a
+  * `local-cluster` master the executors compile in their own JVMs, whose
+  * compiles are not counted (only the driver's are). */
 final case class QueryMetrics(
     wallNs: Long,
     jobs: Int, stages: Int,
@@ -42,7 +53,8 @@ final case class QueryMetrics(
     memorySpillBytes: Long, diskSpillBytes: Long,
     executorCpuNs: Long, gcMs: Long,
     taskMs: IndexedSeq[Long],
-    broadcastBytes: Seq[Long], broadcastRows: Seq[Long]) {
+    broadcastBytes: Seq[Long], broadcastRows: Seq[Long],
+    codegenCompiles: Long) {
   def tasks: Int = taskMs.length
   def spillBytes: Long = memorySpillBytes + diskSpillBytes
   def broadcastBuilds: Int = broadcastBytes.length
@@ -61,13 +73,17 @@ object QueryMetrics {
     val l = new Listener
     spark.sparkContext.addSparkListener(l)
     try {
+      val cg0 = compiles()
       val t0 = System.nanoTime()
       val out = body
       val wallNs = System.nanoTime() - t0
       GraftSql.drainListenerBus(spark)
-      (out, l.result(wallNs))
+      (out, l.result(wallNs, compiles() - cg0))
     } finally spark.sparkContext.removeSparkListener(l)
   }
+
+  /** Generated classes compiled in this JVM so far. */
+  private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** (`dataSize`, `numOutputRows`) of each broadcast build in an
     * executed plan: the walk enters adaptive plans (through their final
@@ -121,9 +137,10 @@ object QueryMetrics {
       case _ =>
     }
 
-    def result(wallNs: Long): QueryMetrics = synchronized(QueryMetrics(wallNs,
-      jobs, stages, input, inputRec, shWrite, shWriteRec, shRead, shReadRec,
-      memSpill, diskSpill, cpuNs, gcMs, taskMs.toIndexedSeq.sorted,
-      bcast.map(_._1).toSeq, bcast.map(_._2).toSeq))
+    def result(wallNs: Long, codegenCompiles: Long): QueryMetrics =
+      synchronized(QueryMetrics(wallNs,
+        jobs, stages, input, inputRec, shWrite, shWriteRec, shRead, shReadRec,
+        memSpill, diskSpill, cpuNs, gcMs, taskMs.toIndexedSeq.sorted,
+        bcast.map(_._1).toSeq, bcast.map(_._2).toSeq, codegenCompiles))
   }
 }

@@ -16,6 +16,13 @@ import org.apache.spark.sql.functions._
   * (which Spark would plan as a per-key cartesian) and no candidate
   * explosion at any scale. Right rows must be unique per (key, ts);
   * pre-dedup with [[Windows.dedupLatest]] to pin ties.
+  *
+  * Nulls follow SQL: a null key equals no key and a null timestamp is
+  * at-or-before nothing, so a right row with either can never match and
+  * is dropped before the union (kept, a null-key right row would match
+  * every null-key left row in the shared null partition, and a null-ts
+  * one sorts first and would carry to every left row of its key). A
+  * left row with either is kept and gets null payload.
   */
 object AsOf {
 
@@ -48,6 +55,7 @@ object AsOf {
         leftCols.filterNot(keys.contains).map(col) :+
         lit(null).cast(payType).as("__rpay"): _*)
     val r = right
+      .filter((keys :+ rightTs).map(col(_).isNotNull).reduce(_ && _))
       .withColumn("__ts", col(rightTs))
       .withColumn("__side", lit(0))
       .select((keys.map(col) :+ col("__ts") :+ col("__side")) ++

@@ -44,7 +44,8 @@ object Intervals {
 
   /** Iterative fixed-point variant (ref: `slow_temp_table_write_in_palce_of_
     * recursive_cte.py:104-183`): repeatedly merge pairwise-overlapping
-    * neighbours, pinning each generation through [[FixedPoint.iterate]],
+    * neighbours, halving each run of them per pass, pinning each
+    * generation through [[FixedPoint.iterate]],
     * until the row count stops shrinking (null-bound rows dropped, as in
     * [[collapse]]). Kept for capability parity — prefer [[collapse]]; the
     * reference itself warns this takes 45-90 s on 200 rows (BASELINE.md). */
@@ -55,16 +56,21 @@ object Intervals {
       val w = Window.partitionBy(keys.map(col): _*).orderBy(col(begin), col(end))
       // A row absorbs its successor only when the row itself survives this
       // pass (otherwise a chain A<B<C would drop B — whose extended end was
-      // the only thing covering C — and lose coverage). One absorption per
-      // chain per pass; convergence over O(chain) passes matches the
-      // reference's deliberately iterative semantics.
+      // the only thing covering C — and lose coverage). In each run of rows
+      // that merge into their successor, the rows at even positions absorb
+      // and the odd ones are absorbed, so every run halves per pass: a
+      // chain of n merging intervals (a member's daily records) converges
+      // in O(log n) passes, not n, and stays under maxIter.
       cur
         .withColumn("__nxt_b", lead(col(begin), 1).over(w))
         .withColumn("__nxt_e", lead(col(end), 1).over(w))
         .withColumn("__merge", col("__nxt_b").isNotNull &&
           col("__nxt_b") <= date_add(col(end), gapDays))
-        .withColumn("__absorb", col("__merge") &&
-          !lag(col("__merge"), 1, false).over(w))
+        .withColumn("__rn", row_number().over(w))
+        .withColumn("__starts", !lag(col("__merge"), 1, false).over(w))
+        .withColumn("__run0", max(when(col("__starts"), col("__rn")))
+          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .withColumn("__absorb", col("__merge") && (col("__rn") - col("__run0")) % 2 === 0)
         .withColumn(end, when(col("__absorb"),
           greatest(col(end), col("__nxt_e"))).otherwise(col(end)))
         .withColumn("__dropped", lag(col("__absorb"), 1, false).over(w))

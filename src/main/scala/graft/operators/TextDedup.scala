@@ -338,7 +338,14 @@ object TextDedup {
     val census = rows.filter(col(idCol).isNotNull)
       .select(col(idCol) +: groupKeys.zip(keys).map { case (k, n) => k.as(n) } :+
         intraValue.as("__iv"): _*)
-    val w = Window.partitionBy(keys.map(col) :+
+    // The partition key leads with xxhash64 of the keys, so the window's
+    // sort compares longs and reaches the keys themselves only on a hash
+    // tie. A float-array key is otherwise compared through the
+    // normalizing lambda Spark wraps around it (-0.0 = 0.0, one NaN) in
+    // every comparison. xxhash64 hashes -0.0 as 0.0 and every NaN as the
+    // canonical NaN, so keys equal under that normalization hash equal
+    // and the groups are unchanged.
+    val w = Window.partitionBy(xxhash64(keys.map(col): _*) +: keys.map(col) :+
       when(keys.map(col(_).isNull).reduce(_ || _), col(idCol)): _*)
     // members of groups of size >= 2 — the only rows the collapse acts
     // on. Singleton groups (and every null-key row, which partitions

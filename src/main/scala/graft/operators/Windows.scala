@@ -68,7 +68,7 @@ object Windows {
       .select(col("__pid"), col("__off"))
     withLocal.join(broadcast(offsets), "__pid")
       .withColumn(rankCol, col("__lrn") + col("__off"))
-      .drop("__pid", "__lrn")
+      .drop("__pid", "__lrn", "__off")
   }
 
   private def resolveParts(df: DataFrame, numParts: Int): Int =

@@ -202,7 +202,7 @@ object IoQueries {
     // under local-cluster — same operator chain, deployment-appropriate
     // database.
     "io_jdbc_roundtrip" -> { (s, dir) =>
-      val (url, props, stSink) = jdbcFixtureEndpoint(s,
+      val (url, props, stSink, readParts) = jdbcFixtureEndpoint(s,
         s"graft_${new java.io.File(dir).getName.replace('.', '_')}")
       // Fixture volume is PINNED (c_custkey <= 200000 — a no-op at every
       // real scale factor, sf1's max custkey is 150k): the fixture
@@ -215,7 +215,7 @@ object IoQueries {
         Tables.customer(s, dir).filter(col("c_custkey") <= 200000L),
         url, "customers", props, stSink)
       JdbcIO.read(s, url, "customers",
-          partitionColumn = Some(("c_custkey", 0L, 200000L, 4)), props = props)
+          partitionColumn = Some(("c_custkey", 0L, 200000L, readParts)), props = props)
         .filter(col("c_acctbal") > 0.0)
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n"), dsum(col("c_acctbal")).as("bal"))

@@ -472,11 +472,11 @@ object PipelineQueries {
       val byToken = cursorPageFixture(rows.toSeq, pageSize = 40, tokenPrefix = "cur")
       val incoming = RestSource.fromCursoredPages(s, byToken(_),
         graft.core.SchemaDsl.fromSpec("team_id:l;headcount:i;segment:c"))
-      val (url, props, stSink) = jdbcFixtureEndpoint(s,
+      val (url, props, stSink, readParts) = jdbcFixtureEndpoint(s,
         s"graft_gql_${new java.io.File(dir).getName.replace('.', '_')}")
       jdbcFixtureWrite(incoming, url, "teams_headcount", props, stSink)
       JdbcIO.read(s, url, "teams_headcount",
-          partitionColumn = Some(("team_id", 0L, 200000L, 4)), props = props)
+          partitionColumn = Some(("team_id", 0L, 200000L, readParts)), props = props)
         .groupBy(col("segment"))
         .agg(count(lit(1)).as("n_teams"),
           sum(col("headcount")).cast("long").as("headcount_sum"))

@@ -70,21 +70,32 @@ package object queries {
     * JDBCSuite carries the same constraint). The operator chain under
     * test (JDBC sink → partitioned JDBC scan with pushdown) is identical
     * either way; only the endpoint — a deployment property, exactly as
-    * in production — differs. Returns (url, props, statementSink):
-    * `statementSink` selects [[graft.sources.JdbcIO.writeStatements]],
-    * because hive2 endpoints reject prepared-statement batches. */
+    * in production — differs. Returns (url, props, statementSink,
+    * readParts): `statementSink` selects
+    * [[graft.sources.JdbcIO.writeStatements]], because hive2 endpoints
+    * reject prepared-statement batches. `readParts` is the partition
+    * count of the fixture's partitioned read: 4, or under
+    * `local-cluster[n,c,m]` at most n·c − 1. The thrift server runs each
+    * partition's SELECT as a job of this same app, so a read whose tasks
+    * hold every executor slot leaves those jobs no slot and waits on
+    * them forever (a 4-way read on local-cluster[2,2,2048] did). */
   def jdbcFixtureEndpoint(s: SparkSession, memName: String)
-      : (String, java.util.Properties, Boolean) =
-    if (s.sparkContext.master.startsWith("local-cluster"))
-      // memName scopes the thrift namespace too (per-memName database):
-      // the Derby branch isolates scale factors via the memory-db name,
-      // and without the twin here two scales running in one app would
-      // silently share graft_jdbc_fx.customers
-      (graft.sources.ThriftEndpoint.ensureDb(s, memName),
-        graft.sources.ThriftEndpoint.clientProps(), true)
-    else
-      (s"jdbc:derby:memory:$memName;create=true",
-        new java.util.Properties(), false)
+      : (String, java.util.Properties, Boolean, Int) = {
+    val LocalCluster = """local-cluster\[\s*(\d+)\s*,\s*(\d+)\s*,.*""".r
+    s.sparkContext.master match {
+      case LocalCluster(executors, cores) =>
+        // memName scopes the thrift namespace too (per-memName database):
+        // the Derby branch isolates scale factors via the memory-db name,
+        // and without the twin here two scales running in one app would
+        // silently share graft_jdbc_fx.customers
+        (graft.sources.ThriftEndpoint.ensureDb(s, memName),
+          graft.sources.ThriftEndpoint.clientProps(), true,
+          math.max(1, math.min(4, executors.toInt * cores.toInt - 1)))
+      case _ =>
+        (s"jdbc:derby:memory:$memName;create=true",
+          new java.util.Properties(), false, 4)
+    }
+  }
 
   /** Sink dispatch for [[jdbcFixtureEndpoint]]'s `statementSink` flag.
     * The statement sink runs on ONE connection: a Spark-SQL thrift
@@ -94,7 +105,7 @@ package object queries {
     * endpoint takes the parallel path ([[graft.sources.JdbcIO.write]],
     * connection-capped), which the Derby branch exercises; the thrift
     * branch's job is the JVM/network boundary, which one writer
-    * connection plus the 4-way partitioned read still cross.
+    * connection plus the partitioned read still cross.
     * rowsPerStatement is sized so a 15k-row fixture lands in ~3
     * statements: every statement a thrift endpoint executes is a full
     * parse+plan+file-commit cycle (~0.25 s under local-cluster), so

@@ -214,6 +214,55 @@ class DedupPropertySpec extends SparkSpec {
     }
   }
 
+  /** Float-array keys group under Spark's normalized float equality:
+    * -0.0 equals 0.0 and every NaN bit pattern equals every other. The
+    * collapse's window key leads with xxhash64 of the keys, which must
+    * hash such keys equal or it would split their group. */
+  test("collapseExactDups: -0.0/0.0 and NaN payloads group as under normalized equality") {
+    import org.apache.spark.sql.{Row, types => T}
+    // one vector list per element type: num boxes a number, nan(i) the
+    // i-th NaN bit pattern (quiet, quiet with payload, negative, signaling)
+    def vectors(num: Double => AnyRef, nan: Int => AnyRef): Seq[(Long, Seq[AnyRef])] = Seq(
+      1L -> Seq(num(0.0), num(1.0)), 2L -> Seq(num(-0.0), num(1.0)),      // {1, 2}
+      3L -> Seq(nan(0), num(2.0)), 4L -> Seq(nan(1), num(2.0)),
+      5L -> Seq(nan(2), num(2.0)), 6L -> Seq(nan(3), num(2.0)),          // {3, 4, 5, 6}
+      7L -> Seq(num(-0.0), nan(1)), 8L -> Seq(num(0.0), nan(2)),         // {7, 8}
+      9L -> Seq(null, num(3.0)), 10L -> Seq(null, num(3.0)),             // {9, 10}
+      11L -> Seq(num(1.0), num(1.0)), 12L -> Seq(num(1.0), num(1.5)),
+      13L -> Seq(num(3.0), null))
+    val want = Map(1L -> Set(1L, 2L), 3L -> Set(3L, 4L, 5L, 6L), 7L -> Set(7L, 8L),
+      9L -> Set(9L, 10L))
+    val floatNaN = Seq(0x7fc00000, 0x7fc00001, 0xffc00000, 0x7f800001)
+    val doubleNaN = Seq(0x7ff8000000000000L, 0x7ff8000000000001L,
+      0xfff8000000000000L, 0x7ff0000000000001L)
+    val types: Seq[(T.DataType, Double => AnyRef, Int => AnyRef, Any => Long)] = Seq(
+      (T.FloatType, d => Float.box(d.toFloat),
+        i => Float.box(java.lang.Float.intBitsToFloat(floatNaN(i))),
+        x => java.lang.Float.floatToRawIntBits(x.asInstanceOf[Float]).toLong),
+      (T.DoubleType, d => Double.box(d),
+        i => Double.box(java.lang.Double.longBitsToDouble(doubleNaN(i))),
+        x => java.lang.Double.doubleToRawLongBits(x.asInstanceOf[Double])))
+    for ((elem, num, nan, rawBits) <- types) {
+      val schema = T.StructType(Seq(T.StructField("id", T.LongType),
+        T.StructField("v", T.ArrayType(elem, containsNull = true))))
+      // a local relation: Java serialization (an RDD of Rows) would
+      // canonicalize the NaNs before Spark ever saw them
+      import scala.jdk.CollectionConverters._
+      val df = spark.createDataFrame(
+        vectors(num, nan).map { case (id, v) => Row(id, v) }.asJava, schema)
+      // the four NaN patterns reach the operator unnormalized
+      val bits = df.filter(col("id").between(3L, 6L)).collect()
+        .map(r => rawBits(r.getSeq[Any](1).head)).toSet
+      assert(bits.size == 4, s"$elem: NaN payloads were normalized on the way in: $bits")
+      val c = TextDedup.collapseExactDups(df, "id", Seq(col("v")))
+      val got = c.dupMembers.collect().map(r => (r.getLong(0), r.getLong(1)))
+        .groupBy(_._1).map { case (rep, ms) => rep -> ms.map(_._2).toSet }
+      assert(got == want, s"$elem: groups $got, want $want")
+      assert(c.reps.count() == 13 - want.values.map(_.size - 1).sum, s"$elem: reps")
+    }
+  }
+
+
   test("minhashLshPairs == driver-side brute-force exact Jaccard") {
     import spark.implicits._
     val docs = corpus.toDF("doc_id", "text")

@@ -17,6 +17,46 @@ import org.apache.spark.sql.types._
   * fixed (SURVEY.md §7.4-7).
   */
 class IntervalsSpec extends SparkSpec {
+  import spark.implicits._
+
+  private type Iv = (String, Option[Int], Option[Int]) // (key, begin, end) day offsets
+
+  /** The brute day-expansion oracle: every interval expands into its days
+    * (a row with a null bound covers no known day), then each key's sorted
+    * days are cut wherever two consecutive covered days lie more than
+    * `gapDays` apart. A null key is one group, as in GROUP BY. */
+  private def dayOracle(rows: Seq[Iv], gapDays: Int): Set[(String, Int, Int)] =
+    rows.collect { case (k, Some(b), Some(e)) => (k, b, e) }
+      .groupBy(_._1).toSeq.flatMap { case (k, ivs) =>
+        val days = ivs.flatMap { case (_, b, e) => b to e }.distinct.sorted
+        days.tail.foldLeft(List((days.head, days.head))) {
+          case ((s0, e0) :: done, d) =>
+            if (d - e0 <= gapDays) (s0, d) :: done else (d, d) :: (s0, e0) :: done
+          case (Nil, _) => Nil
+        }.map { case (b, e) => (k, b, e) }
+      }.toSet
+
+  /** `rows` as a frame (k, b, e) of dates, day 0 = 2020-01-01. */
+  private def dayFrame(rows: Seq[Iv]): org.apache.spark.sql.DataFrame =
+    rows.toDF("k", "bi", "ei")
+      .select(col("k"),
+        expr("date_add(DATE '2020-01-01', bi)").as("b"),
+        expr("date_add(DATE '2020-01-01', ei)").as("e"))
+
+  private val day0 = java.time.LocalDate.of(2020, 1, 1)
+
+  /** A collapse output (k, b, e) as day offsets. */
+  private def offsets(out: org.apache.spark.sql.DataFrame): Seq[(String, Int, Int)] =
+    out.collect().toSeq.map { r =>
+      def off(i: Int) = Option(r.getDate(i)).map(d =>
+        java.time.temporal.ChronoUnit.DAYS.between(day0, d.toLocalDate).toInt)
+      (r.getString(0), off(1).getOrElse(Int.MinValue), off(2).getOrElse(Int.MinValue))
+    }
+
+  private def check(name: String, got: Seq[(String, Int, Int)],
+                    want: Set[(String, Int, Int)]): Unit =
+    assert(got.size == got.distinct.size && got.toSet == want,
+      s"$name: missing=${(want -- got).take(4)} extra=${(got.toSet -- want).take(4)}")
 
   private val preSchema = StructType(Seq(
     StructField("memnum", StringType),
@@ -59,7 +99,6 @@ class IntervalsSpec extends SparkSpec {
 
   test("collapse invariants on random intervals: disjoint-with-gap, covering, idempotent") {
     val rnd = new scala.util.Random(7)
-    import spark.implicits._
     val rows = Seq.fill(300) {
       val key = s"k${rnd.nextInt(12)}"
       val b = rnd.nextInt(300)
@@ -99,13 +138,9 @@ class IntervalsSpec extends SparkSpec {
     // Generated per key: random overlapping runs, single-day intervals,
     // intervals contained in a neighbour, successors starting exactly 1
     // and exactly 2 days after a predecessor's end, and rows with a
-    // null begin, a null end or both. The oracle expands every interval
-    // into its days (a row with a null bound covers no known day), then
-    // cuts each key's sorted days wherever two consecutive covered days
-    // lie more than gapDays apart.
-    import spark.implicits._
+    // null begin, a null end or both.
     val rnd = new scala.util.Random(23)
-    val rows: Seq[(String, Option[Int], Option[Int])] = (0 until 12).flatMap { k =>
+    val rows: Seq[Iv] = (0 until 12).flatMap { k =>
       val key = s"k$k"
       var at = rnd.nextInt(20)
       val chain = (0 until 8).flatMap { _ =>
@@ -121,7 +156,7 @@ class IntervalsSpec extends SparkSpec {
           else Nil
         (key, Some(b), Some(e)) +: (contained ++ overlap)
       }
-      val nulls = Seq[(String, Option[Int], Option[Int])](
+      val nulls = Seq[Iv](
         (key, None, Some(at + 40)), (key, Some(0), None),
         (key, None, None)).filter(_ => rnd.nextBoolean())
       rnd.shuffle(chain ++ nulls)
@@ -132,45 +167,47 @@ class IntervalsSpec extends SparkSpec {
         sorted.zip(sorted.tail).map { case (x, y) => y._2 - x._3 }
       }.toSet
     assert(gaps.contains(1) && gaps.contains(2), s"generator lost a gap case: $gaps")
-    def oracle(gapDays: Int): Set[(String, Int, Int)] =
-      rows.collect { case (k, Some(b), Some(e)) => (k, b, e) }
-        .groupBy(_._1).toSeq.flatMap { case (k, ivs) =>
-          val days = ivs.flatMap { case (_, b, e) => b to e }.distinct.sorted
-          days.tail.foldLeft(List((days.head, days.head))) {
-            case ((s0, e0) :: done, d) =>
-              if (d - e0 <= gapDays) (s0, d) :: done else (d, d) :: (s0, e0) :: done
-            case (Nil, _) => Nil
-          }.map { case (b, e) => (k, b, e) }
-        }.toSet
-    val df = rows.toDF("k", "bi", "ei")
-      .select(col("k"),
-        expr("date_add(DATE '2020-01-01', bi)").as("b"),
-        expr("date_add(DATE '2020-01-01', ei)").as("e"))
-    val day0 = java.time.LocalDate.of(2020, 1, 1)
-    def offsets(out: org.apache.spark.sql.DataFrame): Seq[(String, Int, Int)] =
-      out.collect().toSeq.map { r =>
-        def off(i: Int) = Option(r.getDate(i)).map(d =>
-          java.time.temporal.ChronoUnit.DAYS.between(day0, d.toLocalDate).toInt)
-        (r.getString(0), off(1).getOrElse(Int.MinValue), off(2).getOrElse(Int.MinValue))
-      }
-    def check(name: String, got: Seq[(String, Int, Int)], want: Set[(String, Int, Int)]) =
-      assert(got.size == got.distinct.size && got.toSet == want,
-        s"$name: missing=${(want -- got).take(4)} extra=${(got.toSet -- want).take(4)}")
+    val df = dayFrame(rows)
     Seq(1, 2).foreach { g =>
       check(s"collapse gapDays=$g",
-        offsets(Intervals.collapse(df, Seq("k"), "b", "e", gapDays = g)), oracle(g))
+        offsets(Intervals.collapse(df, Seq("k"), "b", "e", gapDays = g)), dayOracle(rows, g))
     }
     check("collapseFixedPoint gapDays=1",
       offsets(Intervals.collapseFixedPoint(df, Seq("k"), "b", "e", gapDays = 1)),
-      oracle(1))
+      dayOracle(rows, 1))
     // the cluster default: every generation a ledgered parquet round trip
     spark.conf.set(Materialize.ModeKey, "reliable")
     try check("collapseFixedPoint gapDays=1, reliable materialization",
       offsets(Intervals.collapseFixedPoint(df, Seq("k"), "b", "e", gapDays = 1)),
-      oracle(1))
+      dayOracle(rows, 1))
     finally {
       Materialize.releaseScratch(spark)
       spark.conf.unset(Materialize.ModeKey)
+    }
+  }
+
+  test("collapse and collapseFixedPoint degenerate battery == day-expansion oracle") {
+    val some: Seq[Iv] = Seq(("a", Some(0), Some(3)), ("a", Some(4), Some(6)),
+      ("a", Some(9), Some(9)), ("b", Some(2), Some(5)))
+    val cases: Seq[(String, Seq[Iv])] = Seq(
+      "empty" -> Nil,
+      "single row" -> some.take(1),
+      "only null bounds" -> Seq(("a", None, Some(3)), ("a", Some(1), None), ("b", None, None)),
+      "all identical" -> Seq.fill(6)(("a", Some(1), Some(4))),
+      "null keys" -> (some ++ Seq((null, Some(0), Some(2)), (null, Some(3), Some(3)),
+        (null, Some(8), Some(9)), (null, None, Some(1)))),
+      // one member's daily records: a 120-day abutting chain, plus a
+      // contained and an overlapping copy, next to a quiet key
+      "one hot key" -> ((0 until 120).map(d => ("hot", Some(d), Some(d))) ++
+        Seq(("hot", Some(10), Some(12)), ("hot", Some(100), Some(130)),
+          ("hot", Some(140), Some(141))) ++ some))
+    for ((label, rows) <- cases; g <- Seq(1, 2)) {
+      val df = dayFrame(rows)
+      check(s"$label: collapse gapDays=$g",
+        offsets(Intervals.collapse(df, Seq("k"), "b", "e", gapDays = g)), dayOracle(rows, g))
+      check(s"$label: collapseFixedPoint gapDays=$g",
+        offsets(Intervals.collapseFixedPoint(df, Seq("k"), "b", "e", gapDays = g)),
+        dayOracle(rows, g))
     }
   }
 }

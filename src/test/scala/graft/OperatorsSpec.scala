@@ -186,6 +186,44 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  // the degenerate batteries' row types (a TypeTag, which toDF needs,
+  // cannot see a type alias local to a test body)
+  private type L = (Int, Option[Long], Option[Long])                     // (id, k, t)
+  private type R = (Option[Long], Option[Long], String)                  // (k, rt, rv)
+  private type E = (Option[Long], Option[String], Option[Long], Option[Long]) // (id, k, t, v)
+
+  test("asofJoin degenerate battery: == brute point-in-time lookup") {
+    import graft.operators.AsOf
+    val l3: Seq[L] = Seq((1, Some(1L), Some(10L)), (2, Some(1L), Some(5L)), (3, Some(2L), Some(7L)))
+    val r3: Seq[R] = Seq((Some(1L), Some(10L), "r10"), (Some(1L), Some(4L), "r4"),
+      (Some(2L), Some(7L), "s7"))
+    val cases: Seq[(String, Seq[L], Seq[R])] = Seq(
+      ("base", l3, r3),
+      ("empty left", Nil, r3),
+      ("empty right", l3, Nil),
+      ("single row", l3.take(1), r3.take(1)),
+      ("null left key", l3 :+ ((4, None, Some(10L))), r3 :+ ((None, Some(1L), "n1"))),
+      ("null right key", l3, r3 :+ ((None, Some(1L), "n1"))),
+      ("null left ts", l3 :+ ((4, Some(1L), None)), r3),
+      ("null right ts", l3, r3 :+ ((Some(1L), None, "nt"))),
+      ("null right ts only", l3.take(1), Seq((Some(1L), None, "nt"))),
+      ("all identical", Seq.fill(5)((1, Some(1L), Some(10L))), Seq((Some(1L), Some(3L), "r3"))),
+      ("one hot key", (1 to 200).map(i => (i, Some(1L), Some(i.toLong))),
+        (0 until 50).map(j => (Some(1L), Some(4L * j), s"h$j")) :+ ((Some(2L), Some(1L), "c"))))
+    for ((label, ls, rs) <- cases) {
+      // SQL semantics: a null key equals nothing, a null ts orders nothing
+      val want = ls.map { case (id, k, t) =>
+        val hit = rs.filter { case (rk, rt, _) =>
+          (for (a <- k; b <- rk; x <- t; y <- rt) yield a == b && y <= x).getOrElse(false)
+        }.sortBy(_._2.get).lastOption.map(_._3)
+        org.apache.spark.sql.Row(id, k.getOrElse(null), t.getOrElse(null), hit.orNull).toString
+      }.sorted
+      val got = multiset(AsOf.asofJoin(ls.toDF("id", "k", "t"), rs.toDF("k", "rt", "rv"),
+        Seq("k"), "t", "rt", Seq("rv")))
+      assert(got == want, s"$label: got $got, want $want")
+    }
+  }
+
   test("FixedPoint.iterate: converges on count, throws past maxIter") {
     import graft.operators.FixedPoint
     // transitive-closure-flavored step: keep rows whose parent survives;
@@ -789,6 +827,61 @@ class OperatorsSpec extends SparkSpec {
     val t2 = Windows.slidingDistinctCount(rand, Seq("k"), "t", "v", 7L, "c")
     assert(d2.except(t2).count() == 0 && t2.except(d2).count() == 0)
     assert(t2.count() == 400)
+  }
+
+  test("Windows degenerate battery: == the single-window definitions") {
+    import org.apache.spark.sql.expressions.Window
+    val base: Seq[E] = Seq((Some(1L), Some("a"), Some(10L), Some(1L)),
+      (Some(2L), Some("a"), Some(12L), Some(2L)), (Some(3L), Some("b"), Some(10L), Some(4L)))
+    val cases: Seq[(String, Seq[E])] = Seq(
+      "empty" -> Nil,
+      "single row" -> base.take(1),
+      "all identical" -> Seq.fill(6)(base.head),
+      "null ids and keys" -> (base ++ Seq((None, Some("a"), Some(11L), Some(8L)),
+        (None, None, Some(10L), Some(16L)), (Some(4L), None, Some(13L), Some(32L)),
+        (Some(5L), None, Some(13L), None), (Some(6L), Some("a"), None, Some(64L)))),
+      "one hot key" -> ((1L to 120L).map(i => (Some(i), Some("hot"), Some(i % 7), Some(i))) ++
+        base))
+    // (t, id, v, k) ties only between identical rows, so a global rank is
+    // determined up to swapping identical rows, which the multiset hides
+    val order = Seq(col("t"), col("id"), col("v"), col("k"))
+    val global = Window.orderBy(order: _*)
+    val running = global.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val keyed = Window.partitionBy(col("k")).orderBy(col("t")).rangeBetween(-2, 0)
+    for ((label, rows) <- cases) {
+      val df = rows.toDF("id", "k", "t", "v")
+      def same(what: String, got: org.apache.spark.sql.DataFrame,
+               want: org.apache.spark.sql.DataFrame): Unit = {
+        val (g, w) = (multiset(got), multiset(want))
+        assert(g == w, s"$label, $what: got $g, want $w")
+      }
+      same("globalRowNumber", Windows.globalRowNumber(df, order, "rn", numParts = 3),
+        df.withColumn("rn", row_number().over(global).cast("long")))
+      same("globalOrderedCumSum",
+        Windows.globalOrderedCumSum(df, order, col("v"), "rn", "cs", numParts = 3),
+        df.withColumn("rn", row_number().over(global).cast("long"))
+          .withColumn("cs", sum(coalesce(col("v"), lit(0L))).over(running)))
+      for (k <- Seq(1, 4, 200))
+        same(s"scalableNtile($k)", Windows.scalableNtile(df, order, k, "tile"),
+          df.withColumn("tile", ntile(k).over(global)))
+      same("slidingRangeSum", Windows.slidingRangeSum(df, Seq("k"), "t", col("v"), 2L, "s"),
+        df.withColumn("s", sum(col("v")).over(keyed)))
+      same("slidingDistinctCount", Windows.slidingDistinctCount(df, Seq("k"), "t", "v", 2L, "c"),
+        df.withColumn("c", size(collect_set(col("v")).over(keyed)).cast("long")))
+      // driver-side definitions: the latest row per key (a null key is one
+      // group, as in GROUP BY) and a running count of new-group flags
+      val latest = rows.groupBy(_._2).values.map(_.maxBy(e => (e._3, e._1))).toSeq
+      same("dedupLatest", Windows.dedupLatest(df, Seq("k"), Seq(col("t"), col("id"))),
+        latest.toDF("id", "k", "t", "v"))
+      val groups = rows.groupBy(_._2).values.toSeq.flatMap { g =>
+        g.sortBy(e => (e._3, e._1, e._4)).scanLeft((null: E, 0L)) { case ((_, n), e) =>
+          (e, n + (if (e._4.exists(_ % 2 == 0)) 1L else 0L))
+        }.tail
+      }.map { case (e, n) => (e._1, e._2, e._3, e._4, n) }
+      same("runGroups", Windows.runGroups(df, when(col("v") % 2 === 0, 1L).otherwise(0L),
+        "g", Seq(col("k")), Seq(col("t"), col("id"), col("v"))),
+        groups.toDF("id", "k", "t", "v", "g"))
+    }
   }
 
   test("Normalize: nullIfBlank / blankIfNull / isBlank") {

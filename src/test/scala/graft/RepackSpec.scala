@@ -140,18 +140,7 @@ class RepackSpec extends SparkSpec {
     // sf0.1 lineitem (one 10.8 MB file) clears RepackMinBytes, so both
     // JVMs race the stage + atomic-rename publish
     val sf = new File(new File(sf001).getParentFile, "sf0.1").getPath
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq
-    // this JVM's --add-opens set, in either the joined or the two-token form
-    val opens = jvmArgs.zipWithIndex.flatMap {
-      case (a, _) if a.startsWith("--add-opens=") => Seq(a)
-      case ("--add-opens", i) => Seq("--add-opens", jvmArgs(i + 1))
-      case _ => Nil
-    }
-    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx1g",
-      "-Dspark.ui.enabled=false") ++ opens ++
-      Seq("-cp", System.getProperty("java.class.path"), "graft.RepackRacer", sf,
-        "lineitem,orders,documents")
+    val cmd = ForkedJvm.command("1g", "graft.RepackRacer", sf, "lineitem,orders,documents")
     val racers = Seq("a", "b").map { tag =>
       val (out, err) = (new File(work, s"$tag.out"), new File(work, s"$tag.err"))
       val pb = new ProcessBuilder(cmd.asJava).directory(work)

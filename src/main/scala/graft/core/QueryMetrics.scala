@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
+  SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.graft.GraftSql
 
 /** What one measured region cost, summed over every job, stage, task and
@@ -105,6 +106,10 @@ object QueryMetrics {
       memSpill, diskSpill, cpuNs, gcMs = 0L
     private val taskMs = ArrayBuffer.empty[Long]
     private val bcast = ArrayBuffer.empty[(Long, Long)]
+    // executions whose physical plan was built: their start event carries
+    // it. One that fails in analysis starts with an empty plan, and forcing
+    // its `executedPlan` here would rethrow that failure.
+    private val planned = scala.collection.mutable.Set.empty[Long]
 
     override def onJobStart(j: SparkListenerJobStart): Unit = synchronized(jobs += 1)
 
@@ -129,7 +134,9 @@ object QueryMetrics {
     }
 
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-      case end: SparkListenerSQLExecutionEnd =>
+      case start: SparkListenerSQLExecutionStart if start.sparkPlanInfo.nodeName.nonEmpty =>
+        synchronized(planned += start.executionId)
+      case end: SparkListenerSQLExecutionEnd if synchronized(planned.remove(end.executionId)) =>
         GraftSql.executionOf(end).foreach { qe =>
           val builds = broadcastBuilds(qe.executedPlan)
           synchronized(bcast ++= builds)

@@ -461,20 +461,17 @@ object FileIO {
   def footerRowCount(spark: SparkSession, path: String): Long = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = Seq.newBuilder[String]
-    if (fs.exists(root)) {
-      val it = fs.listFiles(root, true)
-      while (it.hasNext) {
-        val f = it.next()
-        val name = f.getPath.getName
-        // zero-length files are NOT skipped: a truncated data file must
-        // fail the footer read below, not silently undercount
-        if (f.isFile && !name.startsWith("_") &&
-            !name.startsWith(".")) files += f.getPath.toString
-      }
-    }
+    // a listStatus walk, not listFiles: listFiles builds a
+    // LocatedFileStatus, which loads each status's permission, and the
+    // local filesystem loads it by running `ls -ld` per file
+    def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).toSeq.flatMap(s => if (s.isDirectory) walk(s.getPath) else Seq(s))
+    // zero-length files are NOT skipped: a truncated data file must
+    // fail the footer read below, not silently undercount
+    val list = (if (fs.exists(root)) walk(root) else Nil).map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .map(_.toString)
     import spark.implicits._
-    val list = files.result()
     if (list.isEmpty) 0L
     else {
       // ship the session's Hadoop configuration to the executors: a

@@ -19,11 +19,18 @@ import org.apache.spark.sql.functions._
   */
 object Incremental {
 
-  private def readWatermark(spark: SparkSession, statePath: String): Option[java.sql.Timestamp] =
-    try {
+  // a first run has no state: checked before reading, because a read of
+  // a missing path fails in analysis, and every listener that inspects
+  // that failed execution's plan (Spark's Observation listener does)
+  // logs the failure again
+  private def readWatermark(spark: SparkSession, statePath: String): Option[java.sql.Timestamp] = {
+    val p = new org.apache.hadoop.fs.Path(statePath)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
+    else try {
       val row = spark.read.parquet(statePath).agg(max(col("wm"))).head()
       if (row.isNullAt(0)) None else Some(row.getTimestamp(0))
     } catch { case _: Exception => None }
+  }
 
   /** Run one incremental load of `source` into `targetPath`. Returns the
     * number of rows written. `tsCol` must be a timestamp column. */

@@ -1,8 +1,5 @@
 package graft
 
-import java.io.File
-import java.nio.file.Files
-
 /** Recurring work compiles each generated class once per JVM. Spark's
   * codegen cache is an LRU, and a cycle of plans that generates more
   * distinct classes than it holds evicts each class before its next use,
@@ -16,22 +13,10 @@ import java.nio.file.Files
 class CodegenCacheSpec extends SparkSpec {
 
   test("a second cycle of catalog rows compiles at most 10% of the first") {
-    import scala.jdk.CollectionConverters._
-    val work = Files.createTempDirectory("graft_codegen_cycle").toFile
-    val (out, err) = (new File(work, "out"), new File(work, "err"))
-    // a fresh temp dir too: the streaming rows compile less when they
-    // resume from a checkpoint an earlier run left under java.io.tmpdir
-    val cmd = ForkedJvm.command("1g", "graft.CodegenCycle", sf001)
-    val p = new ProcessBuilder((cmd.head +: s"-Djava.io.tmpdir=$work" +: cmd.tail).asJava)
-      .directory(work).redirectOutput(out).redirectError(err).start()
-    val exit =
-      if (p.waitFor(300, java.util.concurrent.TimeUnit.SECONDS)) p.exitValue()
-      else { p.destroyForcibly().waitFor(); -1 }
-    assert(exit == 0, s"cycle exit $exit: ${Files.readString(err.toPath).takeRight(2000)}")
-    val Seq(first, second) = Files.readAllLines(out.toPath).asScala
+    val out = ForkedJvm.output("1g", "graft.CodegenCycle", sf001)
+    val Seq(first, second) = out.linesIterator
       .collectFirst { case l if l.startsWith("CYCLE ") => l.split(" ").toSeq.tail.map(_.toLong) }
-      .getOrElse(fail(s"no CYCLE line in ${Files.readString(out.toPath)}"))
-    org.apache.commons.io.FileUtils.deleteDirectory(work)
+      .getOrElse(fail(s"no CYCLE line in $out"))
     info(s"compiled: first cycle $first, second cycle $second")
     // the cycle must outgrow Spark's default 100-entry cache to gate it
     assert(first > 100, s"first cycle compiled only $first classes")

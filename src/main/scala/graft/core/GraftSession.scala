@@ -36,9 +36,25 @@ object GraftSession {
       "sun.security.action", "sun.util.calendar")
       .map(p => s"--add-opens java.base/$p=ALL-UNNAMED").mkString(" ")
 
-  /** Cluster-profile conf set for the 100 TB target (applied on top of a
-    * user-provided builder; local() uses the laptop-profile values).
-    * Rationale per key:
+  /** The engine's semantics confs, the same under every master: AQE
+    * (coalescing and skew-join splitting on), a UTC session time zone,
+    * graft's native expressions for SQL-string callers, the `events`
+    * table's TIMESTAMP(NANOS) parquet read as long (unreadable
+    * otherwise), and ANSI off (the reference pipelines assume lenient
+    * Hive-style null-on-error casts). [[local]] and [[clusterProfile]]
+    * both start from this map. */
+  val engineConfs: Map[String, String] = Map(
+    "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.ansi.enabled" -> "false")
+
+  /** Cluster-profile conf set for the 100 TB target: [[engineConfs]] plus
+    * scale confs (applied on top of a user-provided builder; local() sizes
+    * for the machine instead). Rationale per key:
     *   - shuffle.partitions 2000: ~50 GB/partition at 100 TB input after
     *     pruning; AQE coalesces small stages back down, so oversizing is
     *     cheap and undersizing spills.
@@ -51,27 +67,19 @@ object GraftSession {
     *   - skewJoin thresholds: split any post-filter partition >512 MB or
     *     >5× median — supersedes manual salting for most skew.
     */
-  val clusterProfile: Map[String, String] = Map(
+  val clusterProfile: Map[String, String] = engineConfs ++ Map(
     "spark.sql.shuffle.partitions" -> "2000",
     "spark.sql.files.maxPartitionBytes" -> "268435456",
-    "spark.sql.adaptive.enabled" -> "true",
-    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
     "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "134217728",
-    "spark.sql.adaptive.skewJoin.enabled" -> "true",
     "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "536870912",
     "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "5",
-    "spark.sql.autoBroadcastJoinThreshold" -> "52428800",
-    "spark.sql.session.timeZone" -> "UTC",
-    "spark.sql.extensions" -> "graft.plans.GraftExtensions",
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.sql.ansi.enabled" -> "false")
+    "spark.sql.autoBroadcastJoinThreshold" -> "52428800")
 
   /** Apply the cluster profile to a caller-supplied builder (the caller
     * sets master/deploy specifics; this pins the engine's semantics and
     * scale confs). */
   def cluster(builder: SparkSession.Builder): SparkSession = {
-    val b = clusterProfile.foldLeft(builder) { case (bb, (k, v)) => bb.config(k, v) }
-    val s = b.getOrCreate()
+    val s = builder.config(clusterProfile).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
@@ -108,6 +116,7 @@ object GraftSession {
     val builder0 = SparkSession.builder()
       .master(master)
       .appName(appName)
+      .config(engineConfs)
       .config("spark.sql.shuffle.partitions", cores.toString)
     val builder =
       if (!master.startsWith("local-cluster")) builder0
@@ -115,18 +124,8 @@ object GraftSession {
         .config("spark.executor.extraClassPath", executorClasses)
         .config("spark.executor.extraJavaOptions", executorJavaOptions)
     val s = builder
-      // graft's native expressions (minhash/simhash) for SQL-string callers
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.warehouse.dir",
         s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // testdata events.ts is TIMESTAMP(NANOS) parquet, unreadable otherwise
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // reference pipelines assume lenient Hive-style null-on-error casts
-      .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       // file:// without process spawns. With no Hadoop native library
       // loaded, the stock local filesystem sets every permission by running

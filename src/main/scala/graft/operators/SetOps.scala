@@ -1,22 +1,17 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, lit}
 
 /** Set-operation helpers (SURVEY.md §2.7). */
 object SetOps {
 
   /** n-way union by name (U3; ref: `from_raw_to_hive_with_glue.py:88`
-    * reduce-union after manual schema alignment). Missing columns are
-    * null-filled, like the reference's alignment shim. */
+    * reduce-union after manual schema alignment). Columns come in
+    * first-seen order and missing ones are null-filled, like the
+    * reference's alignment shim. */
   def unionByNameAll(dfs: Seq[DataFrame]): DataFrame = {
     require(dfs.nonEmpty, "unionByNameAll of zero frames")
-    val allCols = dfs.flatMap(_.columns).distinct
-    dfs.map { df =>
-      val aligned = allCols.map(c =>
-        if (df.columns.contains(c)) col(c) else lit(null).as(c))
-      df.select(aligned: _*)
-    }.reduce(_.unionByName(_))
+    dfs.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** Symmetric difference row counts — the reference's source-of-truth diff

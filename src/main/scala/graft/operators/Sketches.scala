@@ -92,73 +92,12 @@ object Sketches {
       .select(col(keyCol), col("cnt"))
   }
 
-  // ---- Theta sketches (Apache DataSketches, on the Spark classpath):
-  // mergeable distinct-count sketches with SET ALGEBRA — intersection
-  // and difference — which HLL (Spark's hll_sketch_agg / the a20 row)
-  // structurally cannot do. The audience-overlap question ("distinct
-  // users active in BOTH ranges") needs exactly this: per-group
-  // sketches are built once and stored; any two stored unions
-  // intersect in O(k). Below the sketch's nominal k entries the
-  // estimate is EXACT (the sketch holds every hash), so small-scale
-  // results are deterministic while the tolerance contract stays
-  // honest at 100 TB.
-
-  import org.apache.datasketches.memory.Memory
-  import org.apache.datasketches.theta.{SetOperation, Sketch, UpdateSketch, Sketches => DsSketches}
-
-  private def wrapTheta(b: Array[Byte]): Sketch =
-    DsSketches.wrapSketch(Memory.wrap(b))
-
-  /** Union of two compact theta sketch byte images (empty = identity). */
-  def thetaUnionBytes(x: Array[Byte], y: Array[Byte]): Array[Byte] =
-    if (x == null || x.isEmpty) { if (y == null) Array.emptyByteArray else y }
-    else if (y == null || y.isEmpty) x
-    else {
-      val u = SetOperation.builder().buildUnion()
-      u.union(wrapTheta(x)); u.union(wrapTheta(y))
-      u.getResult.toByteArray
-    }
-
-  /** Distinct-count estimate of a compact sketch (0 for empty). */
-  def thetaEstimate(b: Array[Byte]): Double =
-    if (b == null || b.isEmpty) 0.0 else wrapTheta(b).getEstimate
-
-  /** Estimate of |A ∩ B| from two compact sketches (0 for empty). */
-  def thetaIntersectEstimate(x: Array[Byte], y: Array[Byte]): Double =
-    if (x == null || x.isEmpty || y == null || y.isEmpty) 0.0
-    else {
-      val i = SetOperation.builder().buildIntersection()
-      i.intersect(wrapTheta(x)); i.intersect(wrapTheta(y))
-      i.getResult.getEstimate
-    }
-
-  /** Typed union Aggregator over compact sketch bytes. Only ever folds
-    * the SMALL frames (≤ partitions sketch rows per group, or one row
-    * per group at merge time) — the raw-row pass is [[thetaSketches]]'
-    * mapPartitions, never this. */
-  private object ThetaUnionAgg extends org.apache.spark.sql.expressions.Aggregator[Array[Byte], Array[Byte], Array[Byte]] {
-    def zero: Array[Byte] = Array.emptyByteArray
-    def reduce(b: Array[Byte], a: Array[Byte]): Array[Byte] = thetaUnionBytes(b, a)
-    def merge(x: Array[Byte], y: Array[Byte]): Array[Byte] = thetaUnionBytes(x, y)
-    def finish(r: Array[Byte]): Array[Byte] = r
-    def bufferEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
-      org.apache.spark.sql.Encoders.BINARY
-    def outputEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
-      org.apache.spark.sql.Encoders.BINARY
-  }
-
-  private lazy val thetaUnionUdaf =
-    udaf(ThetaUnionAgg, org.apache.spark.sql.Encoders.BINARY)
-
-  /** Column aggregate: theta-union of a binary compact-sketch column. */
-  def thetaUnion(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    thetaUnionUdaf(c)
-
   // ---- Count-min sketches (spark-sketch, the same serialized form the
   // SQL `count_min_sketch` aggregate emits): mergeable FREQUENCY
   // sketches — the per-key count complement of HLL (distinct) / KLL
-  // (quantiles) / theta (set algebra). Merging is element-wise table
-  // addition, so it is exact and order-insensitive; the estimate's
+  // (quantiles) / theta (set algebra; Spark's `theta_*` built-ins).
+  // Merging is element-wise table addition, so it is exact and
+  // order-insensitive; the estimate's
   // guarantee is one-sided (never under the true count, over by at most
   // ε·N with the sketch's confidence — deterministic once the seed is
   // fixed).
@@ -177,9 +116,9 @@ object Sketches {
     if (b == null || b.isEmpty || key == null) 0L
     else CountMinSketch.readFrom(b).estimateCount(key)
 
-  /** Typed merge Aggregator over serialized count-min sketches. Like
-    * [[ThetaUnionAgg]], only ever folds SMALL sketch frames (one row
-    * per stored group), never raw rows. */
+  /** Typed merge Aggregator over serialized count-min sketches. Only
+    * ever folds SMALL sketch frames (one row per stored group), never
+    * raw rows. */
   private object CmsMergeAgg extends org.apache.spark.sql.expressions.Aggregator[Array[Byte], Array[Byte], Array[Byte]] {
     def zero: Array[Byte] = Array.emptyByteArray
     def reduce(b: Array[Byte], a: Array[Byte]): Array[Byte] = cmsMergeBytes(b, a)
@@ -203,33 +142,4 @@ object Sketches {
     * against a (small) key frame. */
   lazy val cmsEstimateUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf((b: Array[Byte], key: String) => cmsEstimateString(b, key))
-
-  /** Per-group theta sketches of `keyCol`'s distinct values: one
-    * bounded-memory sketch per (group, input partition) via
-    * mapPartitions (imperative per-partition state, like [[mgSummary]])
-    * , then a keyed fold of the ≤ partitions-per-group sketch rows.
-    * Shuffle volume is sketches (≤ 8·k bytes each), never raw rows.
-    * NULL groups and NULL keys are ignored (a NULL is not a key).
-    * Output: (groupCol STRING, sk BINARY compact sketch). */
-  def thetaSketches(df: DataFrame, groupCol: String, keyCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val pairs: Dataset[(String, String)] =
-      df.select(col(groupCol).cast("string"), col(keyCol).cast("string"))
-        .as[(String, String)]
-    val partial = pairs.mapPartitions { it =>
-      val sk = new java.util.HashMap[String, UpdateSketch]()
-      it.foreach { case (g, k) =>
-        if (g != null && k != null) {
-          var s = sk.get(g)
-          if (s == null) { s = UpdateSketch.builder().build(); sk.put(g, s) }
-          s.update(k)
-        }
-      }
-      val out = Seq.newBuilder[(String, Array[Byte])]
-      sk.forEach((g, s) => out += ((g, s.compact().toByteArray)))
-      out.result().iterator
-    }.toDF(groupCol, "sk")
-    partial.groupBy(col(groupCol)).agg(thetaUnion(col("sk")).as("sk"))
-  }
 }

@@ -7,12 +7,15 @@ import org.apache.spark.sql.functions._
 /** Similarity search over embedding columns (`array<float>`) — the
   * training-data-pipeline ANN operators (builder brief).
   *
-  * All math is double-precision catalyst expressions (`zip_with` +
-  * `aggregate` sum left-to-right), no UDFs — bit-deterministic and inside
-  * whole-stage codegen. The scale design: the query side is broadcast
-  * (it is the small side by construction), the corpus is never shuffled
-  * whole — top-k reduces per input partition first, then across the
-  * per-partition winners.
+  * All math is double precision with sequential left-to-right sums, no
+  * UDFs, so results are bit-deterministic. [[cosine]] and
+  * [[srpBandKeys]] are native expressions with their own codegen. The
+  * `zip_with`/`aggregate`/`transform` forms ([[dotFold]], [[sq8]],
+  * [[sq8Cosine]], [[asDouble]]) are Spark higher-order functions, which
+  * are `CodegenFallback`: they run interpreted, one lambda call per
+  * element. The scale design: the query side is broadcast (it is the
+  * small side by construction), and the corpus is never shuffled whole,
+  * because top-k is Spark's `WindowGroupLimit` ([[topKPerQuery]]).
   */
 object VectorSim {
 
@@ -35,29 +38,29 @@ object VectorSim {
       org.apache.spark.sql.graft.GraftSql.expression(a),
       org.apache.spark.sql.graft.GraftSql.expression(b)))
 
-  /** Exact top-k per query without funneling a query's whole candidate set
-    * into one task: rank within (query, input-partition) first — a shuffle
-    * spread over queries × partitions — keep k, then rank the ≤ k·P
-    * survivors per query. Identical output to a single global window
-    * (per-partition rank is a lower bound on global rank); scales to a
-    * corpus of any size. */
+  /** Exact top-k per query: `row_number` over (score desc, id) per
+    * query, kept where ≤ k. That order is strict within a query, so the
+    * output is deterministic. A NULL or NaN score (a null or zero vector
+    * has no direction) is nobody's neighbour: it ranks last and is
+    * dropped after ranking, because a filter before the window would
+    * evaluate the score expression again. Spark's `InferWindowGroupLimit`
+    * plans a partial `WindowGroupLimit` before the query-keyed exchange,
+    * so each input partition ships at most k rows per query and no task
+    * receives a query's whole candidate set. That holds while k is at
+    * most `spark.sql.optimizer.windowGroupLimitThreshold` (default 1000);
+    * above it the candidates shuffle whole. */
   def topKPerQuery(scored: DataFrame, queryCol: String, scoreCol: String,
                    idCol: String, k: Int): DataFrame = {
-    val local = Window.partitionBy(col(queryCol), spark_partition_id())
-      .orderBy(col(scoreCol).desc, col(idCol))
-    val global = Window.partitionBy(col(queryCol))
-      .orderBy(col(scoreCol).desc, col(idCol))
+    val score = col(scoreCol)
     scored
-      .withColumn("__local_rn", row_number().over(local))
-      .filter(col("__local_rn") <= k)
-      .withColumn("rnk", row_number().over(global))
-      .filter(col("rnk") <= k)
-      .drop("__local_rn")
+      .withColumn("rnk", row_number().over(Window.partitionBy(col(queryCol))
+        .orderBy(nanvl(score, lit(null)).desc_nulls_last, col(idCol))))
+      .filter(col("rnk") <= k && score.isNotNull && !isnan(score))
   }
 
   /** Brute-force cosine top-k: broadcast the (small) query set against the
     * corpus — a BroadcastNestedLoopJoin, zero corpus shuffle — then
-    * two-phase top-k. Output: (queryIdOut, rnk, nn id cols…, cos). */
+    * [[topKPerQuery]]. Output: (q_id, rnk, nn_id, cos). */
   def bruteForceCosineTopK(corpus: DataFrame, queries: DataFrame,
                            idCol: String, vecCol: String, k: Int): DataFrame = {
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("__qv"))
@@ -217,12 +220,9 @@ object VectorSim {
       .select(col("q_id"), col("nn_id"))
     val qv = queries.select(col(idCol).as("q_id"), col(vecCol).as("__qv"))
     val cv = corpus.select(col(idCol).as("nn_id"), col(vecCol).as("__cv"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("nn_id"))
-    pool.join(cv, "nn_id").join(broadcast(qv), "q_id")
+    val reranked = pool.join(cv, "nn_id").join(broadcast(qv), "q_id")
       .withColumn("cos", cosine(col("__qv"), col("__cv")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    topKPerQuery(reranked, "q_id", "cos", "nn_id", k)
       .select(col("q_id"), col("rnk"), col("nn_id"), col("cos"))
   }
 

@@ -45,41 +45,41 @@ object DataPrepQueries {
 
     // Audience overlap via persisted theta sketches — the set-ALGEBRA
     // sketch HLL can't be: per-day sketches of user_id are built once
-    // (one bounded-memory sketch per (day, partition), shuffled as
-    // sketches not rows) and STORED; the two half-month audiences are
-    // each a union of stored day sketches and their INTERSECTION
-    // estimates "users active in both halves" in O(k) — no raw rescan,
-    // no distinct-distinct join at query time. Below k entries the
-    // sketch is exact, so this row is deterministic at test scale while
-    // the tolerance contract (±5% + 5) is what holds at 100 TB. The
-    // exact overlap is computed alongside purely as the proof's
-    // reference (two distinct-project semi-sides, one keyed join).
+    // (Spark's theta_sketch_agg is a partial aggregate, so sketches
+    // shuffle, not rows) and STORED; the two half-month audiences are
+    // each a theta_union_agg of stored day sketches and their
+    // theta_intersection estimates "users active in both halves" in
+    // O(k) — no raw rescan, no distinct-distinct join at query time.
+    // NULL days and NULL users are dropped first (a NULL is not a key).
+    // Below the nominal 4,096 entries the sketch is exact, so this row
+    // is deterministic at test scale while the tolerance contract
+    // (±5% + 5) is what holds at 100 TB. The exact overlap is computed
+    // alongside purely as the proof's reference (two distinct-project
+    // semi-sides, one keyed join).
     "e_theta_overlap" -> { (s, dir) =>
-      import graft.operators.Sketches
       val path = scratchDir("prep", dir, "theta_daily")
       rmrf(path)
       val ev = Tables.events(s, dir)
         .select(to_date(col("ts")).cast("string").as("day"), col("user_id"))
-      Sketches.thetaSketches(ev, "day", "user_id")
+      ev.filter(col("day").isNotNull && col("user_id").isNotNull)
+        .groupBy(col("day")).agg(theta_sketch_agg(col("user_id")).as("sk"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
       val daily = s.read.parquet(path)
       val ua = daily.filter(col("day") < "2024-01-16")
-        .agg(Sketches.thetaUnion(col("sk")).as("ska"),
+        .agg(theta_union_agg(col("sk")).as("ska"),
           count(lit(1)).as("n_days_a"))
       val ub = daily.filter(col("day") >= "2024-01-16")
-        .agg(Sketches.thetaUnion(col("sk")).as("skb"),
+        .agg(theta_union_agg(col("sk")).as("skb"),
           count(lit(1)).as("n_days_b"))
       val exact = ev.filter(col("day") < "2024-01-16")
         .select(col("user_id")).distinct()
         .join(ev.filter(col("day") >= "2024-01-16")
           .select(col("user_id")).distinct(), "user_id")
         .agg(count(lit(1)).as("exact_overlap"))
-      val est = udf((a: Array[Byte], b: Array[Byte]) =>
-        Sketches.thetaIntersectEstimate(a, b))
+      val est = theta_sketch_estimate(theta_intersection(col("ska"), col("skb")))
       ua.crossJoin(ub).crossJoin(broadcast(exact))
         .select(col("n_days_a"), col("n_days_b"), col("exact_overlap"),
-          (abs(est(col("ska"), col("skb")) -
-              col("exact_overlap").cast("double"))
+          (abs(est - col("exact_overlap").cast("double"))
             <= col("exact_overlap").cast("double") * 0.05 + lit(5.0))
             .as("theta_ok"))
     },

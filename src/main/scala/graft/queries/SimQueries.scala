@@ -54,7 +54,7 @@ object SimQueries {
 
   val queries: Map[String, Q] = Map(
     // Brute-force exact cosine top-10 for 5 query vectors over the whole
-    // corpus (broadcast queries, zero corpus shuffle, two-phase top-k).
+    // corpus (broadcast queries, zero corpus shuffle, WindowGroupLimit top-k).
     "s_cosine_topk" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       val queries = emb.filter(col("vec_id") < 5)

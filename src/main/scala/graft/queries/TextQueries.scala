@@ -566,7 +566,7 @@ object TextQueries {
     // testdata) by reciprocal-rank fusion, 1/(60+rank) per arm — the
     // standard RAG first-stage. Ranks are exact integers (BM25 scores
     // are integer micro; the cosine rank comes from the audited
-    // two-phase top-k), so the fused score is two IEEE divisions and
+    // top-k), so the fused score is two IEEE divisions and
     // one add in a fixed order — bit-stable. Both arms are bounded
     // (postings-proportional / broadcast-query), and the fusion joins
     // two ≤50-row frames.

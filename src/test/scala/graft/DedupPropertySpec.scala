@@ -536,6 +536,120 @@ class DedupPropertySpec extends SparkSpec {
       s"recall curve degenerate: $recalls")
   }
 
+  /** The top-k family on degenerate corpora, each operator against a
+    * driver-side brute reference: fewer than k candidates, tied scores
+    * (the id decides), a zero vector (NaN cosine), a null vector and an
+    * empty query set. A vector without a direction (zero or null) has
+    * no defined cosine, so it is nobody's neighbour and has none; the
+    * multi-probe probe choice ranks cells as Spark orders doubles
+    * (NaN above every value, NULL last, then the cell). */
+  test("top-k degenerate inputs == driver-side brute reference") {
+    import org.apache.spark.sql.{DataFrame, Row, types => T}
+    import graft.operators.VectorSim
+    import Ordering.Double.TotalOrdering
+    type Vec = (Long, Int, Seq[Float]) // (vec_id, label, embedding or null)
+    val schema = T.StructType(Seq(
+      T.StructField("vec_id", T.LongType),
+      T.StructField("label", T.IntegerType),
+      T.StructField("embedding", T.ArrayType(T.FloatType))))
+    def frame(vs: Seq[Vec]): DataFrame = spark.createDataFrame(
+      spark.sparkContext.parallelize(vs.map { case (i, c, v) => Row(i, c, v) }, 2), schema)
+    val rnd = new scala.util.Random(73)
+    def vec(): Seq[Float] = Seq.fill(4)((rnd.nextDouble() * 2 - 1).toFloat)
+    def rand(ids: Range): Seq[Vec] = ids.map(i => (i.toLong, i % 3, vec()))
+    val same = vec()
+    val zero = Seq.fill(4)(0.0f)
+    // NativeEval.cosine's sequential fold, so scores are bit-identical
+    def cosine(a: Seq[Float], b: Seq[Float]): Option[Double] =
+      if (a == null || b == null) None
+      else {
+        var dot = 0.0; var na = 0.0; var nb = 0.0
+        a.zip(b).foreach { case (x, y) =>
+          dot += x.toDouble * y; na += x.toDouble * x; nb += y.toDouble * y }
+        Some(dot / (math.sqrt(na) * math.sqrt(nb)))
+      }
+    def defined(s: Option[Double]): Option[Double] = s.filterNot(_.isNaN)
+    type Out = (Long, Int, Long, Long) // (q_id, rnk, nn_id, cos bits)
+    // score desc (signed zeros equal), then id
+    def rank(cands: Seq[(Long, Double)]): Seq[(Long, Double)] =
+      cands.sortBy { case (id, s) => (0.0 - s, id) }
+    def topK(qs: Seq[Vec], k: Int)(cands: Vec => Seq[(Long, Double)]): Seq[Out] =
+      qs.flatMap { q =>
+        rank(cands(q)).take(k).zipWithIndex.map { case ((id, s), i) =>
+          (q._1, i + 1, id, java.lang.Double.doubleToLongBits(s)) }
+      }.sorted
+    def scored(q: Vec, cs: Seq[Vec]): Seq[(Long, Double)] =
+      cs.filter(_._1 != q._1).flatMap(c => defined(cosine(q._3, c._3)).map(c._1 -> _))
+    def brute(cs: Seq[Vec], qs: Seq[Vec], k: Int): Seq[Out] =
+      topK(qs, k)(q => scored(q, cs))
+    def ivf(cs: Seq[Vec], qs: Seq[Vec], k: Int): Seq[Out] =
+      topK(qs, k)(q => scored(q, cs.filter(_._2 == q._2)))
+    def multiProbe(cs: Seq[Vec], qs: Seq[Vec], k: Int, nprobe: Int): Seq[Out] = {
+      val reps = cs.groupBy(_._2).toSeq.map { case (cell, m) => cell -> m.minBy(_._1)._3 }
+      def sparkDesc(s: Option[Double]): (Int, Double) = s match {
+        case None => (2, 0.0)
+        case Some(x) if x.isNaN => (0, 0.0)
+        case Some(x) => (1, 0.0 - x)
+      }
+      topK(qs, k) { q =>
+        val probed = reps.sortBy { case (cell, r) => (sparkDesc(cosine(q._3, r)), cell) }
+          .take(nprobe).map(_._1).toSet
+        scored(q, cs.filter(c => probed(c._2)))
+      }
+    }
+    def sq8(cs: Seq[Vec], qs: Seq[Vec], k: Int, oversample: Int): Seq[Out] = {
+      def hasDirection(v: Vec) = v._3 != null && v._3.exists(_ != 0.0f)
+      def codes(v: Seq[Float]): Seq[Long] = {
+        val mx = v.map(x => math.abs(x.toDouble)).max
+        v.map(x => math.floor(x.toDouble * 127.0 / mx + 0.5).toLong.toByte.toLong)
+      }
+      def dot(a: Seq[Long], b: Seq[Long]): Long = a.zip(b).map { case (x, y) => x * y }.sum
+      def qcos(a: Seq[Long], b: Seq[Long]): Double =
+        dot(a, b).toDouble / (math.sqrt(dot(a, a).toDouble) * math.sqrt(dot(b, b).toDouble))
+      val idx = cs.filter(hasDirection)
+      topK(qs.filter(hasDirection), k) { q =>
+        val pool = rank(idx.filter(_._1 != q._1).map(c => c._1 -> qcos(codes(q._3), codes(c._3))))
+          .take(k * oversample).map(_._1).toSet
+        scored(q, cs.filter(c => pool(c._1)))
+      }
+    }
+    def got(df: DataFrame): Seq[Out] =
+      df.select("q_id", "rnk", "nn_id", "cos").collect().map { r =>
+        assert(!r.anyNull, s"output row with a null: $r")
+        (r.getLong(0), r.getInt(1), r.getLong(2), java.lang.Double.doubleToLongBits(r.getDouble(3)))
+      }.toSeq.sorted
+    val few = rand(0 until 3)
+    val tied = (0L until 6L).map(i => (i, (i % 2).toInt, same)) ++ rand(6 until 10)
+    val withZero = Seq((0L, 0, zero)) ++ rand(1 until 8) :+ ((8L, 2, zero))
+    val withNull = rand(0 until 8).map(v => if (v._1 == 1L) (1L, 1, null) else v) :+
+      ((8L, 1, null: Seq[Float]))
+    // (corpus, queries, k)
+    val cases: Seq[(String, Seq[Vec], Seq[Vec], Int)] = Seq(
+      ("fewer than k candidates", few, Seq(few.head, (50L, 0, vec())), 5),
+      ("tied scores", tied, Seq(tied.head, (60L, 1, same), (61L, 2, vec())), 3),
+      ("zero vector", withZero, Seq(withZero(1), (70L, 0, zero), withZero(8)), 3),
+      ("null vector", withNull, Seq(withNull(2), (80L, 1, null), withNull(8)), 3),
+      ("empty query set", rand(0 until 10), Seq.empty, 3))
+    for ((name, cs, qs, k) <- cases) {
+      val (c, q) = (frame(cs), frame(qs))
+      def check(op: String, df: DataFrame, want: Seq[Out]): Unit = {
+        val g = got(df)
+        assert(g == want, s"$name, $op:\n got  $g\n want $want")
+      }
+      check("bruteForceCosineTopK",
+        VectorSim.bruteForceCosineTopK(c, q, "vec_id", "embedding", k), brute(cs, qs, k))
+      check("ivfCosineTopK",
+        VectorSim.ivfCosineTopK(c, q, "vec_id", "embedding", "label", k), ivf(cs, qs, k))
+      for (os <- Seq(1, 3)) check(s"sq8CosineTopK oversample=$os",
+        VectorSim.sq8CosineTopK(c, q, "vec_id", "embedding", k, os), sq8(cs, qs, k, os))
+      for (np <- Seq(1, 3)) check(s"ivfCosineTopKMultiProbe nprobe=$np",
+        VectorSim.ivfCosineTopKMultiProbe(c, q, "vec_id", "embedding", "label", k, np),
+        multiProbe(cs, qs, k, np))
+      if (name == "tied scores") // the id decides among the five equal copies
+        assert(brute(cs, qs, k).filter(_._1 == 60L).map(_._3) == Seq(0L, 1L, 2L))
+    }
+  }
+
   test("globalRowNumber / scalableNtile == single-task window equivalents") {
     import spark.implicits._
     val rnd = new scala.util.Random(5)

@@ -610,36 +610,40 @@ class OperatorsSpec extends SparkSpec {
     assert(hh == Set(("x", 3L))) // 3·2 > 4 (n excludes the NULL); y: 1·2 < 4
   }
 
-  test("thetaSketches: exact below k, partition-invariant, set algebra") {
-    import graft.operators.Sketches
-    import spark.implicits._
-    // two groups sharing 100 of 300/200 members; NULL keys and NULL
-    // groups ignored
+  test("theta sketch built-ins: exact below k, partition-invariant, set algebra") {
+    // e_theta_overlap's shape: per-group theta_sketch_agg with NULL groups
+    // dropped, theta_union_agg across groups, theta_intersection of two.
+    // Groups a and b share 100 of 300/200 members; a NULL key in a, a
+    // NULL group holding u0 and a group c of NULL keys only
     val rows =
       (0 until 300).map(i => (Option("a"), Option(s"u$i"))) ++
       (200 until 400).map(i => (Option("b"), Option(s"u$i"))) ++
-      Seq((Option("a"), Option.empty[String]), (Option.empty[String], Option("u0")))
-    def sketch(parts: Int): Map[String, Array[Byte]] =
-      Sketches.thetaSketches(
-          rows.toDF("g", "k").repartition(parts), "g", "k")
-        .collect().map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
-    val sk = sketch(7)
-    // below nominal k the sketch is exact
-    assert(Sketches.thetaEstimate(sk("a")) == 300.0)
-    assert(Sketches.thetaEstimate(sk("b")) == 200.0)
-    // intersection and union are exact too at this size
-    assert(Sketches.thetaIntersectEstimate(sk("a"), sk("b")) == 100.0)
-    assert(Sketches.thetaEstimate(
-      Sketches.thetaUnionBytes(sk("a"), sk("b"))) == 400.0)
-    // the stored bytes are partition-count-invariant in ESTIMATE (the
-    // fold order differs; the retained hash set does not)
-    val sk1 = sketch(1)
-    assert(Sketches.thetaEstimate(sk1("a")) == 300.0)
-    assert(Sketches.thetaIntersectEstimate(sk1("a"), sk1("b")) == 100.0)
-    // empty identity
-    assert(Sketches.thetaEstimate(Array.emptyByteArray) == 0.0)
-    assert(Sketches.thetaUnionBytes(Array.emptyByteArray, sk("a"))
-      .sameElements(sk("a")))
+      Seq((Option("a"), Option.empty[String]), (Option.empty[String], Option("u0")),
+        (Option("c"), Option.empty[String]))
+    def estimates(parts: Int): Map[String, Long] = {
+      val sk = rows.toDF("g", "k").repartition(parts)
+        .filter(col("g").isNotNull)
+        .groupBy(col("g")).agg(theta_sketch_agg(col("k")).as("sk"))
+      def one(g: String) = sk.filter(col("g") === g).select(col("sk").as(g))
+      val per = sk.select(col("g"), theta_sketch_estimate(col("sk")))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val algebra = one("a").crossJoin(one("b")).select(
+          theta_sketch_estimate(theta_intersection(col("a"), col("b"))))
+        .crossJoin(sk.filter(col("g") =!= "c")
+          .agg(theta_sketch_estimate(theta_union_agg(col("sk")))))
+        .crossJoin(sk.filter(col("g") =!= "b")
+          .agg(theta_sketch_estimate(theta_union_agg(col("sk")))))
+        .head()
+      per ++ Map("a&b" -> algebra.getLong(0), "a|b" -> algebra.getLong(1),
+        "a|c" -> algebra.getLong(2))
+    }
+    // below nominal k the sketch is exact; NULL keys and the NULL group
+    // add nothing, and a group of NULL keys is the empty (identity) sketch
+    val want = Map("a" -> 300L, "b" -> 200L, "c" -> 0L,
+      "a&b" -> 100L, "a|b" -> 400L, "a|c" -> 300L)
+    assert(estimates(7) == want)
+    // the same estimates however the input is partitioned
+    assert(estimates(1) == want)
   }
 
   test("cmsMerge: split-and-merge == single-pass sketch; one-sided bound") {

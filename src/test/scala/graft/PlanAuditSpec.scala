@@ -1,5 +1,11 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
+
 /** Physical-plan audits: the scale properties the engine promises are
   * asserted on the actual executedPlan strings, so a regression that
   * un-broadcasts a dim, drops a pushed filter, or reintroduces an
@@ -8,6 +14,16 @@ class PlanAuditSpec extends SparkSpec {
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf001).queryExecution.executedPlan.toString
+
+  /** A catalog row's physical plan as AQE first plans it (nothing run). */
+  private def physical(name: String): SparkPlan =
+    SparkEntry.queries(name)(spark, sf001).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+
+  private def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] =
+    p.collect { case e: ShuffleExchangeExec => e }
 
   test("a1: filters push into the parquet scan and unused columns are pruned") {
     val p = plan("a1_pricing_summary")
@@ -68,10 +84,34 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("s_cosine_topk: query side broadcast, corpus not shuffled by a join") {
-    val p = plan("s_cosine_topk")
+    val qp = physical("s_cosine_topk")
+    val p = qp.toString
     assert(p.contains("BroadcastNestedLoopJoin"),
       "query vectors should broadcast against the corpus")
     assert(!p.contains("SortMergeJoin"), "corpus must not shuffle for the join")
+    // two shuffles: the top-k's exchange on the query id and the
+    // output orderBy's range exchange
+    assert(shuffles(qp).size == 2, s"expected two shuffle exchanges, plan:\n$p")
+  }
+
+  test("top-k rows: a partial WindowGroupLimit below the query-keyed exchange") {
+    // the top-k ranks per query only; Spark's InferWindowGroupLimit keeps
+    // k rows per query and input partition before the exchange
+    for (name <- Seq("s_cosine_topk", "s_cosine_ann_ivf", "s_hard_negatives",
+        "s_ann_index", "s_ann_sq8", "s_cosine_ann_probes", "t_hybrid_rrf")) {
+      val p = physical(name)
+      assert(!p.toString.toUpperCase.contains("SPARK_PARTITION_ID"),
+        s"$name ranks within input partitions, plan:\n$p")
+      val byQuery = shuffles(p).filter(_.outputPartitioning match {
+        case h: HashPartitioning => h.references.toSeq.map(_.name) == Seq("q_id")
+        case _ => false
+      })
+      assert(byQuery.nonEmpty, s"$name: no exchange on q_id, plan:\n$p")
+      byQuery.foreach(e => assert(e.child match {
+          case w: WindowGroupLimitExec => w.mode == Partial
+          case _ => false
+        }, s"$name: exchange without a partial WindowGroupLimit below it:\n$e"))
+    }
   }
 
   test("s_cosine_ann_probes: probe set broadcast, corpus joined on the cell key") {

@@ -157,31 +157,6 @@ object GraftSession {
     // [[Materialize]] and SCALING.md's reliable-mode gate.
     sys.env.get("SPARK_GRAFT_MATERIALIZE_MODE")
       .foreach(m => s.conf.set(Materialize.ModeKey, m))
-    // Config-sensitivity drill hook: arbitrary conf overrides
-    // ("k=v;k2=v2") applied last, so the full board can be proven
-    // hash-identical under e.g. AQE off or the reference's 2560
-    // shuffle partitions (no query may silently depend on a conf).
-    // Scope: runtime-modifiable SQL confs only (this runs AFTER session
-    // creation — static confs like executor memory cannot change here),
-    // and ';' is the entry separator so values may not contain it.
-    sys.env.get("SPARK_GRAFT_CONF").foreach { spec =>
-      spec.split(';').map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2) match {
-          case a if a.length == 2 => a
-          case _ => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_CONF entry '$kv' is not of the form key=value")
-        }
-        require(k.trim.nonEmpty,
-          s"SPARK_GRAFT_CONF entry '$kv' has an empty key")
-        try s.conf.set(k.trim, v.trim)
-        catch {
-          case e: Throwable => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_CONF could not set '${k.trim}' " +
-              s"(static/non-runtime confs cannot be set post-session): " +
-              e.getMessage, e)
-        }
-      }
-    }
     s
   }
 }

@@ -1089,29 +1089,26 @@ object TextDedup {
     * pair with Jaccard ≥ t must share a shingle inside both prefixes —
     * and bucket-join on those prefix shingles only.
     *
-    * WHEN IT WINS — measured, r15 (SCALING.md "blocked vs prefix"): the
-    * decisive variable is the THRESHOLD, because the prefix holds
-    * (1−t)·|A|+1 shingles. At t=0.85 on a natural-shape corpus (Zipf
-    * tokens with Heaps-law hapaxes, lognormal lengths) the prefix is
-    * genuinely rare shingles and candidates run 4× UNDER the
-    * length-blocked join's; at the catalog's t=0.6 the prefix is 40% of
-    * every doc, mid-frequency shingles dominate its buckets, and it
-    * generates 2× MORE candidates than blocking even on natural text
-    * (15–30× more on the token-poor synthetic corpus). Overlapping
-    * char n-grams sharpen this: adjacent grams are correlated, so
-    * "rare content" buys fewer independent rare shingles than word
-    * tokens would. Routing rule: length-blocked for t ≲ 0.7 or
-    * token-poor corpora; prefix for high-threshold dedup on
-    * hapax-rich text.
+    * THE BAND-FREE PATH: it returns ALL pairs at or above t, whatever
+    * their lengths (the d_ngram_jaccard_hi semantics). For the banded
+    * contract (pairs within `blockWidth/2` chars) call
+    * [[ngramJaccardPairs]]: it is exact at every t, and at t=0.9 it
+    * beats this path cut back to the band even on the natural-shape
+    * corpus, whose rare-shingle prefixes are prefix filtering's best
+    * case. Warm minimum of 3 runs, local[4], same pair set on both:
+    *   - sf0.1, blockWidth 20: 0.93 s blocked, 2.61 s prefix (254 pairs);
+    *   - natural-shape ×10 (50,000 docs), blockWidth 20: 6.9 s, 54.4 s
+    *     (19,135 pairs);
+    *   - the same board, blockWidth 100: 14.6 s, 53.0 s (20,484 pairs).
     *
     * All stages are linear scans + two hash shuffles (by shingle for DF,
     * by doc for the prefix window); no N² anywhere. The verify reuses
     * [[verifyJaccard]] with the same broadcast-budget decision as the
     * blocked path.
     *
-    * PLAN PARITY WITH THE BLOCKED PATH (r16 — this is now the
-    * documented right route for t ≥ 0.85 on hapax-rich text, so its
-    * plan shape must hold where the blocked path's does):
+    * PLAN PARITY WITH THE BLOCKED PATH (this is the engine's only
+    * band-free path, so its plan shape must hold where the blocked
+    * path's does):
     *   - `broadcastVerify` override, same contract as
     *     [[ngramJaccardPairs]]: a caller holding a memoized corpus
     *     estimate (the catalog's [[estimateNgramStats]]) passes it and
@@ -1157,57 +1154,6 @@ object TextDedup {
     c.expand(verifyJaccard(cand, sh, idCol, threshold, broadcastShingles = bcast))
   }
 
-  /** The measured blocked-vs-prefix routing threshold (SCALING.md
-    * "blocked vs prefix", re-measured r16 under the positional filter):
-    * the prefix keeps (1−t)·|A|+1 shingles per doc, so at t ≥ ~0.8 on
-    * hapax-rich text its candidates run 4-15× UNDER length-blocking,
-    * while at t ≲ 0.7 the prefix covers so much of every doc that it
-    * emits 2× (natural text) to 15-30× (token-poor corpora) MORE. */
-  val PrefixRouteThreshold = 0.8
-
-  /** Exact char-n-gram Jaccard dedup that ROUTES between the
-    * length-blocked plan ([[ngramJaccardPairs]]) and the PPJoin
-    * prefix-filtered plan ([[ngramJaccardPairsPrefix]]) per the measured
-    * rule — [[PrefixRouteThreshold]]: prefix at threshold ≥ 0.8,
-    * length-blocked below. The threshold decides; corpus shape is
-    * second-order (r15/r16 measurements, both corpus families).
-    *
-    * The contract is the BANDED semantics of [[ngramJaccardPairs]] —
-    * pairs within `blockWidth/2` chars of each other — so the two
-    * branches are output-IDENTICAL and a caller can hold the semantics
-    * fixed while the threshold (hence the plan) varies: the blocked
-    * branch enforces the band by construction; the prefix branch
-    * post-filters its band-free pair set on the same length predicate
-    * (a join of the output-sized pair frame back to the skinny length
-    * projection — linear, no new shuffle class). DedupPropertySpec
-    * proves both branches equal brute force through this entry point.
-    * For band-FREE high-threshold dedup (ALL pairs at or above t — the
-    * d_ngram_jaccard_hi semantics) call [[ngramJaccardPairsPrefix]]
-    * directly.
-    *
-    * Plan options pass through to the routed branch: `shards` /
-    * `streamParallelism` are blocked-path knobs (the prefix path
-    * has no fat staging to shard — its verify broadcasts under the
-    * same budget), `broadcastVerify` feeds both. */
-  def ngramJaccardAuto(docs: DataFrame, idCol: String, textCol: String,
-                       lenCol: Column, n: Int = 4, threshold: Double = 0.6,
-                       blockWidth: Int = 100, shards: Int = 1,
-                       streamParallelism: Int = 1,
-                       broadcastVerify: Option[Boolean] = None): DataFrame =
-    if (threshold < PrefixRouteThreshold)
-      ngramJaccardPairs(docs, idCol, textCol, lenCol, n, threshold,
-        blockWidth, shards, streamParallelism, broadcastVerify)
-    else {
-      val lens = docs.filter(length(col(textCol)) >= n)
-        .select(col(idCol), lenCol.as("__len"))
-      ngramJaccardPairsPrefix(docs, idCol, textCol, n, threshold,
-          broadcastVerify)
-        .join(lens.select(col(idCol).as("a"), col("__len").as("__la")), "a")
-        .join(lens.select(col(idCol).as("b"), col("__len").as("__lb")), "b")
-        .filter(abs(col("__la") - col("__lb")) <= blockWidth / 2)
-        .select(col("a"), col("b"), col("jaccard"))
-    }
-
   /** The PPJoin candidate stage of [[ngramJaccardPairsPrefix]] (over
     * post-collapse reps): distinct (a, b) pairs. `sh` is (idCol, __sh)
     * with __sh a non-empty hashed-shingle array. The distinct IS
@@ -1239,8 +1185,7 @@ object TextDedup {
     *     exactly-at-threshold pair's first-common-token emission).
     *     Measured effect (token-poor sf0.1 corpus, t=0.85,
     *     where every bucket is mid-df): raw emissions 7.1M → the
-    *     mid-prefix tail pruned ~4×, the regime the routing rule
-    *     routes AWAY from but the oracle row must still run in. */
+    *     mid-prefix tail pruned ~4×. */
   private def prefixCandidatesFrom(sh: DataFrame, idCol: String,
                                    threshold: Double): DataFrame = {
     val tok = sh.select(col(idCol), size(col("__sh")).as("__n"),

@@ -17,28 +17,13 @@ object DedupQueries {
   private def scratch(dir: String, leaf: String): String =
     scratchDir("dedup", dir, leaf)
 
-  /** Shared memoization recipe for per-corpus plan-sizing estimates:
-    * one bounded aggregate per testdata generation, keyed on (canonical
-    * documents.parquet path, source mtime) like SimQueries' embCount
-    * and Tables' frame cache — a regenerated dir re-estimates instead
-    * of planning from a stale corpus shape. One helper so a future key
-    * fix (e.g. missing-source handling) lands once for every estimate. */
-  private def memoEstimate[T](
-      cache: java.util.concurrent.ConcurrentHashMap[(String, Long), T],
-      dir: String)(compute: => T): T = {
-    val src = new java.io.File(dir, "documents.parquet")
-    cache.computeIfAbsent((src.getCanonicalPath, src.lastModified()),
-      _ => compute)
-  }
-
   /** Estimated (candidate staging, shingle-side) bytes per fixture dir
-    * (the shard derivation needs them every run). Parameters mirror the
-    * d_ngram_jaccard call below. */
-  private val ngramEstCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), TextDedup.NgramEstimate]()
+    * (the shard derivation needs them every run). Parameters mirror
+    * [[ngramBlocked]] below. */
+  private val ngramEstCache = new MemoCache[TextDedup.NgramEstimate]()
   private def ngramEstStats(s: org.apache.spark.sql.SparkSession,
                              dir: String): TextDedup.NgramEstimate =
-    memoEstimate(ngramEstCache, dir) {
+    memoEstimate(ngramEstCache, dir, "documents") {
       TextDedup.estimateNgramStats(Tables.documents(s, dir),
         "text", col("n_chars"), n = 4, blockWidth = 20)
     }
@@ -64,11 +49,10 @@ object DedupQueries {
     * the real footprint on many-tiny-doc corpora, the same class as the
     * r16 dedupAgainstIndex fix. One md5-keyed aggregate per testdata
     * generation (memoized), shuffling one skinny row per distinct text. */
-  private val wordBytesCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
+  private val wordBytesCache = new MemoCache[java.lang.Long]()
   private def lshBcastBytes(s: org.apache.spark.sql.SparkSession,
                             dir: String): Long =
-    memoEstimate(wordBytesCache, dir) {
+    memoEstimate(wordBytesCache, dir, "documents") {
       val row = Tables.documents(s, dir)
         // members of one md5 group share the text, hence the word count
         .groupBy(md5(col("text")))
@@ -83,7 +67,10 @@ object DedupQueries {
                        dir: String): Option[Boolean] =
     Some(lshBcastBytes(s, dir) <= TextDedup.ngramBroadcastBudgetBytes)
 
-  /** (shards, streamParallelism) for d_ngram_jaccard. Shards: when the
+  /** (broadcastVerify, shards, streamParallelism) for the ngram rows;
+    * d_ngram_jaccard_hi's prefix path takes the broadcast decision only.
+    * Broadcast: the shingle side fits [[TextDedup.ngramBroadcastBudgetBytes]]
+    * (shingleBytes is a path-independent upper bound). Shards: when the
     * shingle side fits the broadcast budget the verify stages NOTHING
     * (candidates stream through broadcast probes —
     * TextDedup.verifyJaccard), so the monolithic plan is right at any
@@ -112,6 +99,18 @@ object DedupQueries {
       if (est.candidatePairs < 100000L) 1
       else math.max(32L, math.min(256L, est.candidatePairs / 25000000L)).toInt
     (bcast, shards, stream)
+  }
+
+  /** The length-blocked char-4-gram Jaccard rows (band |len diff| <= 10)
+    * at threshold `t`, planned by [[ngramPlan]]. */
+  private def ngramBlocked(s: org.apache.spark.sql.SparkSession, dir: String,
+                           t: Double) = {
+    val (bcast, shards, stream) = ngramPlan(s, dir)
+    TextDedup.ngramJaccardPairs(Tables.documents(s, dir), "doc_id", "text",
+        lenCol = col("n_chars"), n = 4, threshold = t, blockWidth = 20,
+        shards = shards, streamParallelism = stream,
+        broadcastVerify = Some(bcast))
+      .orderBy("a", "b")
   }
 
   /** Shared DuckDB CTEs: distinct word-3-gram shingles + per-doc counts. */
@@ -174,56 +173,32 @@ object DedupQueries {
     // the verify runs as broadcast probes and candidates never stage —
     // monolithic at every board up to the mutated ×100; past the budget,
     // shard count derives from estimated candidate staging bytes vs the
-    // scratch budget (see ngramShards above). Output is plan-invariant,
+    // scratch budget (see ngramPlan above). Output is plan-invariant,
     // so the brute oracle is unchanged.
-    "d_ngram_jaccard" -> { (s, dir) =>
-      val (bcast, shards, stream) = ngramPlan(s, dir)
-      TextDedup.ngramJaccardPairs(Tables.documents(s, dir), "doc_id", "text",
-          lenCol = col("n_chars"), n = 4, threshold = 0.6, blockWidth = 20,
-          shards = shards, streamParallelism = stream,
-          broadcastVerify = Some(bcast))
-        .orderBy("a", "b")
-    },
+    "d_ngram_jaccard" -> { (s, dir) => ngramBlocked(s, dir, 0.6) },
 
     // High-threshold exact char-4-gram Jaccard by PREFIX FILTERING
-    // (PPJoin family) — the measured routing rule's OTHER branch
-    // (SCALING.md "blocked vs prefix": the threshold decides; at
-    // t ≥ 0.85 the prefix is genuinely rare shingles and candidates run
-    // 4× under length-blocking on hapax-rich text). Note the semantics
-    // differ from d_ngram_jaccard beyond the threshold: prefix filtering
-    // has NO length band — it returns ALL pairs at or above t — so the
-    // oracle drops the band predicate. The broadcast-verify decision
-    // comes from the same memoized corpus estimate as the blocked row
-    // (shingleBytes is a path-independent upper bound), so no
-    // construction-time job runs.
+    // (PPJoin family), the engine's band-free path: unlike
+    // d_ngram_jaccard it has NO length band and returns ALL pairs at or
+    // above t, so the oracle drops the band predicate. The
+    // broadcast-verify decision comes from the same memoized corpus
+    // estimate as the blocked row, so no construction-time job runs.
     // (At the catalog's t=0.6 the prefix path loses on ANY corpus shape
     // measured — 2× more candidates than blocking on natural text, 15-30×
-    // on this token-poor synthetic corpus — which is why d_ngram_jaccard
-    // stays length-blocked; see NOTES_r3.md / SCALING.md r15.)
+    // on this token-poor synthetic corpus; see NOTES_r3.md / SCALING.md r15.)
     "d_ngram_jaccard_hi" -> { (s, dir) =>
-      val est = ngramEstStats(s, dir)
-      val bcast = est.shingleBytes <= TextDedup.ngramBroadcastBudgetBytes
+      val (bcast, _, _) = ngramPlan(s, dir)
       TextDedup.ngramJaccardPairsPrefix(Tables.documents(s, dir), "doc_id",
           "text", n = 4, threshold = 0.85, broadcastVerify = Some(bcast))
         .orderBy("a", "b")
     },
 
-    // The ROUTED entry point (r17, verdict item 6), exercised on its
-    // prefix branch: banded semantics (same contract as d_ngram_jaccard,
-    // |len diff| <= 10) at t=0.9 — above PrefixRouteThreshold, so the
-    // plan is prefix filtering + the band post-filter, while the oracle
-    // is the same banded brute force as the blocked row at the higher
-    // threshold. (The blocked branch at t<0.8 IS d_ngram_jaccard.) A
-    // green row proves the routing preserves the banded contract
-    // end-to-end, not just on the property corpus.
-    "d_ngram_jaccard_auto" -> { (s, dir) =>
-      val est = ngramEstStats(s, dir)
-      val bcast = est.shingleBytes <= TextDedup.ngramBroadcastBudgetBytes
-      TextDedup.ngramJaccardAuto(Tables.documents(s, dir), "doc_id", "text",
-          lenCol = col("n_chars"), n = 4, threshold = 0.9, blockWidth = 20,
-          broadcastVerify = Some(bcast))
-        .orderBy("a", "b")
-    },
+    // d_ngram_jaccard's banded contract (|len diff| <= 10) and plan at
+    // t=0.9. The length-blocked join is exact at every t, and at t=0.9
+    // it beats prefix filtering cut back to the band (sf0.1: 0.93 s vs
+    // 2.61 s; TextDedup.ngramJaccardPairsPrefix has the natural-shape
+    // numbers).
+    "d_ngram_jaccard_auto" -> { (s, dir) => ngramBlocked(s, dir, 0.9) },
 
     // Near-dup CLUSTERS: the MinHash-LSH pair graph collapsed to
     // connected components — each doc labeled with its cluster's minimum
@@ -460,9 +435,9 @@ object DedupQueries {
         |ORDER BY a, b""".stripMargin,
 
 
-    // banded brute force at t=0.9 — the auto route's contract is the
-    // BLOCKED row's semantics (length band) at any threshold, so the
-    // oracle is d_ngram_jaccard's CTE with the threshold swapped
+    // banded brute force at t=0.9 — the row runs d_ngram_jaccard's
+    // operator, so the oracle is d_ngram_jaccard's CTE with the
+    // threshold swapped
     "d_ngram_jaccard_auto" ->
       """WITH sh AS (
         |  SELECT DISTINCT doc_id, s FROM (

@@ -24,19 +24,15 @@ object SimQueries {
   /** Embeddings row count per fixture dir, memoized: the SRP capacity
     * derivation needs the raw corpus count every run — pay the
     * footer-count job once per testdata generation, not once per bench
-    * iteration. Keyed on (canonical dir, source mtime), the same key
-    * discipline as Tables' frame cache: a regenerated dir re-counts, so
-    * the derived SRP geometry can never run on a stale N while the
-    * DuckDB oracle counts the fresh corpus. */
-  private val embCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
+    * iteration. The key follows the source mtime, so the derived SRP
+    * geometry can never run on a stale N while the DuckDB oracle counts
+    * the fresh corpus. */
+  private val embCountCache = new MemoCache[java.lang.Long]()
   private def embCount(s: org.apache.spark.sql.SparkSession,
-                       dir: String): Long = {
-    val src = new java.io.File(dir, "embeddings.parquet")
-    embCountCache.computeIfAbsent(
-      (src.getCanonicalPath, src.lastModified()),
-      _ => Tables.embeddings(s, dir).count()).longValue()
-  }
+                       dir: String): Long =
+    memoEstimate(embCountCache, dir, "embeddings") {
+      java.lang.Long.valueOf(Tables.embeddings(s, dir).count())
+    }
 
   /** Per-label centroid vectors rebuilt from the exact-micro per-dim
     * means (shared by the Lloyd step and SemDeDup below): k·dim rows

@@ -122,6 +122,21 @@ package object queries {
     else
       graft.sources.JdbcIO.write(df, url, table, props = props)
 
+  /** A per-fixture memo: see [[memoEstimate]]. */
+  type MemoCache[T] = java.util.concurrent.ConcurrentHashMap[(String, Long), T]
+
+  /** Memoize a per-fixture value (a plan-sizing estimate, a row count):
+    * computed once per testdata generation, keyed on (canonical
+    * `<dir>/<table>.parquet` path, its mtime) like Tables' frame cache.
+    * A regenerated dir recomputes instead of planning from a stale
+    * corpus shape. */
+  def memoEstimate[T](cache: MemoCache[T], dir: String, table: String)
+                     (compute: => T): T = {
+    val src = new java.io.File(dir, s"$table.parquet")
+    cache.computeIfAbsent((src.getCanonicalPath, src.lastModified()),
+      _ => compute)
+  }
+
   /** Per-(family, sf) scratch dir for queries that round-trip through a
     * real sink — sf0.01 verify and sf0.1 bench must not collide. */
   def scratchDir(family: String, sfDir: String, leaf: String): String =

@@ -981,12 +981,9 @@ class DedupPropertySpec extends SparkSpec {
       "filter failed to prune disjoint docs — sketch is dead weight")
   }
 
-  test("ngramJaccardAuto: both routed branches == brute-force banded jaccard") {
-    // r16 verdict item 6: the measured blocked-vs-prefix routing rule as
-    // an entry point. The contract is the BANDED semantics at every
-    // threshold, so both branches must produce identical (pair, value)
-    // sets — proven against brute force at a threshold on each side of
-    // PrefixRouteThreshold, plus the routing itself (plan shape differs).
+  test("ngramJaccardPairs at t=0.6 and t=0.9 == brute-force banded jaccard") {
+    // the banded contract holds at every threshold, including the
+    // high-threshold regime d_ngram_jaccard_auto runs at
     import spark.implicits._
     val docs = corpus.toDF("doc_id", "text")
     def shing(t: String): Set[String] = t.sliding(4).toSet
@@ -998,26 +995,14 @@ class DedupPropertySpec extends SparkSpec {
       j = (sa & sb).size.toDouble / (sa | sb).size if j >= t
     } yield (a, b) -> j).toMap
     for (t <- Seq(0.6, 0.9)) {
-      val got = TextDedup.ngramJaccardAuto(docs, "doc_id", "text",
+      val got = TextDedup.ngramJaccardPairs(docs, "doc_id", "text",
           lenCol = length(col("text")), n = 4, threshold = t, blockWidth = 20)
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      assert(got == brute(t), s"auto route at t=$t diverges from brute: " +
+      assert(got == brute(t), s"blocked join at t=$t diverges from brute: " +
         s"missing=${(brute(t).keySet -- got.keySet).take(3)} " +
         s"extra=${(got.keySet -- brute(t).keySet).take(3)}")
       assert(got.nonEmpty, s"vacuous fixture at t=$t")
     }
-    // and the routing actually routes — marker columns that survive the
-    // prefix frame's Materialize pin (its window sits behind the pin, so
-    // plan-node sniffing is blind): the blocked branch plans the __blk
-    // block key, the prefix branch plans the __la/__lb post-band filter
-    def planOf(t: Double): String =
-      TextDedup.ngramJaccardAuto(docs, "doc_id", "text",
-        lenCol = length(col("text")), n = 4, threshold = t, blockWidth = 20)
-        .queryExecution.executedPlan.toString
-    assert(planOf(0.6).contains("__blk") && !planOf(0.6).contains("__la"),
-      "t=0.6 should take the length-blocked branch")
-    assert(planOf(0.9).contains("__la") && !planOf(0.9).contains("__blk"),
-      "t=0.9 should take the prefix branch with the band post-filter")
   }
 
   /** The length-blocked char-n-gram operator (its oracle can't run on

@@ -40,10 +40,13 @@ class PlanAuditSpec extends SparkSpec {
 
   test("near-dup pipelines never plan an all-pairs join") {
     for (q <- Seq("d_minhash_lsh", "d_simhash", "d_ngram_jaccard",
-                  "d_incremental_dedup", "s_srp_lsh")) {
+                  "d_ngram_jaccard_auto", "d_incremental_dedup", "s_srp_lsh")) {
       val p = plan(q)
       assert(!p.contains("CartesianProduct"), s"$q plans a cartesian product")
       assert(!p.contains("BroadcastNestedLoopJoin"), s"$q plans an NLJ")
+      // the banded ngram rows join on the length-block key
+      if (q.startsWith("d_ngram_jaccard"))
+        assert(p.contains("__blk"), s"$q should plan the length-blocked join")
     }
     // SRP band keys come from one native expression, not a vector ×
     // hyperplane cross join
